@@ -133,8 +133,9 @@ object Layout {
     * CLUSTERED BY spec is honored by the reader). A fresh SparkSession
     * loses the in-memory catalog while the files persist; rebuilding per
     * session was the r11 fuzzy-delete bench leak (11.2 s cold vs 3.7 s
-    * warm serve). Callers still own corpus-consistency via their
-    * (dir, params) memos — this only restores the catalog entry.
+    * warm serve). Corpus-consistency stays with the [[Standing.tables]]
+    * memo (keyed on dir + geometry) — this only restores the catalog
+    * entry.
     */
   def ensureBucketedAttached(spark: SparkSession, table: String): Boolean =
     spark.catalog.tableExists(table) || (bucketedMeta.get(table) match {

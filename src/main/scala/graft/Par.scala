@@ -21,9 +21,10 @@ package graft
   * the IVF-family serves, r16-opt) is pool-safe: the view is resolved
   * at its own `spark.sql` analysis time and nothing else re-points it.
   * Everything submitted here must otherwise touch only thread-confined
-  * frames, build-once `ensure*` accessors (synchronized) and plan-keyed
-  * scoped caches (concurrent same-plan `cache()` shares one
-  * CacheManager entry).
+  * frames, build-once `ensure*` accessors ([[Standing]] — one lock per
+  * artifact, so two serves' cold builds of DIFFERENT artifacts overlap
+  * too) and plan-keyed scoped caches (concurrent same-plan `cache()`
+  * shares one CacheManager entry).
   */
 object Par {
   def run[A](thunks: Seq[() => A], maxThreads: Int = 4): Seq[A] = {

@@ -276,26 +276,16 @@ object Multimodal {
           |    j -> md5(concat_ws(':', fr[j], fr[j + 1], fr[j + 2])))
           |  ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)).as("g"))
 
-  // align_index path -> sfDir that built it (the ensureIvfIndex shape)
-  private val alignIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** STANDING temporal-align index over the base media carve
     * (`media_id % 5 != 0` — the incremental carve every standing table
     * shares): the order-sensitive 3-frame shingle table landing media
     * probe for candidates, and the non-empty frame table the compaction
-    * rollup aligns against. Persisted under the Layout discipline —
-    * marker on the LAST table written, marker + memo cleared BEFORE
-    * rebuilding.
+    * rollup aligns against. shingles/ is written last and carries the
+    * marker.
     */
   def ensureAlignIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "align_index")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/shingles/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(alignIndexFor.get(base).contains(dir) && fs.exists(marker))) {
-      alignIndexFor.remove(base)
-      fs.delete(marker, false)
+      dir: String): String =
+    graft.Standing.dir(spark, dir, "align_index", Seq("shingles")) { base =>
       val media = fromDocuments(
         graft.Tables(spark, dir, "documents")
           .filter(col("doc_id") % 5 =!= 0), alignFrames)
@@ -304,10 +294,7 @@ object Multimodal {
         .write.mode("overwrite").parquet(s"$base/frames")
       alignShingles(media).distinct()
         .write.mode("overwrite").parquet(s"$base/shingles")
-      alignIndexFor(base) = dir
     }
-    base
-  }
 
   /** One side's (frames, shingles) audit stats for [[mmAlignRefresh]]:
     * media/frame/shingle counts plus 64-bit md5 XOR folds binding every

@@ -93,25 +93,15 @@ object Core {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  // One bucketed build per (table, sfDir) per catalog: Verify/tests reuse
-  // the table across queries; Bench's fresh-session runs rebuild once and
-  // then measure the query alone (min-of-N drops the build run).
-  private val bucketedFor = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Materialize `src` as an 8-bucket table on `key` if this session
-    * doesn't have it yet (idempotent per sfDir — a dir switch rebuilds).
+  /** Materialize `src` as an 8-bucket table on `key` once per sfDir
+    * (Verify/tests reuse the table across queries; Bench's fresh-session
+    * runs rebuild once and then measure the query alone — min-of-N drops
+    * the build run). A dir switch rebuilds.
     */
   private def ensureBucketed(spark: SparkSession, dir: String, src: String,
-      key: String, table: String): Unit = synchronized {
-    if (!(bucketedFor.get(table).contains(dir) &&
-        graft.Layout.ensureBucketedAttached(spark, table))) {
-      // clear-memo-BEFORE-rebuild: a crash mid-save must not leave a memo
-      // pointing a later call at partial files (ADVICE r12-1)
-      bucketedFor.remove(table)
-      graft.Layout.saveBucketed(Tables(spark, dir, src), table, 8, Seq(key))
-      bucketedFor(table) = dir
-    }
-  }
+      key: String, table: String): Unit =
+    graft.Standing.tables(spark, Seq(table), dir)(
+      graft.Layout.saveBucketed(Tables(spark, dir, src), table, 8, Seq(key)))
 
   /** [[q3TopOrders]]'s fact-fact join re-run over CO-BUCKETED tables —
     * the layout lever that removes THE dominant cost of a 100 TB

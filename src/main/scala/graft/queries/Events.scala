@@ -942,10 +942,6 @@ object Events {
       .withColumn("file_id", expr(s"((rnk - 1) * $zFiles) DIV n_total"))
   }
 
-  // zorder table dir -> sfDir that built it (the ensureIvfIndex memo)
-  private val zTableFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** The PHYSICAL z-order rewrite (VERDICT r11 missing #2 — the audit
     * simulated file footers; a lakehouse OPTIMIZE writes files): both
     * layouts of [[zFileAssignments]] land as real clustered tables,
@@ -956,31 +952,21 @@ object Events {
     * sort on the curve key, so each file's parquet footer carries the
     * tight per-column min/max the predicate-box scan prunes on —
     * PlanSpec measures the skipping from real scan metrics, not
-    * derived arithmetic. Marker/memo discipline incl. clearing both
-    * BEFORE rebuilding (the ensureIvfIndex rule; linear/ is written
-    * last and carries the marker).
+    * derived arithmetic. linear/ is written last and carries the
+    * marker, so a present marker implies both layouts landed.
     */
   def ensureZorderTable(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "zorder_table")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/linear/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(zTableFor.get(base).contains(dir) && fs.exists(marker))) {
-        zTableFor.remove(base)
-        fs.delete(marker, false)
-        val filed = zFileAssignments(spark, dir)
-          .select("event_id", "user_id", "day", "key", "layout", "file_id")
-        for (layout <- Seq("zorder", "linear")) {
-          filed.filter(col("layout") === layout)
-            .repartition(zFiles, col("file_id"))
-            .sortWithinPartitions("file_id", "key", "event_id")
-            .drop("layout")
-            .write.mode("overwrite").partitionBy("file_id")
-            .parquet(s"$base/$layout")
-        }
-        zTableFor(base) = dir
+    graft.Standing.dir(spark, dir, "zorder_table", Seq("linear")) { base =>
+      val filed = zFileAssignments(spark, dir)
+        .select("event_id", "user_id", "day", "key", "layout", "file_id")
+      for (layout <- Seq("zorder", "linear")) {
+        filed.filter(col("layout") === layout)
+          .repartition(zFiles, col("file_id"))
+          .sortWithinPartitions("file_id", "key", "event_id")
+          .drop("layout")
+          .write.mode("overwrite").partitionBy("file_id")
+          .parquet(s"$base/$layout")
       }
-      base
     }
 
   /** INTER-ARRIVAL QUANTILES per event type — the latency/SLO readout

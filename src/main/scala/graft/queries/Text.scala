@@ -2064,14 +2064,6 @@ object Text {
       .orderBy("lang")
   }
 
-  // table -> (sfDir, numSlots, bandSize, deltaMod) the standing fuzzy
-  // index was built from (the ensureBucketed memo shape, Core.scala).
-  // ADVICE r8-1: the memo keys on the FULL geometry tuple, not the dir
-  // alone — a caller probing with non-default geometry must not silently
-  // read an index whose base partition was carved differently.
-  private val fuzzyIndexFor =
-    scala.collection.concurrent.TrieMap[String, (String, Int, Int, Long)]()
-
   /** Materialize the STANDING fuzzy-dedup index — the band table and the
     * shingle table of the base partition, saved as BUCKETED tables (the
     * q3_bucketed layout lever): bands bucketed on the full candidate-join
@@ -2106,26 +2098,19 @@ object Text {
       "graft_fuzzy_sh_bq", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the standing fuzzy index (the ensureBucketed
-    * memo: rebuilt when the sfDir OR the index geometry changes, or the
-    * catalog lost the tables). A geometry change is a rebuild, as with
-    * any index — the memo carries (dir, numSlots, bandSize, deltaMod) so
-    * a non-default probe can never silently read an index whose base
-    * partition was carved with different parameters (ADVICE r8-1).
+  /** Build-once accessor for the standing fuzzy index. A geometry change
+    * is a rebuild, as with any index — the key carries (dir, numSlots,
+    * bandSize, deltaMod) so a non-default probe can never silently read
+    * an index whose base partition was carved with different parameters
+    * (ADVICE r8-1).
     */
   private[graft] def ensureFuzzyIndex(spark: SparkSession, dir: String,
       numSlots: Int = 16, bandSize: Int = 4,
       deltaMod: Long = incrementalDeltaMod): Unit =
-    synchronized {
-      val want = (dir, numSlots, bandSize, deltaMod)
-      if (!(fuzzyIndexFor.get("graft_fuzzy_bands_bq").contains(want) &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_bands_bq") &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_sh_bq"))) {
-        fuzzyIndexFor.remove("graft_fuzzy_bands_bq")
-        fuzzyBuildIndex(spark, dir, numSlots, bandSize, deltaMod)
-        fuzzyIndexFor("graft_fuzzy_bands_bq") = want
-      }
-    }
+    graft.Standing.tables(spark,
+        Seq("graft_fuzzy_bands_bq", "graft_fuzzy_sh_bq"),
+        (dir, numSlots, bandSize, deltaMod))(
+      fuzzyBuildIndex(spark, dir, numSlots, bandSize, deltaMod))
 
   /** [[ddIncrementalFuzzy]] against the STANDING index
     * ([[fuzzyBuildIndex]]) — identical admission semantics and audit
@@ -2261,10 +2246,6 @@ object Text {
       threshold)
       .select(col("id_a"), col("id_b"))
 
-  // overlay tables -> (sfDir, numSlots, bandSize) that built them
-  private val fuzzyUpsFor =
-    scala.collection.concurrent.TrieMap[String, (String, Int, Int)]()
-
   /** UPSERT the standing fuzzy index (VERDICT r8 item 3 — the
     * sim_ivf_upsert treatment for dedup): batch 1 of the delta
     * (`doc_id % ${2·deltaMod} = 0`) is admitted against the standing
@@ -2302,21 +2283,15 @@ object Text {
       "graft_fuzzy_sh_ups", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the upsert overlay (the ensureFuzzyIndex
-    * memo discipline, keyed on the full geometry).
+  /** Build-once accessor for the upsert overlay, keyed on the full
+    * geometry.
     */
   private[graft] def ensureFuzzyUpsertOverlay(spark: SparkSession,
       dir: String, numSlots: Int = 16, bandSize: Int = 4): Unit =
-    synchronized {
-      val want = (dir, numSlots, bandSize)
-      if (!(fuzzyUpsFor.get("graft_fuzzy_bands_ups").contains(want) &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_bands_ups") &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_sh_ups"))) {
-        fuzzyUpsFor.remove("graft_fuzzy_bands_ups")
-        fuzzyBuildUpsertOverlay(spark, dir, numSlots, bandSize)
-        fuzzyUpsFor("graft_fuzzy_bands_ups") = want
-      }
-    }
+    graft.Standing.tables(spark,
+        Seq("graft_fuzzy_bands_ups", "graft_fuzzy_sh_ups"),
+        (dir, numSlots, bandSize))(
+      fuzzyBuildUpsertOverlay(spark, dir, numSlots, bandSize))
 
   /** Two-batch standing-index lifecycle — the oracle'd
     * `dd_incremental_fuzzy_upsert` entry (VERDICT r8 item 3): batch 1
@@ -2418,10 +2393,6 @@ object Text {
     (lang === "zh" && pmod(id, lit(2)) === 1) ||
       (lang =!= "zh" && pmod(id, lit(17)) === 3)
 
-  // overlay tables -> (sfDir, numSlots, bandSize) that built them
-  private val fuzzyDelFor =
-    scala.collection.concurrent.TrieMap[String, (String, Int, Int)]()
-
   /** DELETE from the standing fuzzy index (the `remove_ids` half of the
     * index lifecycle, completing build / upsert / delete — the
     * ivfBuildDeleteIndex treatment for dedup). Tombstoned base docs
@@ -2466,22 +2437,15 @@ object Text {
       "graft_fuzzy_sh_del", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the delete overlay (the ensureFuzzyIndex
-    * memo discipline).
+  /** Build-once accessor for the delete overlay, keyed on the full
+    * geometry.
     */
   private[graft] def ensureFuzzyDeleteOverlay(spark: SparkSession,
       dir: String, numSlots: Int = 16, bandSize: Int = 4): Unit =
-    synchronized {
-      val want = (dir, numSlots, bandSize)
-      if (!(fuzzyDelFor.get("graft_fuzzy_bands_del").contains(want) &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_bands_del") &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_sh_del") &&
-          graft.Layout.ensureBucketedAttached(spark, "graft_fuzzy_tomb"))) {
-        fuzzyDelFor.remove("graft_fuzzy_bands_del")
-        fuzzyBuildDeleteOverlay(spark, dir, numSlots, bandSize)
-        fuzzyDelFor("graft_fuzzy_bands_del") = want
-      }
-    }
+    graft.Standing.tables(spark,
+        Seq("graft_fuzzy_bands_del", "graft_fuzzy_sh_del", "graft_fuzzy_tomb"),
+        (dir, numSlots, bandSize))(
+      fuzzyBuildDeleteOverlay(spark, dir, numSlots, bandSize))
 
   /** Delta admission against the POST-DELETE index state — the oracle'd
     * `dd_incremental_fuzzy_delete` entry. Per language:
@@ -3129,29 +3093,17 @@ object Text {
       .orderBy("depth")
   }
 
-  // cc_base labels path -> sfDir that built them (the ensureIvfIndex memo)
-  private val ccBaseFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing connected-component labels over the BASE carve's confirmed
     * near-dup pairs (`doc_id % incrementalDeltaMod != 0` — the carve
     * every incremental demo shares): one (id, component) row per
     * clustered base doc, built once by the full
-    * [[graft.ConnectedComponents]] contraction and persisted with the
-    * marker/memo discipline (both cleared BEFORE rebuilding).
+    * [[graft.ConnectedComponents]] contraction and persisted as a
+    * standing artifact witnessed by both tables.
     */
   def ensureCcBase(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): String = synchronized {
+      numSlots: Int = 16, bandSize: Int = 4): String = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val base = graft.Layout.indexBase(spark, dir, "cc_base")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/labels/_SUCCESS")
-    val eMarker = new org.apache.hadoop.fs.Path(s"$base/edges/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(ccBaseFor.get(base).contains(dir) && fs.exists(marker) &&
-        fs.exists(eMarker))) {
-      ccBaseFor.remove(base)
-      fs.delete(marker, false)
-      fs.delete(eMarker, false)
+    graft.Standing.dir(spark, dir, "cc_base", Seq("labels", "edges")) { base =>
       val baseToks = tokenizedDocs(spark, dir)
         .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
       val edges = jaccardScoredPairs(baseToks, numSlots, bandSize)
@@ -3167,9 +3119,7 @@ object Text {
       eC.write.mode("overwrite").parquet(s"$base/edges")
       graft.ConnectedComponents.run(eC, "id_a", "id_b")
         .write.mode("overwrite").parquet(s"$base/labels")
-      ccBaseFor(base) = dir
     }
-    base
   }
 
   /** INCREMENTAL connected components — the maintenance form of
@@ -3238,10 +3188,6 @@ object Text {
       starEdges.unionByName(vsBase).unionByName(inDelta), "id_a", "id_b")
   }
 
-  // cc_ref overlay path -> sfDir that built it (the ensureCcBase memo)
-  private val ccRefFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** WRITE-BACK of the incremental merge (r12 verdict gap #1): persists
     * [[ccIncrementalLabels]] — CC(star(base) ∪ delta edges), the merged
     * full-corpus labels — as the refreshed standing label table, in its
@@ -3253,19 +3199,11 @@ object Text {
     * batch would re-probe batch 1's docs against the index forever.
     */
   private[graft] def ensureCcRefreshed(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "cc_ref")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/labels/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(ccRefFor.get(base).contains(dir) && fs.exists(marker))) {
-      ccRefFor.remove(base)
-      fs.delete(marker, false)
+      numSlots: Int = 16, bandSize: Int = 4): String =
+    graft.Standing.dir(spark, dir, "cc_ref", Seq("labels")) { base =>
       ccIncrementalLabels(spark, dir, numSlots, bandSize)
         .write.mode("overwrite").parquet(s"$base/labels")
-      ccRefFor(base) = dir
     }
-    base
-  }
 
   /** Serve the duplicate clusters from the REFRESHED standing labels —
     * the proof that [[ensureCcRefreshed]]'s write-back is the real
@@ -3647,30 +3585,17 @@ object Text {
       .orderBy("source")
   }
 
-  // kmv_sketches path -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val kmvMvFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing per-source KMV sketches over the BASE carve
     * (`doc_id % incrementalDeltaMod != 0`, the [[ensureAggMv]]
-    * convention), built once under the warehouse with the marker/memo
-    * discipline (both cleared BEFORE rebuilding). #sources·k longs —
+    * convention), built once under the warehouse. #sources·k longs —
     * kilobytes at any corpus size.
     */
-  def ensureKmvSketches(spark: SparkSession, dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "kmv_sketches")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/sketches/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(kmvMvFor.get(base).contains(dir) && fs.exists(marker))) {
-      kmvMvFor.remove(base)
-      fs.delete(marker, false)
+  def ensureKmvSketches(spark: SparkSession, dir: String): String =
+    graft.Standing.dir(spark, dir, "kmv_sketches", Seq("sketches")) { base =>
       kmvSketches(docs(spark, dir)
           .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
         .write.mode("overwrite").parquet(s"$base/sketches")
-      kmvMvFor(base) = dir
     }
-    base
-  }
 
   /** Incremental KMV REFRESH — the [[pipelineAggRefresh]] maintenance
     * pattern applied to the cardinality sketches, with a stronger
@@ -3881,31 +3806,18 @@ object Text {
       .groupBy("source", "j", "cell")
       .agg(count(lit(1)).as("cnt"))
 
-  // cms_cells path -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val cmsMvFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing per-source count-min cell tables over the BASE carve
     * (`doc_id % incrementalDeltaMod != 0`, the [[ensureKmvSketches]]
     * convention) — the sketch lifecycle the r11 verdict queued (KMV got
     * it first; CMS counters are exactly mergeable too). ≤ #sources ·
     * depth · width rows — bounded no matter the corpus size.
-    * Marker/memo discipline incl. clearing both BEFORE rebuilding.
     */
-  def ensureCmsCells(spark: SparkSession, dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "cms_cells")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/cells/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(cmsMvFor.get(base).contains(dir) && fs.exists(marker))) {
-      cmsMvFor.remove(base)
-      fs.delete(marker, false)
+  def ensureCmsCells(spark: SparkSession, dir: String): String =
+    graft.Standing.dir(spark, dir, "cms_cells", Seq("cells")) { base =>
       cmsCellsBySource(cmsGrams(Tables.spread(docs(spark, dir)
           .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))))
         .write.mode("overwrite").parquet(s"$base/cells")
-      cmsMvFor(base) = dir
     }
-    base
-  }
 
   /** Incremental CMS REFRESH — the [[txKmvRefresh]] treatment for the
     * frequency sketch: the standing base-carve cell tables absorb the
@@ -4404,13 +4316,12 @@ object Text {
     // form re-ran the whole prepare flow (paragraph rewrite + dedup +
     // decontamination anti-join) per release build; the survivor
     // PROJECTION (doc_id, source, n2, h2, sk) is a deterministic
-    // corpus-scoped intermediate, so it stands in the warehouse behind
-    // the ensure* marker+memo contract like every index — the build
-    // rides cold first runs, a release build is then the bounded
-    // solve/select/shard tail over a point-read.
-    // ReleaseSurvivorsSpec pins standing ≡ per-call recompute row sets.
+    // corpus-scoped intermediate, so it stands in the warehouse like
+    // every index — the build rides cold first runs, a release build is
+    // then the bounded solve/select/shard tail over a point-read.
+    // ReleaseAtVersionSpec pins standing ≡ per-call recompute row sets.
     releaseOver(spark.read.parquet(
-      s"${ensureReleaseSurvivors(spark, dir)}/live"), nShards)
+      ensureReleaseSurvivors(spark, dir, "live")), nShards)
 
   /** The versioned documents frame at release-log version `v` —
     * [[readAtVersion]]'s state re-dressed with origin attrs (factored
@@ -4429,48 +4340,38 @@ object Text {
         col("text"))
   }
 
-  // release-survivor base path -> sfDir that built it (ensureIvfIndex memo)
-  private val relSurvFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Build-once STANDING survivor snapshots for the release flow
-    * (VERDICT r16 item 8): the live prepare survivors plus one snapshot
-    * per release-log version, projected to exactly the columns the
-    * release tail consumes (doc_id, source, n2, h2, sk). Deterministic
-    * in the immutable corpus + append-only log, so the snapshots belong
-    * in the warehouse next to the indexes (the ensureIrTruth argument);
-    * values are EXACTLY the retired per-call recomputes
-    * (ReleaseSurvivorsSpec pins row-set equality per version), so the
-    * two release manifests' oracle hashes are untouched. Marker/memo
-    * discipline: the marker is the LAST-written snapshot's _SUCCESS,
-    * cleared with the memo BEFORE rebuilding (the ensureIvfRetrainIndex
-    * partial-failure rule).
+  /** Build-once STANDING survivor snapshot for the release flow
+    * (VERDICT r16 item 8): `live` (the live prepare survivors) or
+    * `atv0`..`atv{ttVersions}` (one per release-log version), projected
+    * to exactly the columns the release tail consumes (doc_id, source,
+    * n2, h2, sk). Deterministic in the immutable corpus + append-only
+    * log, so the snapshots belong in the warehouse next to the indexes
+    * (the ensureIrTruth argument); values are EXACTLY the retired
+    * per-call recomputes (ReleaseAtVersionSpec pins row-set equality per
+    * version), so the two release manifests' oracle hashes are
+    * untouched. Each snapshot is its OWN standing artifact with its own
+    * marker: a live-only caller ([[pipelineRelease]]) never pays the
+    * per-version prepare matrix, and a partial failure rebuilds only the
+    * missing snapshots. Returns the snapshot's path.
     */
-  def ensureReleaseSurvivors(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "rel_surv")
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$base/atv$ttVersions/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(relSurvFor.get(base).contains(dir) && fs.exists(marker))) {
-        relSurvFor.remove(base)
-        fs.delete(marker, false)
-        def proj(s: DataFrame): DataFrame = s
+  def ensureReleaseSurvivors(spark: SparkSession, dir: String,
+      snapshot: String): String = {
+    val relBase = graft.Standing.dir(spark, dir, "rel_surv", Seq(snapshot)) {
+      base =>
+        val survivors = snapshot match {
+          case "live" => prepareCorpusSurvivors(spark, dir)
+          case s"atv$v" => prepareCorpusSurvivorsOver(spark,
+            atVersionDocs(spark, dir, readAtVersion(spark, dir, v.toInt)),
+            s".atv$v@$dir")
+        }
+        survivors
           .select(col("doc_id"), col("source"), col("n2"), col("h2"))
           .withColumn("sk",
             expr("CAST(conv(substring(h2, 1, 15), 16, 10) AS BIGINT)"))
-        proj(prepareCorpusSurvivors(spark, dir))
-          .write.mode("overwrite").parquet(s"$base/live")
-        for (v <- 0 to ttVersions) {
-          proj(prepareCorpusSurvivorsOver(spark,
-              atVersionDocs(spark, dir, readAtVersion(spark, dir, v)),
-              s".atv$v@$dir"))
-            .write.mode("overwrite").parquet(s"$base/atv$v")
-        }
-        relSurvFor(base) = dir
-      }
-      base
+          .write.mode("overwrite").parquet(s"$base/$snapshot")
     }
+    s"$relBase/$snapshot"
+  }
 
   /** VERSION-PINNED RELEASE — "re-create training set #N" (VERDICT r13
     * item 5, composing the round's two flagship machineries): build the
@@ -4501,7 +4402,7 @@ object Text {
     // [[releaseAtVersionOver]] stays the recompute path the equivalence
     // spec drives (replay ≡ point-read ≡ standing snapshot).
     releaseOver(spark.read.parquet(
-        s"${ensureReleaseSurvivors(spark, dir)}/atv$v"), nShards)
+        ensureReleaseSurvivors(spark, dir, s"atv$v")), nShards)
       .withColumn("version", lit(v))
       .orderBy("source", "shard")
 
@@ -4999,16 +4900,11 @@ object Text {
       .orderBy("lang")
   }
 
-  // tokenizer index path -> sfDir that built it (the ensureIvfIndex shape)
-  private val bpeIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Persist the trained BPE tokenizer — the merge table and the final
     * vocabulary state — completing the train-once/serve-many story for
     * the LAST trained artifact without a standing form (quality model,
     * quantizers and dedup index all have one): a tokenizer is trained
-    * once and then encodes every batch and stream for months. Marker +
-    * memo discipline matches [[graft.queries.Similarity.ensureIvfIndex]].
+    * once and then encodes every batch and stream for months.
     */
   def bpeBuildIndex(spark: SparkSession, dir: String): String = {
     val base = graft.Layout.indexBase(spark, dir, "bpe_index")
@@ -5019,18 +4915,8 @@ object Text {
   }
 
   def ensureBpeIndex(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "bpe_index")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/vocab/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(bpeIndexFor.get(base).contains(dir) && fs.exists(marker))) {
-        bpeIndexFor.remove(base)
-        fs.delete(marker, false)
-        bpeBuildIndex(spark, dir)
-        bpeIndexFor(base) = dir
-      }
-      base
-    }
+    graft.Standing.dir(spark, dir, "bpe_index", Seq("vocab"))(_ =>
+      bpeBuildIndex(spark, dir))
 
   /** [[txBpeApply]] over the STANDING tokenizer ([[bpeBuildIndex]]) —
     * identical output (training is deterministic; the oracle SQL is
@@ -5268,15 +5154,10 @@ object Text {
       .orderBy("lang")
   }
 
-  // unigram index path -> sfDir that built it (the ensureIvfIndex shape)
-  private val uniIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Persist the trained unigram tokenizer — the surviving vocabulary
     * and the per-token final segmentation (the encode table a
     * deployment actually serves from) — the [[ensureBpeIndex]]
     * train-once/serve-many story for the second tokenizer family.
-    * Marker + memo discipline matches [[ensureBpeIndex]].
     */
   def uniBuildIndex(spark: SparkSession, dir: String): String = {
     val base = graft.Layout.indexBase(spark, dir, "uni_index")
@@ -5288,18 +5169,8 @@ object Text {
   }
 
   def ensureUnigramIndex(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "uni_index")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/seg/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(uniIndexFor.get(base).contains(dir) && fs.exists(marker))) {
-        uniIndexFor.remove(base)
-        fs.delete(marker, false)
-        uniBuildIndex(spark, dir)
-        uniIndexFor(base) = dir
-      }
-      base
-    }
+    graft.Standing.dir(spark, dir, "uni_index", Seq("seg"))(_ =>
+      uniBuildIndex(spark, dir))
 
   /** [[txUnigramApply]] over the STANDING tokenizer ([[uniBuildIndex]])
     * — identical output (training is deterministic; the oracle text is
@@ -5529,18 +5400,11 @@ object Text {
       .orderBy("lang", "source")
   }
 
-  // model index path -> sfDir that built it (the ensureIvfIndex shape)
-  private val mqIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Persist the trained quality model — the ensureIvfIndex treatment
     * for the scorer: training is deterministic, so the standing weights
     * ARE the train-per-call weights, and a deployment pays training once
     * while every scoring batch reads D doubles of index metadata.
-    * Returns the model base path; the marker/memo discipline matches
-    * [[graft.queries.Similarity.ensureIvfIndex]] (cleared BEFORE
-    * rebuilding, memo keyed on the dir string — immutable-corpus
-    * assumption).
+    * Returns the model base path.
     */
   def mqBuildIndex(spark: SparkSession, dir: String): String = {
     val base = graft.Layout.indexBase(spark, dir, "mq_model")
@@ -5549,18 +5413,9 @@ object Text {
     base
   }
 
-  def ensureMqIndex(spark: SparkSession, dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "mq_model")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/weights/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(mqIndexFor.get(base).contains(dir) && fs.exists(marker))) {
-      mqIndexFor.remove(base)
-      fs.delete(marker, false)
-      mqBuildIndex(spark, dir)
-      mqIndexFor(base) = dir
-    }
-    base
-  }
+  def ensureMqIndex(spark: SparkSession, dir: String): String =
+    graft.Standing.dir(spark, dir, "mq_model", Seq("weights"))(_ =>
+      mqBuildIndex(spark, dir))
 
   /** [[txModelQuality]] over the STANDING model ([[mqBuildIndex]]) —
     * identical output (training is deterministic; the oracle SQL is
@@ -5818,29 +5673,16 @@ object Text {
         sum("doc_id").as("id_sum"))
       .orderBy("lang", "bucket")
 
-  // lm_model path -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val lmIndexFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Build-once accessor for the persisted reference-LM histograms — the
     * standing-model form of the perplexity filter (CCNet ships the
     * trained KenLM binaries; here the model IS the B-row count table).
-    * Marker/memo discipline incl. clearing both BEFORE rebuilding (the
-    * ensureIvfIndex rule).
     */
-  def ensureLmIndex(spark: SparkSession, dir: String): String = synchronized {
+  def ensureLmIndex(spark: SparkSession, dir: String): String = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val base = graft.Layout.indexBase(spark, dir, "lm_model")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/stats/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(lmIndexFor.get(base).contains(dir) && fs.exists(marker))) {
-      lmIndexFor.remove(base)
-      fs.delete(marker, false)
+    graft.Standing.dir(spark, dir, "lm_model", Seq("stats")) { base =>
       lmHistogram(lmFeaturize(docs(spark, dir)))
         .write.mode("overwrite").parquet(s"$base/stats")
-      lmIndexFor(base) = dir
     }
-    base
   }
 
   /** [[txLmPerplexity]] over the PERSISTED histograms — train-once/
@@ -6224,10 +6066,6 @@ object Text {
     rev.unionAll(del).unionAll(ins).unionAll(retro)
   }
 
-  // version_log path -> sfDir that built it (the ensureIvfIndex shape)
-  private val versionLogFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** The APPEND-ONLY version log — the lakehouse primitive the
     * reference's run-provenance manifest (`wrds_ingestion.py:1155-1198`
     * data_sources.yml) becomes at 100 TB: instead of recording which
@@ -6236,29 +6074,19 @@ object Text {
     * Layout: `events/ver=0` is the base snapshot as upsert events,
     * `ver=v` is batch v verbatim — partitioned by `ver`, so a
     * time-travel read at version v partition-prunes every later batch
-    * (TimeTravelSpec pins it). Built once under the Layout discipline
-    * (marker + memo cleared BEFORE rebuilding).
+    * (TimeTravelSpec pins it). Built once, a standing artifact.
     */
   def ensureVersionLog(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "version_log")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/events/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(versionLogFor.get(base).contains(dir) && fs.exists(marker))) {
-        versionLogFor.remove(base)
-        fs.delete(marker, false)
-        val snap = docs(spark, dir).select(col("doc_id"), col("text"))
-        val v0 = snap.select(col("doc_id").as("k"),
-          col("text").as("new_text"), lit("upsert").as("op"),
-          lit(0).as("ver"))
-        (1 to ttVersions)
-          .map(v => ttBatch(snap, v).withColumn("ver", lit(v)))
-          .foldLeft(v0)(_ unionAll _)
-          .write.mode("overwrite").partitionBy("ver")
-          .parquet(s"$base/events")
-        versionLogFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "version_log", Seq("events")) { base =>
+      val snap = docs(spark, dir).select(col("doc_id"), col("text"))
+      val v0 = snap.select(col("doc_id").as("k"),
+        col("text").as("new_text"), lit("upsert").as("op"),
+        lit(0).as("ver"))
+      (1 to ttVersions)
+        .map(v => ttBatch(snap, v).withColumn("ver", lit(v)))
+        .foldLeft(v0)(_ unionAll _)
+        .write.mode("overwrite").partitionBy("ver")
+        .parquet(s"$base/events")
     }
 
   /** Time-travel POINT READ: the (k, text) state as of version `v`,
@@ -6702,10 +6530,6 @@ object Text {
       .orderBy("change_type")
   }
 
-  // checkpoint overlay path -> sfDir that built it
-  private val ttCheckpointFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** CHECKPOINT / log compaction: materialize the state at
     * [[ttCheckpointVer]] as a compacted base table so reads stop paying
     * for the absorbed prefix — the lakehouse checkpoint primitive
@@ -6715,26 +6539,17 @@ object Text {
     * re-reading the untouched log).
     */
   def ensureTtCheckpoint(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "tt_checkpoint")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/state/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(ttCheckpointFor.get(base).contains(dir) && fs.exists(marker))) {
-        ttCheckpointFor.remove(base)
-        fs.delete(marker, false)
-        val logBase = ensureVersionLog(spark, dir)
-        // the checkpoint manifest records what was absorbed AT BUILD
-        // TIME — a serve never re-scans the absorbed prefix, not even
-        // to count it
-        spark.read.parquet(s"$logBase/events")
-          .filter(col("ver") <= ttCheckpointVer)
-          .agg(count(lit(1)).as("absorbed_events"))
-          .write.mode("overwrite").parquet(s"$base/meta")
-        readAtVersion(spark, dir, ttCheckpointVer)
-          .write.mode("overwrite").parquet(s"$base/state")
-        ttCheckpointFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "tt_checkpoint", Seq("state")) { base =>
+      val logBase = ensureVersionLog(spark, dir)
+      // the checkpoint manifest records what was absorbed AT BUILD
+      // TIME — a serve never re-scans the absorbed prefix, not even
+      // to count it
+      spark.read.parquet(s"$logBase/events")
+        .filter(col("ver") <= ttCheckpointVer)
+        .agg(count(lit(1)).as("absorbed_events"))
+        .write.mode("overwrite").parquet(s"$base/meta")
+      readAtVersion(spark, dir, ttCheckpointVer)
+        .write.mode("overwrite").parquet(s"$base/state")
     }
 
   /** Reads served from CHECKPOINT + TAIL (VERDICT r12 item 6's missing
@@ -6774,10 +6589,6 @@ object Text {
       .orderBy("version")
   }
 
-  // vacuumed log path -> sfDir that built it
-  private val ttVacuumFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** VACUUM — physical log truncation (the Delta VACUUM analog, the
     * destructive half [[pipelineCheckpoint]] deliberately avoids): the
     * absorbed prefix is REWRITTEN away into a new `ver`-partitioned log
@@ -6791,33 +6602,24 @@ object Text {
     * horizon and the event count reclaimed, both at build time.
     */
   def ensureTtVacuum(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "tt_vacuum")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/events/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(ttVacuumFor.get(base).contains(dir) && fs.exists(marker))) {
-        ttVacuumFor.remove(base)
-        fs.delete(marker, false)
-        val logBase = ensureVersionLog(spark, dir)
-        val ckBase = ensureTtCheckpoint(spark, dir)
-        val absorbed = spark.read.parquet(s"$ckBase/meta")
-          .head().getLong(0)
-        val stateRows = spark.read.parquet(s"$ckBase/state").count()
-        spark.range(1)
-          .select(lit(ttCheckpointVer).as("horizon"),
-            lit(absorbed - stateRows).as("vacuumed_events"))
-          .write.mode("overwrite").parquet(s"$base/meta")
-        spark.read.parquet(s"$ckBase/state")
-          .select(col("k"), col("text").as("new_text"),
-            lit("upsert").as("op"), lit(ttCheckpointVer).as("ver"))
-          .unionByName(spark.read.parquet(s"$logBase/events")
-            .filter(col("ver") > ttCheckpointVer)
-            .select("k", "new_text", "op", "ver"))
-          .write.mode("overwrite").partitionBy("ver")
-          .parquet(s"$base/events")
-        ttVacuumFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "tt_vacuum", Seq("events")) { base =>
+      val logBase = ensureVersionLog(spark, dir)
+      val ckBase = ensureTtCheckpoint(spark, dir)
+      val absorbed = spark.read.parquet(s"$ckBase/meta")
+        .head().getLong(0)
+      val stateRows = spark.read.parquet(s"$ckBase/state").count()
+      spark.range(1)
+        .select(lit(ttCheckpointVer).as("horizon"),
+          lit(absorbed - stateRows).as("vacuumed_events"))
+        .write.mode("overwrite").parquet(s"$base/meta")
+      spark.read.parquet(s"$ckBase/state")
+        .select(col("k"), col("text").as("new_text"),
+          lit("upsert").as("op"), lit(ttCheckpointVer).as("ver"))
+        .unionByName(spark.read.parquet(s"$logBase/events")
+          .filter(col("ver") > ttCheckpointVer)
+          .select("k", "new_text", "op", "ver"))
+        .write.mode("overwrite").partitionBy("ver")
+        .parquet(s"$base/events")
     }
 
   /** The vacuumed-log serve: the per-version audit for every surviving
@@ -7079,29 +6881,16 @@ object Text {
     statsColumns.map { case (c, s) => statsLeg(in, c, s) }
       .reduce(_ unionByName _)
 
-  // stats_mv path -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val statsMvFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing per-column stats over the BASE carve
     * (`doc_id % incrementalDeltaMod != 0` — the [[ensureAggMv]]
-    * convention), built once under the warehouse with the marker/memo
-    * discipline (cleared BEFORE rebuilding).
+    * convention), built once under the warehouse.
     */
-  def ensureStatsMv(spark: SparkSession, dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "stats_mv")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/stats/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(statsMvFor.get(base).contains(dir) && fs.exists(marker))) {
-      statsMvFor.remove(base)
-      fs.delete(marker, false)
+  def ensureStatsMv(spark: SparkSession, dir: String): String =
+    graft.Standing.dir(spark, dir, "stats_mv", Seq("stats")) { base =>
       statsPartials(docs(spark, dir)
           .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
         .write.mode("overwrite").parquet(s"$base/stats")
-      statsMvFor(base) = dir
     }
-    base
-  }
 
   /** Incremental ANALYZE REFRESH — [[pipelineTableStats]]'s maintenance
     * form: the standing per-column stats table absorbs the delta carve
@@ -7285,29 +7074,16 @@ object Text {
         sum(size(split(col("text"), " "))).cast("long").as("n_tokens"),
         expr(s"bit_xor(${md5SignedHash64Expr("hd")})").as("text_xor"))
 
-  // agg_mv path -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val aggMvFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing materialized aggregate over the BASE carve
     * (`doc_id % incrementalDeltaMod != 0` — the complement of the
-    * established delta convention), built once under the warehouse with
-    * the marker/memo discipline (cleared BEFORE rebuilding).
+    * established delta convention), built once under the warehouse.
     */
-  def ensureAggMv(spark: SparkSession, dir: String): String = synchronized {
-    val base = graft.Layout.indexBase(spark, dir, "agg_mv")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/aggs/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(aggMvFor.get(base).contains(dir) && fs.exists(marker))) {
-      aggMvFor.remove(base)
-      fs.delete(marker, false)
+  def ensureAggMv(spark: SparkSession, dir: String): String =
+    graft.Standing.dir(spark, dir, "agg_mv", Seq("aggs")) { base =>
       aggMvPartials(docs(spark, dir)
           .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
         .write.mode("overwrite").parquet(s"$base/aggs")
-      aggMvFor(base) = dir
     }
-    base
-  }
 
   /** Incremental materialized-view REFRESH — the lakehouse maintenance
     * pattern the reference's full-rewrite warehouse refresh
@@ -7523,11 +7299,6 @@ object Text {
       .orderBy("rnk")
   }
 
-  // bm25_index path -> (sfDir, carve tag) that built it (the
-  // ensureIvfIndex memo shape)
-  private val bm25IndexFor =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
   /** Number of hashed term partitions in the standing BM25 postings
     * layout. 8 is plenty for the test vocabulary; at a real 100 TB web
     * corpus this is the one knob to raise (≈1024) — the dir count stays
@@ -7572,25 +7343,18 @@ object Text {
     *
     * `excludeDeltaMod` carves the index corpus for the upsert demo
     * (docs with `doc_id % mod = 0` left OUT of the build — the
-    * fuzzyBuildIndex carve); the index name must differ per carve.
-    * Marker/memo discipline incl. clearing both BEFORE rebuilding (the
-    * ensureIvfIndex rule).
+    * fuzzyBuildIndex carve); the index name must differ per carve, and
+    * the carve tag is part of the memo key.
     */
   def ensureBm25Index(spark: SparkSession, dir: String,
       name: String = "bm25_index",
       excludeDeltaMod: Option[Long] = None,
-      onlyDeltaMod: Option[Long] = None): String = synchronized {
+      onlyDeltaMod: Option[Long] = None): String = {
     require(excludeDeltaMod.isEmpty || onlyDeltaMod.isEmpty,
       "at most one carve")
-    val base = graft.Layout.indexBase(spark, dir, name)
     val carveTag = excludeDeltaMod.map("ex" + _)
       .orElse(onlyDeltaMod.map("on" + _)).getOrElse("full")
-    val marker = new org.apache.hadoop.fs.Path(s"$base/termstats/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!(bm25IndexFor.get(base).contains((dir, carveTag)) &&
-        fs.exists(marker))) {
-      bm25IndexFor.remove(base)
-      fs.delete(marker, false)
+    graft.Standing.dir(spark, dir, name, Seq("termstats"), carveTag) { base =>
       val corpus = (excludeDeltaMod, onlyDeltaMod) match {
         case (Some(m), _) =>
           docs(spark, dir).filter(pmod(col("doc_id"), lit(m)) =!= 0)
@@ -7624,9 +7388,7 @@ object Text {
         .withColumn("n", lit(nDocs))
         .withColumn("t", lit(totals.getAs[Long]("t")))
         .write.mode("overwrite").parquet(s"$base/termstats")
-      bm25IndexFor(base) = (dir, carveTag)
     }
-    base
   }
 
   /** The bucket-pruned + term-pushed read of a standing postings dir —
@@ -7739,30 +7501,17 @@ object Text {
     bm25Gather(postings, stats, k)
   }
 
-  // tombstone dir -> sfDir that built it (the ensureIvfIndex memo shape)
-  private val bm25TombsFor =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** The delete demo's tombstone overlay: doc_ids with `doc_id % 5 = 0`,
     * written ONCE from the index's own `doclens/` (no text scan) into a
     * dir separate from the shared index (the ivf_del isolation rule).
     */
   def ensureBm25Tombstones(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "bm25_tombstones")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/ids/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(bm25TombsFor.get(base).contains(dir) && fs.exists(marker))) {
-        bm25TombsFor.remove(base)
-        fs.delete(marker, false)
-        val idx = ensureBm25Index(spark, dir)
-        spark.read.parquet(s"$idx/doclens")
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
-          .select(col("doc_id"))
-          .write.mode("overwrite").parquet(s"$base/ids")
-        bm25TombsFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "bm25_tombstones", Seq("ids")) { base =>
+      val idx = ensureBm25Index(spark, dir)
+      spark.read.parquet(s"$idx/doclens")
+        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+        .select(col("doc_id"))
+        .write.mode("overwrite").parquet(s"$base/ids")
     }
 
   /** The BM25 refresh AUDIT (the tx_lm_refresh treatment): the merged
@@ -7873,34 +7622,23 @@ object Text {
       .orderBy("source")
   }
 
-  private val noveltyIdxFor = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Standing first-seen gram index for the BASE snapshot — the distinct
     * 60-bit 8-gram keys of the base carve, persisted once
     * ([[ensureCmsCells]] discipline). The incremental novelty probe
     * reads THIS instead of rescanning the base corpus.
     */
   def ensureNoveltyGrams(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "novelty_grams")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/grams/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(noveltyIdxFor.get(base).contains(dir) && fs.exists(marker))) {
-        noveltyIdxFor.remove(base)
-        fs.delete(marker, false)
-        Tables.spread(docs(spark, dir))
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
-          .withColumn("toks", split(col("text"), " "))
-          .filter(size(col("toks")) >= 8)
-          .select(explode(expr(shingleExpr(8))).as("g"))
-          .select(expr(
-            "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)")
-            .as("gk"))
-          .distinct()
-          .write.mode("overwrite").parquet(s"$base/grams")
-        noveltyIdxFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "novelty_grams", Seq("grams")) { base =>
+      Tables.spread(docs(spark, dir))
+        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
+        .withColumn("toks", split(col("text"), " "))
+        .filter(size(col("toks")) >= 8)
+        .select(explode(expr(shingleExpr(8))).as("g"))
+        .select(expr(
+          "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)")
+          .as("gk"))
+        .distinct()
+        .write.mode("overwrite").parquet(s"$base/grams")
     }
 
   /** INCREMENTAL NOVELTY — [[txNoveltyProfile]]'s lifecycle form, the
@@ -8048,22 +7786,11 @@ object Text {
           lit(histMaxBucket)).cast("long").as("bucket"))
       .groupBy("source", "bucket").agg(count(lit(1)).as("cnt"))
 
-  private val histMvFor = scala.collection.concurrent.TrieMap[String, String]()
-
   def ensureHistCells(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "hist_cells")
-      val marker = new org.apache.hadoop.fs.Path(s"$base/cells/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(histMvFor.get(base).contains(dir) && fs.exists(marker))) {
-        histMvFor.remove(base)
-        fs.delete(marker, false)
-        histCells(docs(spark, dir)
-            .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
-          .write.mode("overwrite").parquet(s"$base/cells")
-        histMvFor(base) = dir
-      }
-      base
+    graft.Standing.dir(spark, dir, "hist_cells", Seq("cells")) { base =>
+      histCells(docs(spark, dir)
+          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
+        .write.mode("overwrite").parquet(s"$base/cells")
     }
 
   /** HISTOGRAM-QUANTILE REFRESH — the quantile member of the sketch
@@ -8200,8 +7927,6 @@ object Text {
       .filter(pmod(col("doc_id"), lit(gdprMod)) === lit(gdprRem))
       .select("doc_id")
 
-  private val gdprFor = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Build-once HARD-ERASURE overlay: every standing text surface
     * rewritten without the tombstoned doc_ids — GDPR's "erasure" means
     * the bytes are GONE, not masked, so each surface is physically
@@ -8222,41 +7947,31 @@ object Text {
     * standing tables are never mutated.
     */
   def ensureGdprForget(spark: SparkSession, dir: String): String =
-    synchronized {
-      val base = graft.Layout.indexBase(spark, dir, "gdpr_forget")
-      val marker =
-        new org.apache.hadoop.fs.Path(s"$base/cc_labels/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(gdprFor.get(base).contains(dir) && fs.exists(marker))) {
-        gdprFor.remove(base)
-        fs.delete(marker, false)
-        ensureFuzzyIndex(spark, dir)
-        val bm = ensureBm25Index(spark, dir)
-        val cc = ensureCcBase(spark, dir)
-        val tomb = gdprTombstones(spark, dir)
-        def scrub(df: DataFrame, idCol: String, out: String): Unit =
-          df.join(tomb.select(col("doc_id").as(idCol)), Seq(idCol),
-              "left_anti")
-            .write.mode("overwrite").parquet(s"$base/$out")
-        scrub(docs(spark, dir), "doc_id", "corpus")
-        scrub(spark.table("graft_fuzzy_bands_bq"), "doc_id", "fuzzy_bands")
-        scrub(spark.table("graft_fuzzy_sh_bq"), "doc_id", "fuzzy_sh")
-        scrub(spark.read.parquet(s"$bm/postings"), "doc_id",
-          "bm25_postings")
-        scrub(spark.read.parquet(s"$bm/doclens"), "doc_id", "bm25_doclens")
-        spark.read.parquet(s"$cc/edges")
-          .join(tomb.select(col("doc_id").as("id_a")), Seq("id_a"),
+    graft.Standing.dir(spark, dir, "gdpr_forget", Seq("cc_labels")) { base =>
+      ensureFuzzyIndex(spark, dir)
+      val bm = ensureBm25Index(spark, dir)
+      val cc = ensureCcBase(spark, dir)
+      val tomb = gdprTombstones(spark, dir)
+      def scrub(df: DataFrame, idCol: String, out: String): Unit =
+        df.join(tomb.select(col("doc_id").as(idCol)), Seq(idCol),
             "left_anti")
-          .join(tomb.select(col("doc_id").as("id_b")), Seq("id_b"),
-            "left_anti")
-          .select("id_a", "id_b")
-          .write.mode("overwrite").parquet(s"$base/cc_edges")
-        // labels LAST — its _SUCCESS is the overlay completeness marker
-        gdprRelabel(spark.read.parquet(s"$cc/labels"), tomb)
-          .write.mode("overwrite").parquet(s"$base/cc_labels")
-        gdprFor(base) = dir
-      }
-      base
+          .write.mode("overwrite").parquet(s"$base/$out")
+      scrub(docs(spark, dir), "doc_id", "corpus")
+      scrub(spark.table("graft_fuzzy_bands_bq"), "doc_id", "fuzzy_bands")
+      scrub(spark.table("graft_fuzzy_sh_bq"), "doc_id", "fuzzy_sh")
+      scrub(spark.read.parquet(s"$bm/postings"), "doc_id",
+        "bm25_postings")
+      scrub(spark.read.parquet(s"$bm/doclens"), "doc_id", "bm25_doclens")
+      spark.read.parquet(s"$cc/edges")
+        .join(tomb.select(col("doc_id").as("id_a")), Seq("id_a"),
+          "left_anti")
+        .join(tomb.select(col("doc_id").as("id_b")), Seq("id_b"),
+          "left_anti")
+        .select("id_a", "id_b")
+        .write.mode("overwrite").parquet(s"$base/cc_edges")
+      // labels LAST — they carry the overlay completeness marker
+      gdprRelabel(spark.read.parquet(s"$cc/labels"), tomb)
+        .write.mode("overwrite").parquet(s"$base/cc_labels")
     }
 
   /** Label erasure + re-pointing, factored over any ((id, component),

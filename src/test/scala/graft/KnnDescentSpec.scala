@@ -471,7 +471,8 @@ class KnnDescentSpec extends SparkSpec {
     // exchange and self-joined them through two more; the collect_set
     // form must keep exactly one shuffle on the membership rows, and its
     // aggregation buffer is bounded by 2k by construction (k
-    // out-neighbors + the k-capped reverse set)
+    // out-neighbors + the k-capped reverse set). Drives the SAME local
+    // join the production descent loop runs (Similarity.descentLocalJoin).
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.functions._
     val spark2 = spark
@@ -480,14 +481,7 @@ class KnnDescentSpec extends SparkSpec {
     val graph = (0L until 40L).flatMap(s =>
         (1 to k).map(j => (s, (s + j) % 40L, 1.0 / j, j)))
       .toDF("src", "dst", "cosine", "rnk")
-    val wRev = org.apache.spark.sql.expressions.Window
-      .partitionBy("dst").orderBy(col("cosine").desc, col("src").asc)
-    val rev = graph.withColumn("rrnk", row_number().over(wRev))
-      .filter(col("rrnk") <= k)
-      .select(col("dst").as("w"), col("src").as("x"))
-    val nbrs = graph.select(col("src").as("w"), col("dst").as("x"))
-      .unionByName(rev)
-    val bset = nbrs.groupBy("w").agg(collect_set(col("x")).as("xs"))
+    val (bset, pairs) = Similarity.descentLocalJoin(graph, k)
     val rows = bset.collect()
     assert(rows.nonEmpty && rows.forall(_.getSeq[Long](1).size <= 2 * k),
       "B(w) buffer exceeded the 2k bound")
@@ -498,13 +492,16 @@ class KnnDescentSpec extends SparkSpec {
     assert(exchanges.length <= 2,
       s"membership fold grew extra exchanges:\n${bset.queryExecution.executedPlan}")
     // the pair SET from the array expansion equals the retired
-    // distinct+self-join form's
-    val viaArray = bset
-      .select(explode(col("xs")).as("src"), col("xs"))
-      .select(col("src"), explode(col("xs")).as("dst"))
-      .filter(col("src") =!= col("dst"))
+    // distinct+self-join form's, rebuilt here independently
+    val viaArray = pairs
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nbrsD = nbrs.distinct()
+    val wRev = org.apache.spark.sql.expressions.Window
+      .partitionBy("dst").orderBy(col("cosine").desc, col("src").asc)
+    val rev = graph.withColumn("rrnk", row_number().over(wRev))
+      .filter(col("rrnk") <= k)
+      .select(col("dst").as("w"), col("src").as("x"))
+    val nbrsD = graph.select(col("src").as("w"), col("dst").as("x"))
+      .unionByName(rev).distinct()
     val viaJoin = nbrsD.as("a").join(nbrsD.as("b"),
         col("a.w") === col("b.w") && col("a.x") =!= col("b.x"))
       .select(col("a.x").as("src"), col("b.x").as("dst"))

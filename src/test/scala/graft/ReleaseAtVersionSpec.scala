@@ -36,22 +36,41 @@ class ReleaseAtVersionSpec extends SparkSpec {
   }
 
   test("standing survivor snapshots ≡ the per-call prepare recompute, per version (r17-opt)") {
-    val base = Text.ensureReleaseSurvivors(spark, sf001)
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.select("doc_id", "source", "n2", "h2")
         .orderBy("doc_id").collect().toSeq.map(_.toSeq)
-    val liveStanding = sorted(spark.read.parquet(s"$base/live"))
+    val liveStanding = sorted(spark.read.parquet(
+      Text.ensureReleaseSurvivors(spark, sf001, "live")))
     val liveRecomputed = sorted(Text.prepareCorpusSurvivors(spark, sf001))
     assert(liveStanding == liveRecomputed,
       "standing live survivors drifted from the per-call prepare")
-    for (v <- Seq(0, Text.ttVersions)) {
-      val standing = sorted(spark.read.parquet(s"$base/atv$v"))
+    // every version, interior ones included: a replay bug touching only
+    // a middle batch must not hide between the endpoints
+    for (v <- 0 to Text.ttVersions) {
+      val standing = sorted(spark.read.parquet(
+        Text.ensureReleaseSurvivors(spark, sf001, s"atv$v")))
       val recomputed = sorted(Text.prepareCorpusSurvivorsOver(spark,
         Text.atVersionDocs(spark, sf001, Text.readAtVersion(spark, sf001, v)),
         s".atv$v"))
       assert(standing == recomputed,
         s"standing atv$v survivors drifted from the per-call prepare")
     }
+  }
+
+  test("each survivor snapshot stands alone: a lost marker rebuilds only that snapshot") {
+    val live = Text.ensureReleaseSurvivors(spark, sf001, "live")
+    val atv1 = Text.ensureReleaseSurvivors(spark, sf001, "atv1")
+    val liveMark = new org.apache.hadoop.fs.Path(s"$live/_SUCCESS")
+    val atv1Mark = new org.apache.hadoop.fs.Path(s"$atv1/_SUCCESS")
+    val fs = liveMark.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val t0 = fs.getFileStatus(liveMark).getModificationTime
+    fs.delete(atv1Mark, false)
+    Text.pipelineRelease(spark, sf001).collect()
+    assert(!fs.exists(atv1Mark), "the live release touched a version snapshot")
+    Text.ensureReleaseSurvivors(spark, sf001, "atv1")
+    assert(fs.exists(atv1Mark), "the lost snapshot was not rebuilt")
+    assert(fs.getFileStatus(liveMark).getModificationTime == t0,
+      "rebuilding one version snapshot rewrote the live snapshot")
   }
 
   test("the manifest reproduces bit-for-bit run-over-run from the log alone") {
