@@ -397,9 +397,9 @@ object SparkEntry {
     "sim_bq_hamming_indexed" -> ((s, d) => Similarity.simBqHammingIndexed(s, d)),
     // BQ lifecycle (the IVF/PQ/graph symmetry): delta admission under
     // the PERSISTED frozen thresholds, per-(word, popcount) occupancy
-    "sim_bq_upsert" -> ((s, d) => Similarity.simBqUpsert(s, d)),
+    "sim_bq_upsert" -> ((s, d) => Similarity.codecUpsertAudit(s, d, Similarity.bqCodec)),
     // tombstones + rewritten live overlay, physically recounted
-    "sim_bq_delete" -> ((s, d) => Similarity.simBqDelete(s, d)),
+    "sim_bq_delete" -> ((s, d) => Similarity.codecDeleteAudit(s, d, Similarity.bqCodec)),
     // post-delete search: candidates from the live overlay only
     "sim_bq_hamming_deleted" -> ((s, d) => Similarity.simBqHammingDeleted(s, d)),
     // the decidable retrain trigger: thresholds re-derived over
@@ -409,8 +409,8 @@ object SparkEntry {
     // delta admission under the PERSISTED frozen scale, per-code-value
     // occupancy; tombstones + rewritten live overlay, recounted; scale
     // re-derived over the amplitude-drifted delta, integer retrain rule
-    "sim_sq_upsert" -> ((s, d) => Similarity.simSqUpsert(s, d)),
-    "sim_sq_delete" -> ((s, d) => Similarity.simSqDelete(s, d)),
+    "sim_sq_upsert" -> ((s, d) => Similarity.codecUpsertAudit(s, d, Similarity.sqCodec)),
+    "sim_sq_delete" -> ((s, d) => Similarity.codecDeleteAudit(s, d, Similarity.sqCodec)),
     "sim_sq_drift" -> ((s, d) => Similarity.simSqDrift(s, d)),
     "sim_pq_adc" -> ((s, d) => Similarity.simPqAdc(s, d)),
     // same ADC over the MATERIALIZED codebook+code tables: the
@@ -433,8 +433,8 @@ object SparkEntry {
     // carve — per-subspace SSE balance, exact folds
     "sim_opq_rotate" -> ((s, d) => Similarity.simOpqRotate(s, d)),
     "sim_opq_adc_indexed" -> ((s, d) => Similarity.simOpqAdcIndexed(s, d)),
-    "sim_opq_upsert" -> ((s, d) => Similarity.simOpqUpsert(s, d)),
-    "sim_opq_delete" -> ((s, d) => Similarity.simOpqDelete(s, d)),
+    "sim_opq_upsert" -> ((s, d) => Similarity.codecUpsertAudit(s, d, Similarity.opqCodec)),
+    "sim_opq_delete" -> ((s, d) => Similarity.codecDeleteAudit(s, d, Similarity.opqCodec)),
     "sim_opq_drift" -> ((s, d) => Similarity.simOpqDrift(s, d)),
     "sim_opq_adc_deleted" -> ((s, d) => Similarity.simOpqAdcDeleted(s, d)),
     "sim_opq_retrain" -> ((s, d) => Similarity.simOpqRetrain(s, d)),
@@ -450,8 +450,8 @@ object SparkEntry {
     "sim_ivf_compact" -> ((s, d) => Similarity.simIvfCompact(s, d)),
     "sim_ivf_ann_compacted" -> ((s, d) => Similarity.simIvfAnnCompacted(s, d)),
     "sim_d4_prune" -> ((s, d) => Similarity.simD4Prune(s, d)),
-    "sim_pq_upsert" -> ((s, d) => Similarity.simPqUpsert(s, d)),
-    "sim_pq_delete" -> ((s, d) => Similarity.simPqDelete(s, d)),
+    "sim_pq_upsert" -> ((s, d) => Similarity.codecUpsertAudit(s, d, Similarity.pqCodec)),
+    "sim_pq_delete" -> ((s, d) => Similarity.codecDeleteAudit(s, d, Similarity.pqCodec)),
     "sim_ivfpq_upsert" -> ((s, d) => Similarity.simIvfPqUpsert(s, d)),
     "sim_ivfpq_delete" -> ((s, d) => Similarity.simIvfPqDelete(s, d)),
     "sim_ivfpq_deleted" -> ((s, d) => Similarity.simIvfPqDeleted(s, d)),
@@ -860,11 +860,11 @@ object SparkEntry {
        |SELECT qid, vec_id, adc, rnk FROM ranked WHERE rnk <= 5
        |ORDER BY qid, rnk""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simPqUpsert]]: the frozen
-    * trained codebooks encode both the corpus (the chain's own `codes`
-    * CTE) and the reversed negative-key delta batch; per-(subspace,
-    * codeword) occupancy audit in exact integers — the ivfUpsertSql
-    * discipline applied to the code table.
+  /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
+    * `pqCodec`: the frozen trained codebooks encode both the corpus (the
+    * chain's own `codes` CTE) and the reversed negative-key delta batch;
+    * per-(subspace, codeword) occupancy audit in exact integers — the
+    * ivfUpsertSql discipline applied to the code table.
     */
   private def pqUpsertSql: String =
     s"""$pqAdcCtes,
@@ -889,11 +889,12 @@ object SparkEntry {
        |FROM bc FULL OUTER JOIN dc ON bc.s = dc.s AND bc.code = dc.code
        |ORDER BY s, code""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simPqDelete]]: the shared
-    * training/encode chain, then per-(subspace, codeword) base / dead /
-    * live occupancy with the dead set derived purely from the carve
-    * arithmetic — the Spark side recounts `n_live` from the physically
-    * rewritten overlay, so a hash match proves the rewrite's content.
+  /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
+    * `pqCodec`: the shared training/encode chain, then per-(subspace,
+    * codeword) base / dead / live occupancy with the dead set derived
+    * purely from the carve arithmetic — the Spark side recounts `n_live`
+    * from the physically rewritten overlay, so a hash match proves the
+    * rewrite's content.
     */
   private def pqDeleteSql: String =
     s"""$pqAdcCtes,
@@ -1099,10 +1100,11 @@ object SparkEntry {
       |SELECT qid, vec_id, dist, rnk FROM ranked2 WHERE rnk <= 5
       |ORDER BY qid, rnk""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simBqUpsert]]: the shared
-    * encode chain, the standard reversed negative-key delta encoded
-    * under the SAME thresholds (frozen quantizer), per-(word, popcount)
-    * base/new occupancy — the [[pqUpsertSql]] audit for binary codes.
+  /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
+    * `bqCodec`: the shared encode chain, the standard reversed negative-key
+    * delta encoded under the SAME thresholds (frozen quantizer), per-(word,
+    * popcount) base/new occupancy — the [[pqUpsertSql]] audit for binary
+    * codes.
     */
   private def bqUpsertSql: String =
     s"""$bqCtes,
@@ -1142,9 +1144,10 @@ object SparkEntry {
        |FROM bo FULL OUTER JOIN dn ON bo.w = dn.w AND bo.pc = dn.pc
        |ORDER BY w, pc""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simBqDelete]]: encode
-    * chain + carve arithmetic; the Spark side recounts n_live from the
-    * physically rewritten overlay, so a hash match proves the rewrite.
+  /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
+    * `bqCodec`: encode chain + carve arithmetic; the Spark side recounts
+    * n_live from the physically rewritten overlay, so a hash match proves
+    * the rewrite.
     */
   private def bqDeleteSql: String =
     s"""$bqCtes,
@@ -3488,8 +3491,8 @@ object SparkEntry {
        |    FROM oqdrot d, oqbooks b)
        |  WHERE rn = 1)""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simOpqUpsert]]: the
-    * standing rotated-space index from first principles
+  /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
+    * `opqCodec`: the standing rotated-space index from first principles
     * ([[opqIndexCtes]]), the delta carved + rotated under the frozen
     * Hadamard and encoded against the frozen books, per-(subspace,
     * codeword) occupancy in exact integers — the pqUpsertSql audit in
@@ -3507,12 +3510,12 @@ object SparkEntry {
        |FROM bc FULL OUTER JOIN dc ON bc.s = dc.s AND bc.code = dc.code
        |ORDER BY s, code""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simOpqDelete]]: the
-    * shared rotated chain, then per-(subspace, codeword) base / dead /
-    * live occupancy with the dead set from the carve arithmetic — the
-    * Spark side recounts n_live from the physically rewritten overlay,
-    * so a hash match proves the rewrite's content (the pqDeleteSql
-    * treatment).
+  /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
+    * `opqCodec`: the shared rotated chain, then per-(subspace, codeword)
+    * base / dead / live occupancy with the dead set from the carve
+    * arithmetic — the Spark side recounts n_live from the physically
+    * rewritten overlay, so a hash match proves the rewrite's content (the
+    * pqDeleteSql treatment).
     */
   private def opqDeleteSql: String =
     s"""WITH $opqIndexCtes,
@@ -4618,9 +4621,9 @@ object SparkEntry {
       |    list_transform(embedding, x -> CAST(greatest(-127, least(127, floor(CAST(x AS DOUBLE) * sc.s))) AS BIGINT)) AS qe
       |  FROM embeddings, sc)""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simSqUpsert]]: the delta
-    * carve re-encoded under the SAME frozen scale, histogrammed by code
-    * value beside the base occupancy.
+  /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
+    * `sqCodec`: the delta carve re-encoded under the SAME frozen scale,
+    * histogrammed by code value beside the base occupancy.
     */
   private def sqUpsertSql: String =
     s"""WITH $sqScaleCtes,
@@ -4666,9 +4669,10 @@ object SparkEntry {
        |  CAST(sum(CASE WHEN shift <> 0 THEN 1 ELSE 0 END) AS BIGINT) * 100 > count(*) * 5 AS retrain
        |FROM dx GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** DuckDB twin of [[graft.queries.Similarity.simSqDelete]]: encode
-    * chain + carve arithmetic; the Spark side recounts n_live from the
-    * physically rewritten overlay, so a hash match proves the rewrite.
+  /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
+    * `sqCodec`: encode chain + carve arithmetic; the Spark side recounts
+    * n_live from the physically rewritten overlay, so a hash match proves
+    * the rewrite.
     */
   private def sqDeleteSql: String =
     s"""WITH $sqScaleCtes,

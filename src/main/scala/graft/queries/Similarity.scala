@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -1781,8 +1781,7 @@ object Similarity {
     val emb = Tables(spark, dir, "embeddings")
     val verts = emb.select(col("vec_id").as("v"))
       .filter(!(col("v") % graphDelMod === graphDelRem))
-      .unionByName(emb.filter(col("vec_id") % upsertDeltaMod === 0)
-        .select((col("vec_id") * -1 - 1).as("v")))
+      .unionByName(upsertDeltaFrame(spark, dir).select(col("vec_id").as("v")))
     kcoreOver(spark, verts, mutual, coreK, rounds)
   }
 
@@ -1839,11 +1838,7 @@ object Similarity {
   def graphBuildGen2Index(spark: SparkSession, dir: String): String = {
     register(spark)
     val base = graft.Layout.indexBase(spark, dir, "knn_graph_gen2")
-    Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    upsertDeltaFrame(spark, dir)
       .withColumn("norm", expr(s"sqrt(${dotExpr("embedding", "embedding")})"))
       .write.mode("overwrite").parquet(s"$base/members")
     // edges last: the marker under edges/ implies a complete gen
@@ -2168,11 +2163,7 @@ object Similarity {
     * sequence), the md5-free analog of the two-convention rule.
     */
   def simKnnGraphUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    val delta = upsertDeltaFrame(spark, dir)
     simGraphSearch(spark, dir, k = knnDescentK, querySet = Some(delta))
   }
 
@@ -2526,11 +2517,8 @@ object Similarity {
     val base = bucketedEmbeddings(spark, dir, knnDescentNbits)
       .select(col("vec_id").as("vid"), col("embedding").as("mv"),
         col("norm").as("mn"))
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vid"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("mv"))
+    val delta = upsertDeltaFrame(spark, dir)
+      .select(col("vec_id").as("vid"), col("embedding").as("mv"))
       .withColumn("mn", expr(s"sqrt(${dotExpr("mv", "mv")})"))
     base.unionByName(delta)
   }
@@ -3260,8 +3248,8 @@ object Similarity {
 
   /** [[pqEncode]] over an arbitrary (vec_id, embedding) source — the same
     * frozen-codebook assignment applied to a DELTA batch by
-    * [[simPqUpsert]] (the ivfMembersSqlFrom discipline: one assignment
-    * rule, two inputs).
+    * [[pqCodec]]'s admission (the ivfMembersSqlFrom discipline: one
+    * assignment rule, two inputs).
     */
   private def pqEncodeFrom(source: DataFrame,
       codebooks: DataFrame): DataFrame =
@@ -3384,106 +3372,179 @@ object Similarity {
     raw.unionByName(rot).orderBy("rotated", "s")
   }
 
-  /** PQ index UPSERT — [[simIvfUpsert]]'s frozen-quantizer admission
-    * applied to the code table (FAISS `IndexPQ.add`): the delta batch
-    * (same reserved-negative-key reversed-embedding carving, shared
-    * [[upsertDeltaMod]]) is encoded with the FROZEN codebooks — no
-    * retrain, no touch of existing codes — and the audit reports every
-    * (subspace, codeword) occupancy in exact integers. At 100 TB this is
-    * how a standing PQ deployment grows: append ~2 B/vector codes,
-    * retraining is a separate deliberate event (codebook drift shows up
-    * as skewed codeword occupancy — exactly what this audit measures).
-    */
-  def simPqUpsert(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    // admit against the STANDING index: frozen codebooks and base codes
-    // come from the persisted tables ([[ensurePqIndex]]) — the upsert
-    // never re-trains or re-encodes the base, which is the whole point
-    // of delta admission (and what sim_ivf_upsert's train-per-call twin
-    // prices on the other end)
-    val base0 = ensurePqIndex(spark, dir)
-    val books = spark.read.parquet(s"$base0/codebooks")
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
-    val base = spark.read.parquet(s"$base0/codes")
-      .groupBy("s", "code").agg(count(lit(1)).as("n_base"))
-    val fresh = pqEncodeFrom(delta, books)
-      .groupBy("s", "code").agg(count(lit(1)).as("n_new"),
-        min("vec_id").as("first_new_id"))
-    base.join(fresh, Seq("s", "code"), "full_outer")
-      .select(col("s"), col("code"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"),
-        (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_total"),
-        col("first_new_id"))
-      .orderBy("s", "code")
-  }
+  // ---- flat-code lifecycle: PQ, OPQ, SQ-int8 and BQ share one delete
+  // overlay, one delete audit and one upsert audit (MorphStore's one
+  // processing model over many codecs); drift audits, retrains and
+  // serves stay per family ------------------------------------------------
 
-  /** Deterministic carve of DELETED vectors for the PQ lifecycle
+  /** Deterministic carve of DELETED vectors for every flat-code family
     * (~1/4 of the corpus — enough that the post-delete search visibly
-    * differs from the base search at every scale factor). A vector is
-    * deleted WHOLE (all m subspace codes), matching FAISS `remove_ids`
-    * on `IndexPQ` — there is no per-subspace deletion. Shared with the
-    * generated oracle SQL (the kmeansCtes discipline).
+    * differs from the base search at every scale factor; one carve, so
+    * the flat-table deletes stay comparable). A vector is deleted WHOLE
+    * (all m PQ subspace codes), matching FAISS `remove_ids` on `IndexPQ`
+    * — there is no per-subspace deletion. Shared with the generated
+    * oracle SQL (the kmeansCtes discipline).
     */
   private[graft] val pqDelMod = 4
   private[graft] val pqDelRem = 2
 
-  /** Physically rewrite the PQ code table minus the tombstoned vectors
-    * — FAISS `IndexPQ.remove_ids`. Unlike the IVF delete (tombstones +
-    * per-cell threshold compaction), a FLAT code table has no pruning
-    * unit to mask behind: every search scans all codes, so serving a
-    * tombstone anti-join forever would tax every query for rows that
-    * can never match. The honest analog of `remove_ids` is the one-time
-    * physical rewrite — a single narrow pass over the ~2 B/vector code
-    * table (cheap at any scale) into an overlay dir; the shared
-    * standing index is never mutated (the ivf_del discipline).
+  /** What differs between the flat-code families, as the shared
+    * lifecycle operations ([[ensureDeleteOverlay]], [[codecDeleteAudit]],
+    * [[codecUpsertAudit]]) see it:
+    *
+    *   - `name`: the artifact prefix — the overlay is `<name>_del`;
+    *   - `index`: the build-once accessor of the standing index, whose
+    *     `codes/` table is keyed by `vec_id`;
+    *   - `keys`: the occupancy columns the audits count by;
+    *   - `units`: a code frame melted to `vec_id +: keys` rows, one per
+    *     audited unit of a vector;
+    *   - `admit`: a (vec_id, embedding) delta encoded under the frozen
+    *     quantizer of the standing index at the given base path — no
+    *     retrain, no touch of existing codes.
     */
-  def pqBuildDeleteIndex(spark: SparkSession, dir: String): String = {
-    val main = ensurePqIndex(spark, dir)
-    val base = graft.Layout.indexBase(spark, dir, "pq_del")
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.filter(col("vec_id") % pqDelMod === pqDelRem)
-      .write.mode("overwrite").parquet(s"$base/tombstones")
-    codes.join(spark.read.parquet(s"$base/tombstones")
-        .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    base
+  private[graft] final case class FlatCodec(
+      name: String,
+      index: (SparkSession, String) => String,
+      keys: Seq[String],
+      units: DataFrame => DataFrame,
+      admit: (SparkSession, String, DataFrame) => DataFrame)
+
+  /** PQ: occupancy per (subspace, codeword) — a code row already is one
+    * unit. Admission is FAISS `IndexPQ.add` under the frozen codebooks
+    * ([[pqEncodeFrom]]): a standing deployment grows by appending
+    * ~2 B/vector codes, retraining is a separate deliberate event
+    * ([[simPqRetrain]]), and codebook drift shows up as skewed codeword
+    * occupancy — exactly what the upsert audit measures.
+    */
+  private[graft] val pqCodec: FlatCodec = FlatCodec("pq", ensurePqIndex,
+    Seq("s", "code"), identity, (spark, base, delta) =>
+      pqEncodeFrom(delta, spark.read.parquet(s"$base/codebooks")))
+
+  /** OPQ: PQ in the ROTATED space. Admission is FAISS
+    * `IndexPreTransform.add`: the delta passes through the frozen carve
+    * + Hadamard ([[opqRotateQueries]] — the serve-time query path, so
+    * admission and serving can never rotate differently), then encodes
+    * under the rotated-space codebooks. Neither upsert nor delete ever
+    * re-rotates or retrains.
+    */
+  private[graft] val opqCodec: FlatCodec = FlatCodec("opq", ensureOpqIndex,
+    Seq("s", "code"), identity, (spark, base, delta) =>
+      pqEncodeFrom(opqRotateQueries(delta),
+        spark.read.parquet(s"$base/codebooks")))
+
+  /** SQ-int8: occupancy per quantized VALUE. Exact-code occupancy is
+    * vacuous on near-continuous vectors, but the value histogram (≤ 255
+    * bins, bounded output) pins every admitted code — a scale drift, a
+    * clamp slip or a lost delta row all move it. Admission reads the ONE
+    * persisted `scale/` double (the quantizer frozen exactly as BQ
+    * freezes its thresholds and PQ its codebooks) under the index's
+    * clamp; the overlay serves under the base index's scale, so `scale/`
+    * is not copied into it.
+    */
+  private[graft] val sqCodec: FlatCodec = FlatCodec("sq", ensureSqIndex,
+    Seq("q"),
+    _.select(col("vec_id"), explode(col("qe").cast("array<bigint>")).as("q")),
+    (spark, base, delta) => {
+      val sc = spark.read.parquet(s"$base/scale")
+        .head().getDouble(0) // ONE double — bounded index metadata
+      delta.select(col("vec_id"), sqQuantize(lit(sc)).as("qe"))
+    })
+
+  /** BQ: occupancy per (word, popcount) — the analog of PQ's
+    * per-(subspace, codeword) occupancy. 448-bit codes are near-unique,
+    * so exact-code occupancy is vacuous, but the word popcount histogram
+    * (8 words × 57 counts, bounded) pins every admitted bit — a
+    * threshold drift, a packing slip or a lost delta row all move it.
+    * Admission encodes under the persisted `thresholds/`
+    * ([[bqEncodeFrom]]).
+    */
+  private[graft] val bqCodec: FlatCodec = FlatCodec("bq", ensureBqIndex,
+    Seq("w", "pc"),
+    _.selectExpr("vec_id",
+        "stack(8, 0, c0, 1, c1, 2, c2, 3, c3, 4, c4, 5, c5, 6, c6, 7, c7) AS (w, word)")
+      .selectExpr("vec_id", "w", "CAST(bit_count(word) AS INT) AS pc"),
+    (spark, base, delta) =>
+      bqEncodeFrom(spark, spark.read.parquet(s"$base/thresholds"), delta))
+
+  private[graft] val flatCodecs: Seq[FlatCodec] =
+    Seq(pqCodec, opqCodec, sqCodec, bqCodec)
+
+  /** The post-delete overlay `<name>_del` — FAISS `remove_ids` on a flat
+    * code table. Unlike the IVF delete (tombstones + per-cell threshold
+    * compaction), a FLAT code table has no pruning unit to mask behind:
+    * every search scans all codes, so serving a tombstone anti-join
+    * forever would tax every query for rows that can never match. The
+    * honest analog is the one-time physical rewrite, a single narrow
+    * pass over the code table: `tombstones/` first, then the left-anti
+    * live `codes/`, whose marker vouches for both. The standing index is
+    * never mutated (the ivf_del discipline).
+    */
+  private[graft] def ensureDeleteOverlay(spark: SparkSession, dir: String,
+      c: FlatCodec): String =
+    graft.Standing.dir(spark, dir, s"${c.name}_del", Seq("codes")) { base =>
+      val codes = spark.read.parquet(s"${c.index(spark, dir)}/codes")
+      codes.filter(col("vec_id") % pqDelMod === pqDelRem)
+        .write.mode("overwrite").parquet(s"$base/tombstones")
+      codes.join(spark.read.parquet(s"$base/tombstones")
+          .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$base/codes")
+    }
+
+  /** Flat-code DELETE audit — per occupancy key: base units, dead units
+    * from the physical tombstone table, and live units RECOUNTED from the
+    * rewritten overlay (the sim_ivf_delete physical-measurement
+    * treatment). The oracle derives all three from the training/encode
+    * chain plus the carve arithmetic, so a hash match proves the overlay
+    * holds exactly the base codes minus the deleted vectors.
+    */
+  private[graft] def codecDeleteAudit(spark: SparkSession, dir: String,
+      c: FlatCodec): DataFrame = {
+    register(spark)
+    val main = c.index(spark, dir)
+    val del = ensureDeleteOverlay(spark, dir, c)
+    val keys = c.keys.map(col)
+    def occ(path: String, name: String): DataFrame =
+      c.units(spark.read.parquet(path)).groupBy(keys: _*)
+        .agg(count(lit(1)).as(name))
+    occ(s"$main/codes", "n_base")
+      .join(occ(s"$del/tombstones", "n_dead_t"), c.keys, "left")
+      .join(occ(s"$del/codes", "n_live_r"), c.keys, "left")
+      .select(keys ++ Seq(col("n_base"),
+        coalesce(col("n_dead_t"), lit(0L)).as("n_dead"),
+        coalesce(col("n_live_r"), lit(0L)).as("n_live")): _*)
+      .orderBy(keys: _*)
   }
 
-  /** Build-once accessor for the post-delete PQ overlay. */
-  def ensurePqDeleteIndex(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "pq_del", Seq("codes"))(_ =>
-      pqBuildDeleteIndex(spark, dir))
-
-  /** PQ delete audit — per (subspace, codeword): base occupancy, dead
-    * rows (from the physical tombstone table), and LIVE rows recounted
-    * from the rewritten overlay code table (the sim_ivf_delete
-    * physical-measurement treatment). The oracle derives all three from
-    * the training chain plus the dead-carve arithmetic — a hash match
-    * proves the overlay holds exactly the base codes minus the deleted
-    * vectors, per codeword.
+  /** Flat-code UPSERT audit — [[simIvfUpsert]]'s frozen-quantizer
+    * admission applied to a code table: the standard reversed
+    * negative-key delta batch ([[upsertDeltaFrame]]) is encoded by the
+    * codec's `admit` against the STANDING index, and the audit reports
+    * per occupancy key the base, admitted and total units in exact
+    * integers, plus the least admitted id. The standing tables are never
+    * mutated.
     */
-  def simPqDelete(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def codecUpsertAudit(spark: SparkSession, dir: String,
+      c: FlatCodec): DataFrame = {
     register(spark)
-    val main = ensurePqIndex(spark, dir)
-    val del = ensurePqDeleteIndex(spark, dir)
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.groupBy("s", "code").agg(count(lit(1)).as("n_base"))
-      .join(spark.read.parquet(s"$del/tombstones")
-        .groupBy("s", "code").agg(count(lit(1)).as("n_dead_t")),
-        Seq("s", "code"), "left")
-      .join(spark.read.parquet(s"$del/codes")
-        .groupBy("s", "code").agg(count(lit(1)).as("n_live_r")),
-        Seq("s", "code"), "left")
-      .select(col("s"), col("code"), col("n_base"),
-        coalesce(col("n_dead_t"), lit(0L)).as("n_dead"),
-        coalesce(col("n_live_r"), lit(0L)).as("n_live"))
-      .orderBy("s", "code")
+    // the frozen quantizer and the base codes come from the persisted
+    // tables — the upsert never re-trains or re-encodes the base, which
+    // is the whole point of delta admission (and what sim_ivf_upsert's
+    // train-per-call twin prices on the other end)
+    val main = c.index(spark, dir)
+    val keys = c.keys.map(col)
+    val base = c.units(spark.read.parquet(s"$main/codes"))
+      .groupBy(keys: _*).agg(count(lit(1)).as("n_base"))
+    val fresh = c.units(c.admit(spark, main, upsertDeltaFrame(spark, dir)))
+      .groupBy(keys: _*).agg(count(lit(1)).as("n_new"),
+        min("vec_id").as("first_new_id"))
+    base.join(fresh, c.keys, "full_outer")
+      .select(keys ++ Seq(
+        coalesce(col("n_base"), lit(0L)).as("n_base"),
+        coalesce(col("n_new"), lit(0L)).as("n_new"),
+        (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
+          .as("n_total"),
+        col("first_new_id")): _*)
+      .orderBy(keys: _*)
   }
 
   /** [[simPqAdcIndexed]] over the post-delete overlay: the frozen
@@ -3497,7 +3558,7 @@ object Similarity {
       querySet: Option[DataFrame] = None): DataFrame = {
     register(spark)
     val main = ensurePqIndex(spark, dir)
-    val del = ensurePqDeleteIndex(spark, dir)
+    val del = ensureDeleteOverlay(spark, dir, pqCodec)
     pqAdcScore(spark, dir,
       spark.read.parquet(s"$main/codebooks"),
       spark.read.parquet(s"$del/codes"), k, querySet)
@@ -3544,7 +3605,7 @@ object Similarity {
     *
     *   - `n_before` / `n_after`: occupancy under the FROZEN books (the
     *     post-upsert logical state — base codes plus the delta encoded
-    *     frozen, exactly what [[simPqUpsert]] serves) vs under the
+    *     frozen, exactly what [[codecUpsertAudit]] serves) vs under the
     *     retrained books;
     *   - `n_entered` / `n_left`: vectors whose code changed, counted on
     *     the gaining and losing codeword — the code-movement cost a
@@ -4038,7 +4099,7 @@ object Similarity {
     * is assigned a CELL by the standing coarse quantizer
     * ([[ivfMembersSqlFrom]] over the persisted centroids — the text the
     * index was built with) AND encoded with the standing index's FROZEN
-    * PQ codebooks ([[pqEncodeFrom]] — the [[simPqUpsert]] rule). Nothing
+    * PQ codebooks ([[pqEncodeFrom]] — the [[pqCodec]] admission rule). Nothing
     * retrains; base cell membership is read from the PHYSICAL cells
     * table. The audit reports every (cell, subspace) inverted-list
     * entry: base/new row occupancy plus the distinct codewords each side
@@ -4054,11 +4115,7 @@ object Similarity {
     val pqBase = ensurePqIndex(spark, dir)
     spark.read.parquet(s"$ivfBase/centroids")
       .createOrReplaceTempView("graft_ivf_centroids")
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    val delta = upsertDeltaFrame(spark, dir)
     delta.createOrReplaceTempView("graft_ivfpq_delta")
     val bCell = readIvfCells(spark, ivfBase)
       .select(col("m_vec_id").as("vec_id"), col("cell"))
@@ -4115,11 +4172,7 @@ object Similarity {
     register(spark)
     graft.Catalog.registerAll(spark, dir)
     centroidsWithNorm(spark, dir).createOrReplaceTempView("graft_ivf_centroids")
-    Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    upsertDeltaFrame(spark, dir)
       .createOrReplaceTempView("graft_ivf_delta")
     val base = spark.sql(ivfMembersSql)
       .groupBy("cell").agg(count(lit(1)).as("n_base"))
@@ -4591,11 +4644,7 @@ object Similarity {
     val main = ensureIvfIndex(spark, dir)
     spark.read.parquet(s"$main/centroids")
       .createOrReplaceTempView("graft_ivf_centroids")
-    Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    upsertDeltaFrame(spark, dir)
       .createOrReplaceTempView("graft_ivf_delta")
     val cents = spark.sql(
       "SELECT c_label AS cell, centroid FROM graft_ivf_centroids")
@@ -4625,11 +4674,12 @@ object Similarity {
     */
   private[graft] val ivfRetrainRounds = 2
 
-  /** The deterministic admitted-delta batch shared by [[simIvfUpsert]],
-    * [[simIvfDrift]] and the retrain machinery: every
+  /** The deterministic admitted-delta batch the Spark-side index
+    * upserts, drift audits and retrains share: every
     * `vec_id % upsertDeltaMod = 0` corpus vector spawns a new vector
     * under the reserved negative key with its embedding reversed — one
-    * carve text, every consumer.
+    * carve text, every consumer (OpqLifecycleSpec fails on a copy);
+    * consumers needing other column names rename at the call site.
     */
   private[graft] def upsertDeltaFrame(spark: SparkSession,
       dir: String): DataFrame =
@@ -4975,87 +5025,6 @@ object Similarity {
   // ---- OPQ lifecycle (VERDICT r13 item 4: the last index family
   // without upsert/delete/drift symmetry) --------------------------------
 
-  /** OPQ index UPSERT — [[simPqUpsert]]'s frozen-quantizer admission in
-    * the ROTATED space (FAISS `IndexPreTransform.add`: the pre-transform
-    * applies to every added vector, then the wrapped index admits): the
-    * standard reversed negative-key delta batch ([[upsertDeltaFrame]])
-    * passes through the FROZEN carve + Hadamard ([[opqRotateQueries]] —
-    * the serve-time query path, so admission and serving can never
-    * rotate differently) and encodes under the standing index's frozen
-    * rotated-space codebooks. The audit reports per-(subspace, codeword)
-    * occupancy of base vs admitted codes in exact integers; the
-    * standing tables are never mutated.
-    */
-  def simOpqUpsert(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    val base0 = ensureOpqIndex(spark, dir)
-    val books = spark.read.parquet(s"$base0/codebooks")
-    val delta = opqRotateQueries(upsertDeltaFrame(spark, dir))
-    val base = spark.read.parquet(s"$base0/codes")
-      .groupBy("s", "code").agg(count(lit(1)).as("n_base"))
-    val fresh = pqEncodeFrom(delta, books)
-      .groupBy("s", "code").agg(count(lit(1)).as("n_new"),
-        min("vec_id").as("first_new_id"))
-    base.join(fresh, Seq("s", "code"), "full_outer")
-      .select(col("s"), col("code"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"),
-        (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_total"),
-        col("first_new_id"))
-      .orderBy("s", "code")
-  }
-
-  /** Physically rewrite the OPQ code table minus the tombstoned vectors
-    * — [[pqBuildDeleteIndex]] verbatim for the rotated-space codes (same
-    * [[pqDelMod]]/[[pqDelRem]] carve, so the flat-table deletes stay
-    * comparable): a flat rotated code table has no pruning unit to mask
-    * behind, so the honest `remove_ids` analog is the one-time physical
-    * rewrite into an overlay; the standing index and the frozen rotation
-    * are never mutated — deletion never re-rotates or retrains.
-    */
-  def opqBuildDeleteIndex(spark: SparkSession, dir: String): String = {
-    val main = ensureOpqIndex(spark, dir)
-    val base = graft.Layout.indexBase(spark, dir, "opq_del")
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.filter(col("vec_id") % pqDelMod === pqDelRem)
-      .write.mode("overwrite").parquet(s"$base/tombstones")
-    codes.join(spark.read.parquet(s"$base/tombstones")
-        .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    base
-  }
-
-  /** Build-once accessor for the post-delete OPQ overlay. */
-  def ensureOpqDeleteIndex(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "opq_del", Seq("codes"))(_ =>
-      opqBuildDeleteIndex(spark, dir))
-
-  /** OPQ delete audit — [[simPqDelete]] over the rotated-space tables:
-    * per (subspace, codeword) base occupancy, dead rows from the
-    * physical tombstones, live rows RECOUNTED from the rewritten
-    * overlay. The oracle derives all three from the rotation + training
-    * chain plus the carve arithmetic — a hash match proves the overlay
-    * holds exactly the base rotated codes minus the deleted vectors.
-    */
-  def simOpqDelete(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    val main = ensureOpqIndex(spark, dir)
-    val del = ensureOpqDeleteIndex(spark, dir)
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.groupBy("s", "code").agg(count(lit(1)).as("n_base"))
-      .join(spark.read.parquet(s"$del/tombstones")
-        .groupBy("s", "code").agg(count(lit(1)).as("n_dead_t")),
-        Seq("s", "code"), "left")
-      .join(spark.read.parquet(s"$del/codes")
-        .groupBy("s", "code").agg(count(lit(1)).as("n_live_r")),
-        Seq("s", "code"), "left")
-      .select(col("s"), col("code"), col("n_base"),
-        coalesce(col("n_dead_t"), lit(0L)).as("n_dead"),
-        coalesce(col("n_live_r"), lit(0L)).as("n_live"))
-      .orderBy("s", "code")
-  }
-
   /** [[simOpqAdcIndexed]] over the post-delete overlay — the
     * [[simPqAdcDeleted]] treatment for the rotated family: frozen
     * rotated-space codebooks with the REWRITTEN code table, queries
@@ -5067,7 +5036,7 @@ object Similarity {
       k: Int = 5): DataFrame = {
     register(spark)
     val main = ensureOpqIndex(spark, dir)
-    val del = ensureOpqDeleteIndex(spark, dir)
+    val del = ensureDeleteOverlay(spark, dir, opqCodec)
     val qs = opqRotateQueries(
       Tables(spark, dir, "embeddings").filter(col("vec_id") < 5)
         .select("vec_id", "embedding"))
@@ -5886,25 +5855,25 @@ object Similarity {
     // quantize is a once-per-row projection (interpreted HOF, fine); the
     // dots below are per-PAIR work — codegen'd long_dot, per the hot-loop
     // rule (exact long arithmetic either way, identical results)
-    val quant = emb.withColumn("qe",
-        transform(col("embedding"), x =>
-          greatest(lit(-127L), least(lit(127L),
-            floor(x.cast("double") * col("scale"))))))
+    val quant = emb.withColumn("qe", sqQuantize(col("scale")))
       .withColumn("qnorm2", expr("long_dot(qe, qe)"))
       .select(col("vec_id"), col("label"), col("qe"), col("qnorm2"))
-    sqSearch(quant, k)
+    sqSearch(quant, quant, k)
   }
 
-  /** The integer-cosine top-k tail over a quantized (vec_id, label, qe,
-    * qnorm2) frame — ONE definition for the per-call [[simSqInt8]] and
-    * the standing-index [[simSqInt8Indexed]] serve, so the two paths
-    * and the one oracle text cannot drift.
+  /** The integer-cosine top-k tail: the `vec_id < 5` rows of `queries`
+    * against every `cands` row, both quantized (vec_id, label, qe,
+    * qnorm2) frames — ONE definition for the per-call [[simSqInt8]], the
+    * standing-index [[simSqInt8Indexed]] and the post-delete
+    * [[simSqInt8Deleted]] serves, so the paths and the one oracle text
+    * cannot drift.
     */
-  private def sqSearch(quant: DataFrame, k: Int): DataFrame = {
-    val q = quant.filter(col("vec_id") < 5)
+  private def sqSearch(cands: DataFrame, queries: DataFrame,
+      k: Int): DataFrame = {
+    val q = queries.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("qe").as("qq"),
         col("qnorm2").as("qn2"))
-    val scored = quant.join(broadcast(q), col("vec_id") =!= col("qid"))
+    val scored = cands.join(broadcast(q), col("vec_id") =!= col("qid"))
       .withColumn("qdot", expr("long_dot(qq, qe)"))
       .withColumn("approx_cosine",
         col("qdot").cast("double") /
@@ -6050,6 +6019,14 @@ object Similarity {
       .orderBy("dim")
   }
 
+  /** The int8 quantization rule over `embedding`: every dimension times
+    * `scale`, floored and clamped to ±127 — one text for the build, the
+    * per-call serve, the upsert admission and the drift re-encode.
+    */
+  private def sqQuantize(scale: Column): Column =
+    transform(col("embedding"), x =>
+      greatest(lit(-127L), least(lit(127L), floor(x.cast("double") * scale))))
+
   /** Materialize the SQ-int8 index — the [[bqBuildIndex]] treatment for
     * scalar quantization, closing the last index family without a
     * build-once form (VERDICT r11 missing #4): the corpus scale (ONE
@@ -6072,9 +6049,7 @@ object Similarity {
     val sc = spark.read.parquet(s"$base/scale")
       .head().getDouble(0) // ONE double — bounded index metadata
     Tables(spark, dir, "embeddings")
-      .withColumn("qe", transform(col("embedding"), x =>
-        greatest(lit(-127L), least(lit(127L),
-          floor(x.cast("double") * lit(sc))))))
+      .withColumn("qe", sqQuantize(lit(sc)))
       .withColumn("qnorm2", expr("long_dot(qe, qe)"))
       .select(col("vec_id"), col("label"),
         col("qe").cast("array<tinyint>").as("qe"), col("qnorm2"))
@@ -6097,64 +6072,17 @@ object Similarity {
   def simSqInt8Indexed(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
     register(spark)
-    val base = ensureSqIndex(spark, dir)
-    val quant = spark.read.parquet(s"$base/codes")
+    val quant = sqCodeTable(spark, ensureSqIndex(spark, dir))
+    sqSearch(quant, quant, k)
+  }
+
+  /** An SQ code table as the integer-cosine serve reads it: the int8
+    * codes widened to bigint for `long_dot`.
+    */
+  private def sqCodeTable(spark: SparkSession, base: String): DataFrame =
+    spark.read.parquet(s"$base/codes")
       .select(col("vec_id"), col("label"),
         col("qe").cast("array<bigint>").as("qe"), col("qnorm2"))
-    sqSearch(quant, k)
-  }
-
-  /** Melt an SQ code frame to (vec_id, q) rows — the [[bqMeltWords]]
-    * analog for int8 codes: exact-code occupancy is vacuous on
-    * near-continuous vectors, but the quantized-VALUE histogram (≤255
-    * bins, bounded output) pins every admitted code — a scale drift, a
-    * clamp slip, or a lost delta row all move it.
-    */
-  private def sqMeltCodes(codes: DataFrame): DataFrame =
-    codes.select(col("vec_id"), explode(col("qe")).as("q"))
-
-  /** SQ-int8 index UPSERT — [[simBqUpsert]]'s delta admission for
-    * scalar quantization (closing the one index family that was
-    * build/serve only, r12 verdict gap #3): the standard reversed
-    * negative-key delta batch ([[upsertDeltaMod]], the carve every
-    * index upsert shares) is encoded under the STANDING index's
-    * persisted scale — ONE double read from `scale/`, the quantizer
-    * frozen exactly as BQ freezes its thresholds and PQ its codebook —
-    * and the audit reports per-code-value occupancy of base vs
-    * admitted codes ([[sqMeltCodes]]). The standing tables are never
-    * mutated.
-    */
-  def simSqUpsert(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    graft.Catalog.registerAll(spark, dir)
-    val base0 = ensureSqIndex(spark, dir)
-    val sc = spark.read.parquet(s"$base0/scale")
-      .head().getDouble(0) // ONE double — bounded index metadata
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
-    val fresh = delta.withColumn("qe",
-        transform(col("embedding"), x =>
-          greatest(lit(-127L), least(lit(127L),
-            floor(x.cast("double") * lit(sc))))))
-      .select(col("vec_id"), col("qe"))
-    val baseOcc = sqMeltCodes(spark.read.parquet(s"$base0/codes")
-        .select(col("vec_id"), col("qe").cast("array<bigint>").as("qe")))
-      .groupBy("q").agg(count(lit(1)).as("n_base"))
-    val freshOcc = sqMeltCodes(fresh)
-      .groupBy("q").agg(count(lit(1)).as("n_new"),
-        min("vec_id").as("first_new_id"))
-    baseOcc.join(freshOcc, Seq("q"), "full_outer")
-      .select(col("q"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"),
-        (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_total"),
-        col("first_new_id"))
-      .orderBy("q")
-  }
 
   /** SQ quantizer drift audit — [[simBqDrift]]'s decidable retrain
     * trigger for the GLOBAL-scale quantizer. The delta here carries
@@ -6200,9 +6128,7 @@ object Similarity {
          |         FROM embeddings
          |         WHERE vec_id % $upsertDeltaMod = 0)) AS new_scale
          |FROM embeddings""".stripMargin)
-      .withColumn("qn", transform(col("embedding"), x =>
-        greatest(lit(-127L), least(lit(127L),
-          floor(x.cast("double") * col("new_scale"))))))
+      .withColumn("qn", sqQuantize(col("new_scale")))
       .select(col("vec_id"), col("qn"), col("new_scale"))
     val oldCodes = spark.read.parquet(s"$main/codes")
       .select(col("vec_id"), col("qe").cast("array<bigint>").as("qe"))
@@ -6220,58 +6146,6 @@ object Similarity {
       .orderBy("dim")
   }
 
-  /** Physically rewrite the SQ code table minus the tombstoned vectors
-    * — [[bqBuildDeleteIndex]] verbatim for int8 codes (same
-    * [[pqDelMod]]/[[pqDelRem]] carve, so the flat-table deletes stay
-    * comparable): tombstones persist, the overlay holds the anti-joined
-    * live codes, the standing table never mutates (the ivf_del
-    * isolation rule). The frozen `scale/` is NOT copied — the overlay
-    * serves under the base index's scale, deletion never retrains.
-    */
-  def sqBuildDeleteIndex(spark: SparkSession, dir: String): String = {
-    val main = ensureSqIndex(spark, dir)
-    val base = graft.Layout.indexBase(spark, dir, "sq_del")
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.filter(col("vec_id") % pqDelMod === pqDelRem)
-      .write.mode("overwrite").parquet(s"$base/tombstones")
-    codes.join(spark.read.parquet(s"$base/tombstones")
-        .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    base
-  }
-
-  /** Build-once accessor for the post-delete SQ overlay. */
-  def ensureSqDeleteIndex(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "sq_del", Seq("codes"))(_ =>
-      sqBuildDeleteIndex(spark, dir))
-
-  /** SQ delete audit — per code value: base occupancy, dead rows from
-    * the physical tombstone table, live rows RECOUNTED from the
-    * rewritten overlay files (the [[simBqDelete]] physical-measurement
-    * treatment). The oracle derives all three from the quantization
-    * chain plus the carve arithmetic — a hash match proves the overlay
-    * holds exactly the base codes minus the deleted vectors, bit for
-    * bit.
-    */
-  def simSqDelete(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    val main = ensureSqIndex(spark, dir)
-    val del = ensureSqDeleteIndex(spark, dir)
-    def occ(df: DataFrame, name: String): DataFrame =
-      sqMeltCodes(df.select(col("vec_id"),
-          col("qe").cast("array<bigint>").as("qe")))
-        .groupBy("q").agg(count(lit(1)).as(name))
-    occ(spark.read.parquet(s"$main/codes"), "n_base")
-      .join(occ(spark.read.parquet(s"$del/tombstones"), "n_dead_t"),
-        Seq("q"), "left")
-      .join(occ(spark.read.parquet(s"$del/codes"), "n_live_r"),
-        Seq("q"), "left")
-      .select(col("q"), col("n_base"),
-        coalesce(col("n_dead_t"), lit(0L)).as("n_dead"),
-        coalesce(col("n_live_r"), lit(0L)).as("n_live"))
-      .orderBy("q")
-  }
-
   /** [[simSqInt8Indexed]] over the post-delete overlay — the
     * [[simBqHammingDeleted]] treatment, used by SqLifecycleSpec's
     * no-dead-id pin: candidates come from the rewritten live code
@@ -6283,26 +6157,8 @@ object Similarity {
       k: Int = 10): DataFrame = {
     register(spark)
     val main = ensureSqIndex(spark, dir)
-    val del = ensureSqDeleteIndex(spark, dir)
-    val live = spark.read.parquet(s"$del/codes")
-      .select(col("vec_id"), col("label"),
-        col("qe").cast("array<bigint>").as("qe"), col("qnorm2"))
-    val q = spark.read.parquet(s"$main/codes")
-      .filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"),
-        col("qe").cast("array<bigint>").as("qq"),
-        col("qnorm2").as("qn2"))
-    val scored = live.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("qdot", expr("long_dot(qq, qe)"))
-      .withColumn("approx_cosine",
-        col("qdot").cast("double") /
-          (sqrt(col("qn2").cast("double")) * sqrt(col("qnorm2").cast("double"))))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("approx_cosine").desc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "vec_id", "label", "approx_cosine", "rnk")
-      .orderBy("qid", "rnk")
+    val del = ensureDeleteOverlay(spark, dir, sqCodec)
+    sqSearch(sqCodeTable(spark, del), sqCodeTable(spark, main), k)
   }
 
   /** Thermometer binary quantization: 7 per-dimension thresholds (the
@@ -6415,7 +6271,7 @@ object Similarity {
   /** The corpus octile thresholds as a one-row (ts array<double>) frame
     * — the train half of [[bqEncode]], split out so the standing index
     * can PERSIST it: a frozen quantizer is a stored artifact, and delta
-    * admission ([[simBqUpsert]]) must encode against the thresholds the
+    * admission ([[bqCodec]]) must encode against the thresholds the
     * base was encoded with, not re-derive them from a drifted corpus.
     */
   private[graft] def bqThresholds(spark: SparkSession, dir: String): DataFrame = {
@@ -6521,53 +6377,6 @@ object Similarity {
     bqSearch(spark, dir, codes, qCodes, shortlist, k, querySet)
   }
 
-  /** Melt a BQ code frame to (vec_id, w, word) rows — the per-word view
-    * the occupancy audits aggregate over.
-    */
-  private def bqMeltWords(codes: DataFrame): DataFrame =
-    codes.selectExpr("vec_id",
-      "stack(8, 0, c0, 1, c1, 2, c2, 3, c3, 4, c4, 5, c5, 6, c6, 7, c7) AS (w, word)")
-
-  /** BQ index UPSERT — [[simPqUpsert]]'s delta admission for binary
-    * codes: the standard reversed negative-key delta batch
-    * ([[upsertDeltaMod]], the carve every index upsert shares) is
-    * encoded under the STANDING index's persisted thresholds
-    * ([[bqEncodeFrom]] — the quantizer stays frozen, the whole point of
-    * delta admission), and the audit reports per (word, popcount)
-    * occupancy of base vs admitted codes. Popcount-per-word is the BQ
-    * analog of PQ's per-(subspace, codeword) occupancy: 448-bit codes
-    * are near-unique so exact-code occupancy is vacuous, but the word
-    * popcount histogram (8 words × 57 counts, bounded) pins every
-    * admitted bit — a threshold drift, a packing slip, or a lost delta
-    * row all move it. The standing tables are never mutated.
-    */
-  def simBqUpsert(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    graft.Catalog.registerAll(spark, dir)
-    val base0 = ensureBqIndex(spark, dir)
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
-    val baseOcc = bqMeltWords(spark.read.parquet(s"$base0/codes"))
-      .withColumn("pc", expr("CAST(bit_count(word) AS INT)"))
-      .groupBy("w", "pc").agg(count(lit(1)).as("n_base"))
-    val freshOcc = bqMeltWords(
-        bqEncodeFrom(spark, spark.read.parquet(s"$base0/thresholds"), delta))
-      .withColumn("pc", expr("CAST(bit_count(word) AS INT)"))
-      .groupBy("w", "pc").agg(count(lit(1)).as("n_new"),
-        min("vec_id").as("first_new_id"))
-    baseOcc.join(freshOcc, Seq("w", "pc"), "full_outer")
-      .select(col("w"), col("pc"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_new"), lit(0L)).as("n_new"),
-        (coalesce(col("n_base"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_total"),
-        col("first_new_id"))
-      .orderBy("w", "pc")
-  }
-
   /** BQ quantizer drift audit — [[simIvfDrift]]'s decidable retrain
     * trigger for the binary index: candidate thresholds re-derive over
     * base ∪ delta (the standard reversed negative-key carve) with the
@@ -6591,11 +6400,7 @@ object Similarity {
     graft.Catalog.registerAll(spark, dir)
     val main = ensureBqIndex(spark, dir)
     val base = Tables(spark, dir, "embeddings").select("vec_id", "embedding")
-    val delta = Tables(spark, dir, "embeddings")
-      .filter(col("vec_id") % upsertDeltaMod === 0)
-      .select((col("vec_id") * -1 - 1).as("vec_id"),
-        expr(s"transform(sequence(1, $dims), i -> embedding[$dims - i])")
-          .as("embedding"))
+    val delta = upsertDeltaFrame(spark, dir)
     val newThr = bqThresholdsOf(spark, base.unionByName(delta))
     val newCodes = bqEncodeFrom(spark, newThr, base)
       .select(col("vec_id") +: (0 until 8).map(i =>
@@ -6615,54 +6420,6 @@ object Similarity {
       .orderBy("w")
   }
 
-  /** Physically rewrite the BQ code table minus the tombstoned vectors
-    * — [[pqBuildDeleteIndex]] verbatim for binary codes (same carve, so
-    * the two flat-table deletes stay comparable): tombstones persist,
-    * the overlay holds the anti-joined live codes, the standing table
-    * never mutates.
-    */
-  def bqBuildDeleteIndex(spark: SparkSession, dir: String): String = {
-    val main = ensureBqIndex(spark, dir)
-    val base = graft.Layout.indexBase(spark, dir, "bq_del")
-    val codes = spark.read.parquet(s"$main/codes")
-    codes.filter(col("vec_id") % pqDelMod === pqDelRem)
-      .write.mode("overwrite").parquet(s"$base/tombstones")
-    codes.join(spark.read.parquet(s"$base/tombstones")
-        .select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    base
-  }
-
-  /** Build-once accessor for the post-delete BQ overlay. */
-  def ensureBqDeleteIndex(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "bq_del", Seq("codes"))(_ =>
-      bqBuildDeleteIndex(spark, dir))
-
-  /** BQ delete audit — per (word, popcount): base occupancy, dead rows
-    * from the physical tombstone table, live rows recounted from the
-    * rewritten overlay (the [[simPqDelete]] physical-measurement
-    * treatment). The oracle derives all three from the encode chain plus
-    * the carve arithmetic — a hash match proves the overlay holds
-    * exactly the base codes minus the deleted vectors, bit for bit.
-    */
-  def simBqDelete(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
-    val main = ensureBqIndex(spark, dir)
-    val del = ensureBqDeleteIndex(spark, dir)
-    def occ(df: DataFrame, name: String): DataFrame =
-      bqMeltWords(df).withColumn("pc", expr("CAST(bit_count(word) AS INT)"))
-        .groupBy("w", "pc").agg(count(lit(1)).as(name))
-    occ(spark.read.parquet(s"$main/codes"), "n_base")
-      .join(occ(spark.read.parquet(s"$del/tombstones"), "n_dead_t"),
-        Seq("w", "pc"), "left")
-      .join(occ(spark.read.parquet(s"$del/codes"), "n_live_r"),
-        Seq("w", "pc"), "left")
-      .select(col("w"), col("pc"), col("n_base"),
-        coalesce(col("n_dead_t"), lit(0L)).as("n_dead"),
-        coalesce(col("n_live_r"), lit(0L)).as("n_live"))
-      .orderBy("w", "pc")
-  }
-
   /** [[simBqHammingIndexed]] over the post-delete overlay: candidates
     * come from the rewritten live code table, so no deleted vector can
     * surface (it has no code to score) — the [[simPqAdcDeleted]]
@@ -6676,7 +6433,7 @@ object Similarity {
     register(spark)
     graft.Catalog.registerAll(spark, dir)
     val main = ensureBqIndex(spark, dir)
-    val del = ensureBqDeleteIndex(spark, dir)
+    val del = ensureDeleteOverlay(spark, dir, bqCodec)
     bqSearch(spark, dir, spark.read.parquet(s"$del/codes"),
       spark.read.parquet(s"$main/codes").filter(col("vec_id") < 5),
       shortlist, k, None)

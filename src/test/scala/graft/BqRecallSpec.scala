@@ -113,7 +113,7 @@ class BqRecallSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     // upsert: every admitted word lands in the audit — 8 words per
     // delta vector, and the base side partitions the corpus likewise
-    val up = Similarity.simBqUpsert(spark, dir).collect()
+    val up = Similarity.codecUpsertAudit(spark, dir, Similarity.bqCodec).collect()
     val nVec = Tables(spark, dir, "embeddings").count()
     val nDelta = Tables(spark, dir, "embeddings")
       .filter(col("vec_id") % 5 === 0).count()
@@ -123,7 +123,7 @@ class BqRecallSpec extends SparkSpec {
       r.getAs[Long]("n_base") + r.getAs[Long]("n_new")))
     // delete: the physically recounted overlay loses no live word and
     // keeps no dead one
-    val delAudit = Similarity.simBqDelete(spark, dir).collect()
+    val delAudit = Similarity.codecDeleteAudit(spark, dir, Similarity.bqCodec).collect()
     assert(delAudit.forall(r => r.getAs[Long]("n_base") ==
       r.getAs[Long]("n_dead") + r.getAs[Long]("n_live")),
       "overlay recount disagrees with base minus tombstones")

@@ -127,7 +127,7 @@ class IvfDeleteSpec extends SparkSpec {
     id % Similarity.pqDelMod == Similarity.pqDelRem
 
   test("pq delete audit: overlay content is exactly base minus the carve") {
-    val rows = Similarity.simPqDelete(spark, pqDir).collect()
+    val rows = Similarity.codecDeleteAudit(spark, pqDir, Similarity.pqCodec).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (base, dead, live) = (r.getAs[Long]("n_base"),

@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Similarity
 
-/** OPQ lifecycle symmetry (VERDICT r13 item 4 — the last index family
-  * that was build/serve only): frozen-rotation upsert admission, the
-  * physically rewritten delete overlay, and the rotated-space drift
-  * audit — with the standing rotated index provably untouched (the
-  * SqLifecycleSpec discipline).
+/** Flat-code lifecycle symmetry: for every [[Similarity.FlatCodec]]
+  * family (PQ, OPQ, SQ-int8, BQ) the frozen-quantizer upsert admission,
+  * the physically rewritten delete overlay and the audits — with the
+  * standing index provably untouched — plus the OPQ-specific serve,
+  * retrain and rotated-space drift checks.
   */
 class OpqLifecycleSpec extends SparkSpec {
 
@@ -20,46 +21,97 @@ class OpqLifecycleSpec extends SparkSpec {
       .getFileStatus(p).getModificationTime
   }
 
-  test("opq lifecycle: audits partition the base exactly and never mutate the standing index") {
-    val main = Similarity.ensureOpqIndex(spark, sf001)
-    val before = successMtime(s"$main/codes")
-    val del = Similarity.simOpqDelete(spark, sf001).collect()
-    del.foreach { r =>
-      assert(r.getAs[Long]("n_base") ==
-        r.getAs[Long]("n_dead") + r.getAs[Long]("n_live"),
-        s"occupancy not partitioned at (s=${r.getAs[Int]("s")}, " +
-          s"code=${r.getAs[Long]("code")})")
+  // per flat-code family: its audited units per vector and its drift
+  // audit (a lifecycle op that must not rewrite the standing index
+  // either; PQ's maintenance action is the retrain, not a drift audit).
+  // A family missing here fails its lifecycle test.
+  private val expected: Map[String,
+      (Long, Option[(SparkSession, String) => DataFrame])] = Map(
+    "pq" -> (Similarity.pqM.toLong, None),
+    "opq" -> (Similarity.pqM.toLong, Some(Similarity.simOpqDrift)),
+    "sq" -> (64L, Some(Similarity.simSqDrift)),
+    "bq" -> (8L, Some(Similarity.simBqDrift)))
+
+  for (c <- Similarity.flatCodecs) {
+    test(s"${c.name} lifecycle: audits partition the base exactly and never mutate the standing index") {
+      val (unitsPerVec, drift) = expected(c.name)
+      val main = c.index(spark, sf001)
+      val before = successMtime(s"$main/codes")
+      def at(r: Row): String =
+        c.keys.map(k => s"$k=${r.getAs[Any](k)}").mkString(", ")
+      val del = Similarity.codecDeleteAudit(spark, sf001, c).collect()
+      // dead + live partition the base occupancy for EVERY key — the
+      // physically recounted overlay lost and invented nothing
+      del.foreach { r =>
+        assert(r.getAs[Long]("n_base") ==
+          r.getAs[Long]("n_dead") + r.getAs[Long]("n_live"),
+          s"occupancy not partitioned at (${at(r)})")
+      }
+      assert(del.exists(_.getAs[Long]("n_dead") > 0),
+        "the carve must tombstone something")
+      val ups = Similarity.codecUpsertAudit(spark, sf001, c).collect()
+      // every base and every admitted vector yields exactly
+      // `unitsPerVec` audited units
+      val nVec = Tables(spark, sf001, "embeddings").count()
+      val nDelta = Tables(spark, sf001, "embeddings")
+        .filter(col("vec_id") % Similarity.upsertDeltaMod === 0).count()
+      assert(ups.map(_.getAs[Long]("n_base")).sum == nVec * unitsPerVec)
+      assert(ups.map(_.getAs[Long]("n_new")).sum == nDelta * unitsPerVec)
+      ups.foreach { r =>
+        assert(r.getAs[Long]("n_total") ==
+          r.getAs[Long]("n_base") + r.getAs[Long]("n_new"), at(r))
+      }
+      ups.filter(_.getAs[Long]("n_new") > 0).foreach { r =>
+        assert(r.getAs[Long]("first_new_id") < 0,
+          s"admitted unit at (${at(r)}) not from the reserved negative key space")
+      }
+      drift.foreach(d => assert(d(spark, sf001).collect().nonEmpty))
+      // lifecycle ops serve audits; the standing code table and the
+      // frozen quantizer never rewrite
+      assert(successMtime(s"$main/codes") == before,
+        s"a lifecycle audit rewrote the standing ${c.name} index")
     }
-    val ups = Similarity.simOpqUpsert(spark, sf001).collect()
-    // every admitted vector yields exactly one code per subspace
-    val nDelta = Tables(spark, sf001, "embeddings")
-      .filter(col("vec_id") % Similarity.upsertDeltaMod === 0).count()
-    assert(ups.map(_.getAs[Long]("n_new")).sum ==
-      nDelta * Similarity.pqM)
-    ups.filter(_.getAs[Long]("n_new") > 0).foreach { r =>
-      assert(r.getAs[Long]("first_new_id") < 0,
-        "admitted code not from the reserved negative key space")
+
+    test(s"${c.name} delete overlay: no tombstoned vector holds a code, no live code lost") {
+      val main = c.index(spark, sf001)
+      val del = Similarity.ensureDeleteOverlay(spark, sf001, c)
+      assert(del == Layout.indexBase(spark, sf001, s"${c.name}_del"))
+      val live = spark.read.parquet(s"$del/codes")
+      live.select("vec_id").distinct().collect().foreach { r =>
+        assert(r.getLong(0) % Similarity.pqDelMod != Similarity.pqDelRem,
+          s"deleted vector ${r.getLong(0)} still holds overlay codes")
+      }
+      // the overlay is exactly the base minus the carve — row for row
+      val expected = spark.read.parquet(s"$main/codes")
+        .filter(!(col("vec_id") % Similarity.pqDelMod === Similarity.pqDelRem))
+        .count()
+      assert(live.count() == expected)
+      assert(spark.read.parquet(s"$del/tombstones").count() ==
+        spark.read.parquet(s"$main/codes").count() - expected)
     }
-    assert(Similarity.simOpqDrift(spark, sf001).collect().nonEmpty)
-    // lifecycle ops serve audits; the standing rotated code table and
-    // the frozen codebooks never rewrite
-    assert(successMtime(s"$main/codes") == before,
-      "a lifecycle audit rewrote the standing OPQ index")
   }
 
-  test("opq delete overlay: no tombstoned vector holds a code, no live code lost") {
-    val main = Similarity.ensureOpqIndex(spark, sf001)
-    val del = Similarity.ensureOpqDeleteIndex(spark, sf001)
-    val live = spark.read.parquet(s"$del/codes")
-    live.select("vec_id").distinct().collect().foreach { r =>
-      assert(r.getLong(0) % Similarity.pqDelMod != Similarity.pqDelRem,
-        s"deleted vector ${r.getLong(0)} still holds overlay codes")
-    }
-    // the overlay is exactly the base minus the carve — row for row
-    val expected = spark.read.parquet(s"$main/codes")
-      .filter(!(col("vec_id") % Similarity.pqDelMod === Similarity.pqDelRem))
-      .count()
-    assert(live.count() == expected)
+  test("one delta carve: src/main writes `% upsertDeltaMod === 0` only inside upsertDeltaFrame") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"source tree not found under ${root.toAbsolutePath}")
+    val hits = for {
+      src <- java.nio.file.Files.walk(root).iterator().asScala.toList
+      if src.toString.endsWith(".scala")
+      lines = java.nio.file.Files.readAllLines(src).asScala.toIndexedSeq
+      // the helper's body: its def line through the next blank line
+      helper = lines.indexWhere(_.contains("def upsertDeltaFrame(")) match {
+        case -1 => Range(0, 0)
+        case d => Range(d, lines.indexWhere(_.trim.isEmpty, d))
+      }
+      (line, i) <- lines.zipWithIndex
+      if line.contains("% upsertDeltaMod === 0")
+    } yield (s"$src:${i + 1}", helper.contains(i))
+    assert(hits.count(_._2) == 1, s"the carve must live in upsertDeltaFrame: $hits")
+    val offenders = hits.filterNot(_._2).map(_._1)
+    assert(offenders.isEmpty,
+      "delta carve copied outside upsertDeltaFrame:\n" + offenders.mkString("\n"))
   }
 
   test("opq delete serve: no tombstoned id ever surfaces from the overlay") {

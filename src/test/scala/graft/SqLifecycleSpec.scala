@@ -4,41 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.Similarity
 
-/** SQ-int8 lifecycle symmetry (r12 verdict gap #3): the frozen-scale
-  * upsert, the physically rewritten delete overlay, and the integer
-  * retrain decision — with the standing index provably untouched.
+/** SQ-int8 lifecycle symmetry (r12 verdict gap #3): the post-delete
+  * serve and the integer retrain decision. The frozen-scale upsert and
+  * delete audits run in OpqLifecycleSpec's loop over every flat-code
+  * family.
   */
 class SqLifecycleSpec extends SparkSpec {
 
   private val sf001 = "/root/testdata/sf0.001"
-
-  private def successMtime(path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-  }
-
-  test("sq lifecycle: audits partition the base exactly and never mutate the standing index") {
-    val main = Similarity.ensureSqIndex(spark, sf001)
-    val before = successMtime(s"$main/codes")
-    val del = Similarity.simSqDelete(spark, sf001).collect()
-    // dead + live partition the base occupancy for EVERY code value —
-    // the physically recounted overlay lost and invented nothing
-    del.foreach { r =>
-      assert(r.getAs[Long]("n_base") ==
-        r.getAs[Long]("n_dead") + r.getAs[Long]("n_live"),
-        s"occupancy not partitioned at q=${r.getAs[Long]("q")}")
-    }
-    val ups = Similarity.simSqUpsert(spark, sf001).collect()
-    // every admitted code is accounted: delta rows × dims codes total
-    val nDelta = Tables(spark, sf001, "embeddings")
-      .filter(col("vec_id") % Similarity.upsertDeltaMod === 0).count()
-    assert(ups.map(_.getAs[Long]("n_new")).sum == nDelta * 64L)
-    assert(Similarity.simSqDrift(spark, sf001).collect().nonEmpty)
-    // lifecycle ops serve audits; the standing code table never rewrites
-    assert(successMtime(s"$main/codes") == before,
-      "a lifecycle audit rewrote the standing SQ index")
-  }
 
   test("sq delete serve: no tombstoned id ever surfaces from the live overlay") {
     val served = Similarity.simSqInt8Deleted(spark, sf001).collect()
