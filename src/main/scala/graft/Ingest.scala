@@ -57,22 +57,21 @@ object Ingest {
     }
     def write(df: DataFrame, path: String): Unit =
       df.write.mode("overwrite").parquet(path)
+    // Ladder rung: force execution so remote/scan failures surface inside
+    // Transforms.firstAvailable's Try instead of at first materialization.
+    def forced(body: => DataFrame): DataFrame = {
+      val df = body; df.limit(1).collect(); df
+    }
     // §2.12 degraded plans at the EXECUTION boundary: Spark frames are
     // lazy, so a missing warehouse table only surfaces when the plan
     // runs. Probe with limit(1) (the analog of the reference's
     // list_tables/try-except availability checks) and degrade optional
     // sources to schema-stable empties instead of aborting the run.
     def probeOrEmpty(body: => DataFrame, schemaName: String): DataFrame =
-      scala.util.Try { val df = body; df.limit(1).collect(); df }
-        .getOrElse {
-          runLog.warn(s"optional source unavailable; continuing with empty $schemaName")
-          Schemas.emptyOf(spark, schemaName)
-        }
-    // Ladder rung: force execution so remote/scan failures surface inside
-    // Transforms.firstAvailable's Try instead of at first materialization.
-    def forced(body: => DataFrame): DataFrame = {
-      val df = body; df.limit(1).collect(); df
-    }
+      scala.util.Try(forced(body)).getOrElse {
+        runLog.warn(s"optional source unavailable; continuing with empty $schemaName")
+        Schemas.emptyOf(spark, schemaName)
+      }
 
     step("Connect to source") { () } // boundary held by the EquitySource impl
 
@@ -88,9 +87,7 @@ object Ingest {
     val assetsMaster = step("Build assets master") {
       val names = equity.nameRecords(permnos)
       // optional table (wrds_ingestion.py:148-152 catches and skips)
-      val ipo = scala.util.Try {
-        val df = equity.ipoDates(permnos); df.limit(1).collect(); df
-      }.getOrElse(Schemas.emptyOf(spark, "ipo_dates"))
+      val ipo = probeOrEmpty(equity.ipoDates(permnos), "ipo_dates")
       val enriched =
         if (ipo.isEmpty) names
         else names.join(ipo, Seq("asset_id"), "left")
@@ -110,7 +107,7 @@ object Ingest {
     val ibesTickers = idxref.select("ticker").distinct()
       .collect().map(_.getString(0)).toSeq
 
-    val (prices, returns) = step("Download daily prices/returns") {
+    val (prices, returns, delists) = step("Download daily prices/returns") {
       val p = equity.pricesDaily(permnos, start, end)
         .withColumnRenamed("permno", "asset_id")
         .withColumn("adj_close", col("close") * col("cfacpr")) // F1
@@ -119,10 +116,11 @@ object Ingest {
       // would re-run the full warehouse download (and could observe
       // different warehouse state mid-run)
       val withTickers = Transforms.attachTickers(p, assetsMaster).cache()
-      val rets = Transforms.applyDelistReturns(
-        Transforms.buildReturns(withTickers),
-        probeOrEmpty(equity.delistEvents(permnos, start, end), "delists"))
-      (withTickers, rets)
+      // probed once here; the monthly step reuses the frame
+      val dl = probeOrEmpty(equity.delistEvents(permnos, start, end), "delists")
+      (withTickers,
+        Transforms.applyDelistReturns(Transforms.buildReturns(withTickers), dl),
+        dl)
     }
 
     val fundamentals = step("Download fundamentals") {
@@ -193,8 +191,7 @@ object Ingest {
         pm.select(col("date"), col("asset_id"), col("ret"),
           col("ret").as("ret_1m"), col("close").as("price"), col("volume"),
           col("shrout")),
-        probeOrEmpty(equity.delistEvents(permnos, start, end), "delists"),
-        retCol = "ret_1m")
+        delists, retCol = "ret_1m")
       (pm, rm)
     }
 
@@ -327,10 +324,7 @@ object Ingest {
       "numup" -> "num_up", "numdown" -> "num_down",
       "oftic" -> "ibes_official_ticker", "cusip" -> "ibes_cusip",
       "cname" -> "company_name")
-    val expected = Seq("date", "asset_id", "ticker", "mean_rating",
-      "median_rating", "stdev_rating", "num_analysts", "buy_percent",
-      "hold_percent", "sell_percent", "num_up", "num_down", "usfirm",
-      "ibes_official_ticker", "ibes_cusip", "company_name")
+    val expected = Schemas.analystConsensus.fieldNames.toSeq
     val mapped = recdsum
       .join(idxref.select("ticker", "asset_id", "start_date", "end_date"),
         Seq("ticker"), "left")
@@ -399,8 +393,7 @@ object Ingest {
         xxhash64(struct(canonical.columns.toIndexedSeq.map(col): _*))))
     }
     Transforms.dedupeRatingsHistory(withOrd, ordName)
-      .select("date", "asset_id", "analyst_id", "ticker", "rating",
-        "action_code", "rating_text", "statistic_date")
+      .select(Schemas.analystRatingsHistory.fieldNames.toSeq.map(col): _*)
   }
 
   /** K2/K3: provenance + field manifests (`wrds_ingestion.py:1155-1245`). */

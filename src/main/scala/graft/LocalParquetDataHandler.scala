@@ -42,13 +42,6 @@ class LocalParquetDataHandler(
     spark.read.parquet(path)
   }
 
-  /** Flat read; datasets may be written date-partitioned (Layout) — the
-    * reserved partition columns are internal and never part of the API
-    * schema.
-    */
-  private def readParquet(path: String): DataFrame =
-    readRaw(path).drop(Layout.PYear, Layout.PMonth)
-
   /** Panel read with directory-level pruning (VERDICT r3 item 6): when
     * the dataset was written through [[Layout.writeDatePartitioned]], the
     * requested date bounds are re-derived as predicates on the PARTITION
@@ -60,6 +53,9 @@ class LocalParquetDataHandler(
     * data-column filter handles row groups (asserted in PlanSpec). Flat
     * (unpartitioned) panels skip straight to the data-column filter;
     * an unparseable bound skips pruning rather than risking a wrong cut.
+    * Without bounds it is the flat read. Either way the reserved
+    * partition columns are dropped: they are internal and never part of
+    * the API schema.
     */
   private def readPanel(path: String, start: Option[String],
       end: Option[String]): DataFrame = {
@@ -78,7 +74,7 @@ class LocalParquetDataHandler(
   }
 
   private lazy val tickerToAssetId: Map[String, Long] =
-    readParquet(s"$metaPath/assets_master.parquet")
+    readPanel(s"$metaPath/assets_master.parquet", None, None)
       .select(col("ticker"), col("asset_id").cast("long"))
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))

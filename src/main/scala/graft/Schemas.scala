@@ -25,10 +25,12 @@ object Schemas {
   private def str(n: String) = StructField(n, StringType, nullable = true)
   private def bool(n: String) = StructField(n, BooleanType, nullable = true)
 
-  /** `data_meta/assets_master.parquet` (`wrds_ingestion.py:235-253`). */
+  /** `data_meta/assets_master.parquet` (`wrds_ingestion.py:235-253`): the
+    * deduped name records plus the optional IPO date.
+    */
   val assetsMaster: StructType = StructType(Seq(
-    lng("asset_id"), str("ticker"), str("sector"), str("industry"),
-    str("currency"), ts("first_date"), ts("last_date"), ts("ipodate")))
+    lng("asset_id"), str("ticker"), ts("first_date"), ts("last_date"),
+    ts("ipodate")))
 
   /** `data_meta/trading_calendar.parquet` (`wrds_ingestion.py:155-157`). */
   val tradingCalendar: StructType = StructType(Seq(ts("date"), bool("is_trading_day")))
@@ -37,20 +39,24 @@ object Schemas {
   val universeSp500: StructType = StructType(Seq(
     ts("date"), lng("asset_id"), bool("in_universe")))
 
-  /** `data_processed/prices_daily.parquet` (field_manifest.csv). */
+  /** `data_processed/prices_daily.parquet` (field_manifest.csv): the
+    * `crsp.dsf` columns as downloaded, then `adj_close` and the attached
+    * ticker.
+    */
   val pricesDaily: StructType = StructType(Seq(
-    ts("date"), lng("asset_id"), str("ticker"), dbl("open"), dbl("high"),
-    dbl("low"), dbl("close"), dbl("adj_close"), lng("volume")))
+    lng("asset_id"), ts("date"), dbl("open"), dbl("high"), dbl("low"),
+    dbl("close"), dbl("cfacpr"), dbl("ret"), lng("shrout"), lng("volume"),
+    dbl("adj_close"), str("ticker")))
 
   /** `data_processed/returns_daily.parquet` (`wrds_ingestion.py:446-449`). */
   val returnsDaily: StructType = StructType(Seq(
-    ts("date"), lng("asset_id"), str("ticker"), dbl("ret_1d")))
+    lng("asset_id"), ts("date"), str("ticker"), dbl("ret_1d")))
 
   /** `data_processed/returns_monthly.parquet` (`wrds_ingestion.py:466-478`):
     * raw `ret` is kept alongside the delist-adjusted `ret_1m`.
     */
   val returnsMonthly: StructType = StructType(Seq(
-    ts("date"), lng("asset_id"), dbl("ret"), dbl("ret_1m"), dbl("price"),
+    lng("asset_id"), ts("date"), dbl("ret"), dbl("ret_1m"), dbl("price"),
     lng("volume"), lng("shrout")))
 
   /** `data_processed/sp500_membership.parquet`. */
@@ -82,16 +88,21 @@ object Schemas {
   /** `data_processed/risk_free.parquet` (`wrds_ingestion.py:920-924`). */
   val riskFree: StructType = StructType(Seq(ts("date"), dbl("rf")))
 
-  /** `data_processed/analyst_consensus.parquet` (`wrds_ingestion.py:732-747`). */
+  /** `data_processed/analyst_consensus.parquet` (`wrds_ingestion.py:732-747`);
+    * [[Ingest.buildConsensus]] conforms to these columns in this order.
+    */
   val analystConsensus: StructType = StructType(Seq(
     ts("date"), lng("asset_id"), str("ticker"), dbl("mean_rating"),
     dbl("median_rating"), dbl("stdev_rating"), lng("num_analysts"),
-    dbl("rating_high"), dbl("rating_low"), lng("num_buy"), lng("num_hold"),
-    lng("num_sell")))
+    dbl("buy_percent"), dbl("hold_percent"), dbl("sell_percent"),
+    lng("num_up"), lng("num_down"), lng("usfirm"),
+    str("ibes_official_ticker"), str("ibes_cusip"), str("company_name")))
 
-  /** `data_processed/analyst_ratings_history.parquet` (`wrds_ingestion.py:855-891`). */
+  /** `data_processed/analyst_ratings_history.parquet` (`wrds_ingestion.py:855-891`);
+    * [[Ingest.buildRatingsHistory]] selects these columns in this order.
+    */
   val analystRatingsHistory: StructType = StructType(Seq(
-    ts("date"), lng("asset_id"), str("ticker"), lng("analyst_id"),
+    ts("date"), lng("asset_id"), lng("analyst_id"), str("ticker"),
     dbl("rating"), str("action_code"), str("rating_text"), ts("statistic_date")))
 
   /** `data_processed/dividends_monthly.parquet` (`wrds_ingestion.py:293-322`). */

@@ -820,45 +820,179 @@ object SparkEntry {
     }.mkString(",\n")
   }
 
-  private def pqAdcCtes: String = {
+  // ---- Oracle-side lifecycle templates ---------------------------------
+  // The DuckDB mirror of Similarity.upsertDeltaFrame, codecUpsertAudit,
+  // codecDeleteAudit and the shared search tails: every oracle text calls
+  // these generators instead of restating them, so the reference cannot
+  // drift from its Spark twin one copy at a time (OpqLifecycleSpec's
+  // source scan fails on a restated delta batch or occupancy audit).
+
+  /** The reversed negative-key delta batch — the oracle twin of
+    * [[graft.queries.Similarity.upsertDeltaFrame]]: every
+    * `vec_id % upsertDeltaMod = 0` corpus vector becomes `-vec_id - 1`
+    * with its embedding reversed. Whatever a site needs for bit-exactness
+    * is an explicit argument, never normalised away: `elem` maps the
+    * reversed element to the stored one (raw, CAST to DOUBLE, amplified,
+    * int8-quantized) under column name `col`; `norm` adds the L2 norm of
+    * the reversed vector; `from` extends the FROM list (the sq scale
+    * row); `materialized` keeps the hint the hop-chain oracles need (the
+    * knn-descent `e`-chain rule).
+    */
+  private def deltaBatchCte(name: String, elem: String => String = x => x,
+      col: String = "embedding", norm: Boolean = false,
+      materialized: Boolean = false, from: String = "embeddings"): String = {
+    val x = "embedding[65 - i]"
+    val normCol = if (!norm) "" else
+      s""",
+         |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST($x AS DOUBLE) * CAST($x AS DOUBLE)), (x, y) -> x + y)) AS norm""".stripMargin
+    s"""$name AS${if (materialized) " MATERIALIZED" else ""} (
+       |  SELECT -vec_id - 1 AS vec_id,
+       |    list_transform(range(1, 65), i -> ${elem(x)}) AS $col$normCol
+       |  FROM $from WHERE vec_id % ${Similarity.upsertDeltaMod} = 0)""".stripMargin
+  }
+
+  /** The base/new occupancy audit — the oracle twin of
+    * [[graft.queries.Similarity.codecUpsertAudit]] and of the per-cell
+    * [[graft.queries.Similarity.simIvfUpsert]] audit: per key, the base
+    * units, the admitted delta units, their exact-integer total and the
+    * least admitted id. `baseUnits`/`deltaUnits` are relations carrying
+    * the key columns (the delta one also `vec_id`). Ends the statement.
+    */
+  private def upsertAuditSql(baseUnits: String, deltaUnits: String,
+      keys: Seq[String]): String = {
+    val ks = keys.mkString(", ")
+    s"""bc AS (SELECT $ks, count(*) AS n_base FROM $baseUnits GROUP BY $ks),
+       |dc AS (SELECT $ks, count(*) AS n_new, min(vec_id) AS first_new_id
+       |       FROM $deltaUnits GROUP BY $ks)
+       |SELECT ${keys.map(k => s"coalesce(bc.$k, dc.$k) AS $k").mkString(", ")},
+       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
+       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
+       |FROM bc FULL OUTER JOIN dc ON ${keys.map(k => s"bc.$k = dc.$k").mkString(" AND ")}
+       |ORDER BY $ks""".stripMargin
+  }
+
+  /** The flat-codec delete carve's survivor predicate over an id column
+    * — one text for the post-delete searches, the live truth and the
+    * delete audit.
+    */
+  private def flatLivePred(id: String): String =
+    s"$id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}"
+
+  /** The base/dead/live occupancy audit — the oracle twin of
+    * [[graft.queries.Similarity.codecDeleteAudit]]: per key, the base
+    * units split by the delete carve, dead set from the carve arithmetic
+    * alone. The Spark side recounts `n_live` from the physically
+    * rewritten overlay, so a hash match proves the rewrite's content.
+    * `units` carries `vec_id` and the key columns. Ends the statement.
+    */
+  private def deleteAuditSql(units: String, keys: Seq[String]): String = {
+    val ks = keys.mkString(", ")
+    s"""SELECT $ks, count(*) AS n_base,
+       |  CAST(sum(CASE WHEN ${flatLivePred("vec_id")} THEN 0 ELSE 1 END) AS BIGINT) AS n_dead,
+       |  CAST(sum(CASE WHEN ${flatLivePred("vec_id")} THEN 1 ELSE 0 END) AS BIGINT) AS n_live
+       |FROM $units GROUP BY $ks ORDER BY $ks""".stripMargin
+  }
+
+  /** The ADC ranking over a code table (vec_id, s, code) and a query
+    * distance table (qid, s, cid, qdist) — one text for the raw PQ, the
+    * rotated OPQ and the residual IVFPQ chains and their post-delete
+    * twins: per (query, candidate) the codeword sub-distances folded in
+    * subspace order (the s-ordered left fold the Spark side computes),
+    * then the per-query rank with the vec_id tiebreak. Emits
+    * `${p}adist` (qid, vec_id, adc) and `${p}ranked` (+ rnk); `livePred`
+    * restricts candidates over `c.vec_id`, `extraOn` adds join keys.
+    */
+  private def adcRankCtes(p: String, codes: String, qdt: String,
+      livePred: String = "TRUE", extraOn: String = ""): String =
+    s"""${p}adist AS (
+       |  SELECT qd.qid, c.vec_id AS vec_id,
+       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qd.qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
+       |  FROM $codes c JOIN $qdt qd ON c.s = qd.s AND c.code = qd.cid$extraOn AND c.vec_id <> qd.qid
+       |  WHERE $livePred
+       |  GROUP BY 1, 2),
+       |${p}ranked AS (
+       |  SELECT qid, vec_id, adc,
+       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
+       |  FROM ${p}adist)""".stripMargin
+
+  /** The ADC search: the index CTEs, the [[adcRankCtes]] ranking over
+    * the candidates `livePred` admits, per-query top-5.
+    */
+  private def adcSearchSql(indexCtes: String, p: String, codes: String,
+      qdt: String, livePred: String): String =
+    s"""WITH $indexCtes,
+       |${adcRankCtes(p, codes, qdt, livePred)}
+       |SELECT qid, vec_id, adc, rnk FROM ${p}ranked WHERE rnk <= 5
+       |ORDER BY qid, rnk""".stripMargin
+
+  /** Exact full-dim squared L2 between two 64-dim list columns — the
+    * left fold from 0.0 the Spark-side re-rank computes.
+    */
+  private def exactL2Sql(a: String, b: String): String =
+    s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
+       |      (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
+
+  /** The exact re-rank tail — the oracle twin of
+    * [[graft.queries.Similarity.exactRerank]]: the top-`depth` rows of
+    * `ranked` (qid, vec_id, rnk), exact L2 against the corpus, per-query
+    * top-5 of the refined order. One text for the PQ, IVFPQ, residual
+    * IVFPQ and BQ shortlists. Ends the statement.
+    */
+  private def exactRerankSql(ranked: String, depth: Int): String =
+    s"""rerank_short AS (SELECT qid, vec_id FROM $ranked WHERE rnk <= $depth),
+       |rerank_dist AS (
+       |  SELECT s.qid, s.vec_id,
+       |    ${exactL2Sql("q.embedding", "e2.embedding")} AS dist
+       |  FROM rerank_short s
+       |  JOIN embeddings e2 ON e2.vec_id = s.vec_id
+       |  JOIN embeddings q ON q.vec_id = s.qid),
+       |reranked AS (
+       |  SELECT qid, vec_id, dist,
+       |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
+       |  FROM rerank_dist)
+       |SELECT qid, vec_id, dist, rnk FROM reranked WHERE rnk <= 5
+       |ORDER BY qid, rnk""".stripMargin
+
+  /** The standing PQ index from first principles (train → books →
+    * encode) plus the query distance tables of the default probe set.
+    */
+  private def pqIndexCtes: String = {
     val m = Similarity.pqM
     val sub = Similarity.pqSubDims
     val rounds = Similarity.pqTrainRounds
-    def slicedL2(v: String, c: String, lo: String): String =
-      pqSlicedL2(v, c, lo)
     val chains = pqTrainChains("pq", "embeddings", "embedding")
     val books = (0 until m)
       .map(s => s"SELECT $s AS s, cid, centroid FROM pq${s}_c$rounds")
       .mkString(" UNION ALL ")
-    s"""WITH $chains,
+    s"""$chains,
        |books AS ($books),
-       |codes AS (
+       |${pqEncodeCte("codes", "embeddings", "embedding", "books")},
+       |qdt AS (
+       |  SELECT q.vec_id AS qid, b.s, b.cid,
+       |    ${pqSlicedL2("q.embedding", "b.centroid", s"b.s * $sub")} AS qdist
+       |  FROM embeddings q, books b WHERE q.vec_id < 5)""".stripMargin
+  }
+
+  /** One-pass PQ encode of `src.vec` against `books`: the nearest
+    * codeword per (vector, subspace), ties by lowest cid.
+    */
+  private def pqEncodeCte(name: String, src: String, vec: String,
+      books: String): String =
+    s"""$name AS (
        |  SELECT vec_id, s, cid AS code FROM (
        |    SELECT e.vec_id, b.s, b.cid,
        |      row_number() OVER (PARTITION BY e.vec_id, b.s ORDER BY
-       |        ${slicedL2("e.embedding", "b.centroid", s"b.s * $sub")} ASC,
+       |        ${pqSlicedL2(s"e.$vec", "b.centroid", s"b.s * ${Similarity.pqSubDims}")} ASC,
        |        b.cid ASC) AS rn
-       |    FROM embeddings e, books b)
-       |  WHERE rn = 1),
-       |qdt AS (
-       |  SELECT q.vec_id AS qid, b.s, b.cid,
-       |    ${slicedL2("q.embedding", "b.centroid", s"b.s * $sub")} AS qdist
-       |  FROM embeddings q, books b WHERE q.vec_id < 5),
-       |adist AS (
-       |  SELECT qid, c.vec_id AS vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM codes c JOIN qdt ON c.s = qdt.s AND c.code = qdt.cid AND c.vec_id <> qdt.qid
-       |  GROUP BY 1, 2),
-       |ranked AS (
-       |  SELECT qid, vec_id, adc,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |  FROM adist)""".stripMargin
-  }
+       |    FROM $src e, $books b)
+       |  WHERE rn = 1)""".stripMargin
+
+  private def pqAdcCtes: String =
+    s"""WITH $pqIndexCtes,
+       |${adcRankCtes("", "codes", "qdt")}""".stripMargin
 
   private def pqAdcSql: String =
-    s"""$pqAdcCtes
-       |SELECT qid, vec_id, adc, rnk FROM ranked WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+    adcSearchSql(pqIndexCtes, "", "codes", "qdt", "TRUE")
 
   /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
     * `pqCodec`: the frozen trained codebooks encode both the corpus (the
@@ -868,46 +1002,17 @@ object SparkEntry {
     */
   private def pqUpsertSql: String =
     s"""$pqAdcCtes,
-       |pqdelta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |dcodes AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT d.vec_id, b.s, b.cid,
-       |      row_number() OVER (PARTITION BY d.vec_id, b.s ORDER BY
-       |        ${pqSlicedL2("d.embedding", "b.centroid", s"b.s * ${Similarity.pqSubDims}")} ASC,
-       |        b.cid ASC) AS rn
-       |    FROM pqdelta d, books b)
-       |  WHERE rn = 1),
-       |bc AS (SELECT s, code, count(*) AS n_base FROM codes GROUP BY 1, 2),
-       |dc AS (SELECT s, code, count(*) AS n_new, min(vec_id) AS first_new_id
-       |       FROM dcodes GROUP BY 1, 2)
-       |SELECT coalesce(bc.s, dc.s) AS s, coalesce(bc.code, dc.code) AS code,
-       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
-       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
-       |FROM bc FULL OUTER JOIN dc ON bc.s = dc.s AND bc.code = dc.code
-       |ORDER BY s, code""".stripMargin
+       |${deltaBatchCte("pqdelta")},
+       |${pqEncodeCte("dcodes", "pqdelta", "embedding", "books")},
+       |${upsertAuditSql("codes", "dcodes", Seq("s", "code"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
-    * `pqCodec`: the shared training/encode chain, then per-(subspace,
-    * codeword) base / dead / live occupancy with the dead set derived
-    * purely from the carve arithmetic — the Spark side recounts `n_live`
-    * from the physically rewritten overlay, so a hash match proves the
-    * rewrite's content.
+    * `pqCodec`: the shared training/encode chain, then the
+    * [[deleteAuditSql]] split per (subspace, codeword).
     */
   private def pqDeleteSql: String =
-    s"""$pqAdcCtes,
-       |bc AS (SELECT s, code, count(*) AS n_base FROM codes GROUP BY 1, 2),
-       |dd AS (SELECT s, code, count(*) AS n_dead FROM codes
-       |       WHERE vec_id % ${Similarity.pqDelMod} = ${Similarity.pqDelRem} GROUP BY 1, 2),
-       |lv AS (SELECT s, code, count(*) AS n_live FROM codes
-       |       WHERE vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem} GROUP BY 1, 2)
-       |SELECT bc.s, bc.code, n_base,
-       |  coalesce(n_dead, 0) AS n_dead, coalesce(n_live, 0) AS n_live
-       |FROM bc LEFT JOIN dd ON bc.s = dd.s AND bc.code = dd.code
-       |LEFT JOIN lv ON bc.s = lv.s AND bc.code = lv.code
-       |ORDER BY bc.s, bc.code""".stripMargin
+    s"""$pqAdcCtes
+       |${deleteAuditSql("codes", Seq("s", "code"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simPqRetrain]]: the
     * trained chain's final codebooks seed per-subspace warm Lloyd
@@ -983,10 +1088,10 @@ object SparkEntry {
 
   private def pqRetrainSql: String =
     s"""$pqAdcCtes,
+       |${deltaBatchCte("pqdelta")},
        |u AS (SELECT vec_id, embedding FROM embeddings
        |      UNION ALL
-       |      SELECT -vec_id - 1, list_transform(range(1, 65), i -> embedding[65 - i])
-       |      FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+       |      SELECT vec_id, embedding FROM pqdelta),
        |${pqRetrainBodySql("pq", "books")}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simOpqRetrain]]: the
@@ -1007,19 +1112,7 @@ object SparkEntry {
     * arithmetic replaces the physical overlay), same ranking text.
     */
   private def pqAdcDeletedSql: String =
-    s"""$pqAdcCtes,
-       |dadist AS (
-       |  SELECT qid, c.vec_id AS vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM codes c JOIN qdt ON c.s = qdt.s AND c.code = qdt.cid AND c.vec_id <> qdt.qid
-       |  WHERE c.vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}
-       |  GROUP BY 1, 2),
-       |dranked AS (
-       |  SELECT qid, vec_id, adc,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |  FROM dadist)
-       |SELECT qid, vec_id, adc, rnk FROM dranked WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+    adcSearchSql(pqIndexCtes, "", "codes", "qdt", flatLivePred("c.vec_id"))
 
   /** One DuckDB twin for [[graft.queries.Similarity.simBqHamming]] AND
     * [[graft.queries.Similarity.simBqHammingIndexed]] (the materialized
@@ -1027,78 +1120,93 @@ object SparkEntry {
     * strategies compute this specification): octile order-statistic
     * thresholds (picked elements, rank j*n//8 + 1 with vec_id tiebreak),
     * thermometer bit per (dim, threshold), 56-bit words, Hamming =
-    * popcount(xor), then the [[pqRerankSql]] exact-L2 refine tail on the
-    * L=50 shortlist. DuckDB notes: bit_count returns INT8 (cast before
-    * summing) and 1<<63 overflows (56-bit packing keeps every shift
-    * <= 55).
+    * popcount(xor), then the [[exactRerankSql]] refine tail on the
+    * L=50 shortlist.
     */
   private def bqCtes: String =
-    """WITH ex AS (
-      |  SELECT vec_id, i.d AS d, CAST(embedding[i.d + 1] AS DOUBLE) AS x
-      |  FROM embeddings, (SELECT unnest(range(0, 64)) AS d) i),
-      |ranked_thr AS (
-      |  SELECT d, x,
-      |    row_number() OVER (PARTITION BY d ORDER BY x ASC, vec_id ASC) AS rn,
-      |    count(*) OVER (PARTITION BY d) AS n
-      |  FROM ex),
-      |thr AS (
-      |  SELECT d, j.j AS j, x AS t
-      |  FROM ranked_thr, (SELECT unnest(range(1, 8)) AS j) j
-      |  WHERE rn = (j.j * n) // 8 + 1),
-      |bits AS (
-      |  SELECT e.vec_id, (e.d * 7 + t.j - 1) AS pos
-      |  FROM ex e JOIN thr t ON e.d = t.d AND e.x > t.t),
-      |codes AS (
-      |  SELECT v.vec_id,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 0 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c0,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 1 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c1,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 2 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c2,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 3 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c3,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 4 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c4,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 5 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c5,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 6 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c6,
-      |    COALESCE(bit_or(CASE WHEN pos // 56 = 7 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c7
-      |  FROM (SELECT DISTINCT vec_id FROM embeddings) v
-      |  LEFT JOIN bits b ON v.vec_id = b.vec_id
-      |  GROUP BY 1)""".stripMargin
+    s"""WITH ${bqExCte("ex", "embeddings")},
+       |${bqThrCtes("", "ex")},
+       |${bqCodesCtes("", "ex", "thr", "embeddings")}""".stripMargin
 
-  /** The (vec_id, w, word) melt of the code table — shared by the
-    * occupancy audits ([[bqUpsertSql]], [[bqDeleteSql]]).
+  /** The (vec_id, d, x) per-dimension melt of `src`'s embeddings. */
+  private def bqExCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, i.d AS d, CAST(embedding[i.d + 1] AS DOUBLE) AS x
+       |  FROM $src, (SELECT unnest(range(0, 64)) AS d) i)""".stripMargin
+
+  /** The octile thresholds `${p}thr` (d, j, t) over an ex melt. */
+  private def bqThrCtes(p: String, ex: String): String =
+    s"""${p}ranked_thr AS (
+       |  SELECT d, x,
+       |    row_number() OVER (PARTITION BY d ORDER BY x ASC, vec_id ASC) AS rn,
+       |    count(*) OVER (PARTITION BY d) AS n
+       |  FROM $ex),
+       |${p}thr AS (
+       |  SELECT d, j.j AS j, x AS t
+       |  FROM ${p}ranked_thr, (SELECT unnest(range(1, 8)) AS j) j
+       |  WHERE rn = (j.j * n) // 8 + 1)""".stripMargin
+
+  /** Thermometer bits of an ex melt under thresholds `thr`, packed into
+    * the eight words c0..c7 of `${p}codes` for every vec_id of `ids`.
+    * DuckDB notes: 1<<63 overflows, so the 56-bit packing keeps every
+    * shift <= 55; a vector with no set bit still gets all-zero words.
     */
-  private def bqMeltCte(src: String): String =
-    s"""  SELECT vec_id, CAST(w.w AS INT) AS w,
+  private def bqCodesCtes(p: String, ex: String, thr: String,
+      ids: String): String = {
+    val words = (0 until 8).map(w =>
+      s"    COALESCE(bit_or(CASE WHEN pos // 56 = $w THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c$w")
+    s"""${p}bits AS (
+       |  SELECT e.vec_id, (e.d * 7 + t.j - 1) AS pos
+       |  FROM $ex e JOIN $thr t ON e.d = t.d AND e.x > t.t),
+       |${p}codes AS (
+       |  SELECT v.vec_id,
+       |${words.mkString(",\n")}
+       |  FROM (SELECT DISTINCT vec_id FROM $ids) v
+       |  LEFT JOIN ${p}bits b ON v.vec_id = b.vec_id
+       |  GROUP BY 1)""".stripMargin
+  }
+
+  /** The (vec_id, w, word) melt of a code table — shared by the
+    * occupancy audits ([[bqUpsertSql]], [[bqDeleteSql]]) and the drift
+    * flip count ([[bqDriftSql]]).
+    */
+  private def bqMeltCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, CAST(w.w AS INT) AS w,
        |    CASE w.w WHEN 0 THEN c0 WHEN 1 THEN c1 WHEN 2 THEN c2 WHEN 3 THEN c3
        |             WHEN 4 THEN c4 WHEN 5 THEN c5 WHEN 6 THEN c6 ELSE c7 END AS word
-       |  FROM $src, (SELECT unnest(range(0, 8)) AS w) w""".stripMargin
+       |  FROM $src, (SELECT unnest(range(0, 8)) AS w) w)""".stripMargin
 
-  private def bqHammingSql: String =
+  /** The (vec_id, w, pc) occupancy units of a word melt — popcount per
+    * word; bit_count returns INT8, so it is cast before any use.
+    */
+  private def bqUnits(melt: String): String =
+    s"(SELECT vec_id, w, CAST(bit_count(word) AS INT) AS pc FROM $melt)"
+
+  /** BQ Hamming search over a candidate predicate — `TRUE` is the
+    * full-corpus search ([[bqHammingSql]]); the delete twin substitutes
+    * the live carve (the [[ivfAnnSqlOver]] one-generator rule). Queries
+    * come from the base codes, so deleted vectors may query but never
+    * surface.
+    */
+  private def bqHammingSqlOver(livePred: String): String = {
+    val hamming = (0 until 8)
+      .map(w => s"CAST(bit_count(xor(q.q$w, c.c$w)) AS INT)")
+      .grouped(2).map(_.mkString(" + ")).mkString(" +\n    ")
     s"""$bqCtes,
-      |q AS (SELECT vec_id AS qid, c0 AS q0, c1 AS q1, c2 AS q2, c3 AS q3, c4 AS q4, c5 AS q5, c6 AS q6, c7 AS q7 FROM codes WHERE vec_id < 5),
-      |h AS (
-      |  SELECT q.qid, c.vec_id,
-      |    CAST(bit_count(xor(q.q0, c.c0)) AS INT) + CAST(bit_count(xor(q.q1, c.c1)) AS INT) +
-      |    CAST(bit_count(xor(q.q2, c.c2)) AS INT) + CAST(bit_count(xor(q.q3, c.c3)) AS INT) +
-      |    CAST(bit_count(xor(q.q4, c.c4)) AS INT) + CAST(bit_count(xor(q.q5, c.c5)) AS INT) +
-      |    CAST(bit_count(xor(q.q6, c.c6)) AS INT) + CAST(bit_count(xor(q.q7, c.c7)) AS INT) AS hamming
-      |  FROM q JOIN codes c ON c.vec_id <> q.qid),
-      |hr AS (
-      |  SELECT qid, vec_id,
-      |    row_number() OVER (PARTITION BY qid ORDER BY hamming ASC, vec_id ASC) AS hrnk
-      |  FROM h),
-      |short AS (SELECT qid, vec_id FROM hr WHERE hrnk <= 50),
-      |rr AS (
-      |  SELECT s.qid, s.vec_id,
-      |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-      |      (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)) * (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)))), (x, y) -> x + y) AS dist
-      |  FROM short s
-      |  JOIN embeddings e ON e.vec_id = s.vec_id
-      |  JOIN embeddings q ON q.vec_id = s.qid),
-      |ranked2 AS (
-      |  SELECT qid, vec_id, dist,
-      |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
-      |  FROM rr)
-      |SELECT qid, vec_id, dist, rnk FROM ranked2 WHERE rnk <= 5
-      |ORDER BY qid, rnk""".stripMargin
+       |q AS (SELECT vec_id AS qid, ${(0 until 8).map(w => s"c$w AS q$w").mkString(", ")} FROM codes WHERE vec_id < 5),
+       |h AS (
+       |  SELECT q.qid, c.vec_id,
+       |    $hamming AS hamming
+       |  FROM q JOIN codes c ON c.vec_id <> q.qid AND ($livePred)),
+       |hr AS (
+       |  SELECT qid, vec_id,
+       |    row_number() OVER (PARTITION BY qid ORDER BY hamming ASC, vec_id ASC) AS rnk
+       |  FROM h),
+       |${exactRerankSql("hr", 50)}""".stripMargin
+  }
+
+  private def bqHammingSql: String = bqHammingSqlOver("TRUE")
 
   /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
     * `bqCodec`: the shared encode chain, the standard reversed negative-key
@@ -1108,89 +1216,28 @@ object SparkEntry {
     */
   private def bqUpsertSql: String =
     s"""$bqCtes,
-       |bqdelta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |dex AS (
-       |  SELECT vec_id, i.d AS d, CAST(embedding[i.d + 1] AS DOUBLE) AS x
-       |  FROM bqdelta, (SELECT unnest(range(0, 64)) AS d) i),
-       |dbits AS (
-       |  SELECT e.vec_id, (e.d * 7 + t.j - 1) AS pos
-       |  FROM dex e JOIN thr t ON e.d = t.d AND e.x > t.t),
-       |dcodes AS (
-       |  SELECT v.vec_id,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 0 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c0,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 1 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c1,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 2 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c2,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 3 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c3,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 4 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c4,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 5 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c5,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 6 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c6,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 7 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c7
-       |  FROM (SELECT DISTINCT vec_id FROM bqdelta) v
-       |  LEFT JOIN dbits b ON v.vec_id = b.vec_id
-       |  GROUP BY 1),
-       |bw AS (
-       |${bqMeltCte("codes")}),
-       |dw AS (
-       |${bqMeltCte("dcodes")}),
-       |bo AS (SELECT w, CAST(bit_count(word) AS INT) AS pc, count(*) AS n_base FROM bw GROUP BY 1, 2),
-       |dn AS (SELECT w, CAST(bit_count(word) AS INT) AS pc, count(*) AS n_new,
-       |         min(vec_id) AS first_new_id FROM dw GROUP BY 1, 2)
-       |SELECT coalesce(bo.w, dn.w) AS w, coalesce(bo.pc, dn.pc) AS pc,
-       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
-       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
-       |FROM bo FULL OUTER JOIN dn ON bo.w = dn.w AND bo.pc = dn.pc
-       |ORDER BY w, pc""".stripMargin
+       |${deltaBatchCte("bqdelta")},
+       |${bqExCte("dex", "bqdelta")},
+       |${bqCodesCtes("d", "dex", "thr", "bqdelta")},
+       |${bqMeltCte("bw", "codes")},
+       |${bqMeltCte("dw", "dcodes")},
+       |${upsertAuditSql(bqUnits("bw"), bqUnits("dw"), Seq("w", "pc"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
-    * `bqCodec`: encode chain + carve arithmetic; the Spark side recounts
-    * n_live from the physically rewritten overlay, so a hash match proves
-    * the rewrite.
+    * `bqCodec`: encode chain, then the [[deleteAuditSql]] split per
+    * (word, popcount).
     */
   private def bqDeleteSql: String =
     s"""$bqCtes,
-       |bw AS (
-       |${bqMeltCte("codes")})
-       |SELECT w, CAST(bit_count(word) AS INT) AS pc, count(*) AS n_base,
-       |  CAST(sum(CASE WHEN vec_id % ${Similarity.pqDelMod} = ${Similarity.pqDelRem} THEN 1 ELSE 0 END) AS BIGINT) AS n_dead,
-       |  CAST(sum(CASE WHEN vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem} THEN 1 ELSE 0 END) AS BIGINT) AS n_live
-       |FROM bw GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+       |${bqMeltCte("bw", "codes")}
+       |${deleteAuditSql(bqUnits("bw"), Seq("w", "pc"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simBqHammingDeleted]]:
-    * the [[bqHammingSql]] chain with candidates restricted to live
-    * vectors (the carve arithmetic) — queries still come from the base
-    * table, deleted vectors may query but can never surface.
+    * the [[bqHammingSqlOver]] chain with candidates restricted to live
+    * vectors (the carve arithmetic).
     */
   private def bqHammingDeletedSql: String =
-    s"""$bqCtes,
-       |q AS (SELECT vec_id AS qid, c0 AS q0, c1 AS q1, c2 AS q2, c3 AS q3, c4 AS q4, c5 AS q5, c6 AS q6, c7 AS q7 FROM codes WHERE vec_id < 5),
-       |h AS (
-       |  SELECT q.qid, c.vec_id,
-       |    CAST(bit_count(xor(q.q0, c.c0)) AS INT) + CAST(bit_count(xor(q.q1, c.c1)) AS INT) +
-       |    CAST(bit_count(xor(q.q2, c.c2)) AS INT) + CAST(bit_count(xor(q.q3, c.c3)) AS INT) +
-       |    CAST(bit_count(xor(q.q4, c.c4)) AS INT) + CAST(bit_count(xor(q.q5, c.c5)) AS INT) +
-       |    CAST(bit_count(xor(q.q6, c.c6)) AS INT) + CAST(bit_count(xor(q.q7, c.c7)) AS INT) AS hamming
-       |  FROM q JOIN codes c ON c.vec_id <> q.qid AND c.vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}),
-       |hr AS (
-       |  SELECT qid, vec_id,
-       |    row_number() OVER (PARTITION BY qid ORDER BY hamming ASC, vec_id ASC) AS hrnk
-       |  FROM h),
-       |short AS (SELECT qid, vec_id FROM hr WHERE hrnk <= 50),
-       |rr AS (
-       |  SELECT s.qid, s.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-       |      (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)) * (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)))), (x, y) -> x + y) AS dist
-       |  FROM short s
-       |  JOIN embeddings e ON e.vec_id = s.vec_id
-       |  JOIN embeddings q ON q.vec_id = s.qid),
-       |ranked2 AS (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
-       |  FROM rr)
-       |SELECT qid, vec_id, dist, rnk FROM ranked2 WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+    bqHammingSqlOver(flatLivePred("c.vec_id"))
 
   /** DuckDB twin of [[graft.queries.Similarity.simBqDrift]]: the shared
     * encode chain gives the standing codes, candidate thresholds
@@ -1200,50 +1247,12 @@ object SparkEntry {
     */
   private def bqDriftSql: String =
     s"""$bqCtes,
-       |bqdelta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |eex AS (
-       |  SELECT vec_id, i.d AS d, CAST(embedding[i.d + 1] AS DOUBLE) AS x
-       |  FROM (SELECT vec_id, embedding FROM embeddings
-       |        UNION ALL SELECT vec_id, embedding FROM bqdelta) u,
-       |       (SELECT unnest(range(0, 64)) AS d) i),
-       |ranked_new AS (
-       |  SELECT d, x,
-       |    row_number() OVER (PARTITION BY d ORDER BY x ASC, vec_id ASC) AS rn,
-       |    count(*) OVER (PARTITION BY d) AS n
-       |  FROM eex),
-       |nthr AS (
-       |  SELECT d, j.j AS j, x AS t
-       |  FROM ranked_new, (SELECT unnest(range(1, 8)) AS j) j
-       |  WHERE rn = (j.j * n) // 8 + 1),
-       |nbits AS (
-       |  SELECT e.vec_id, (e.d * 7 + t.j - 1) AS pos
-       |  FROM ex e JOIN nthr t ON e.d = t.d AND e.x > t.t),
-       |ncodes AS (
-       |  SELECT v.vec_id,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 0 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c0,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 1 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c1,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 2 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c2,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 3 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c3,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 4 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c4,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 5 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c5,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 6 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c6,
-       |    COALESCE(bit_or(CASE WHEN pos // 56 = 7 THEN CAST(1 AS BIGINT) << CAST(pos % 56 AS INT) END), 0) AS c7
-       |  FROM (SELECT DISTINCT vec_id FROM embeddings) v
-       |  LEFT JOIN nbits b ON v.vec_id = b.vec_id
-       |  GROUP BY 1),
-       |bw AS (
-       |  SELECT vec_id, CAST(w.w AS INT) AS w,
-       |    CASE w.w WHEN 0 THEN c0 WHEN 1 THEN c1 WHEN 2 THEN c2 WHEN 3 THEN c3
-       |             WHEN 4 THEN c4 WHEN 5 THEN c5 WHEN 6 THEN c6 ELSE c7 END AS word
-       |  FROM codes, (SELECT unnest(range(0, 8)) AS w) w),
-       |nw AS (
-       |  SELECT vec_id, CAST(w.w AS INT) AS w,
-       |    CASE w.w WHEN 0 THEN c0 WHEN 1 THEN c1 WHEN 2 THEN c2 WHEN 3 THEN c3
-       |             WHEN 4 THEN c4 WHEN 5 THEN c5 WHEN 6 THEN c6 ELSE c7 END AS word
-       |  FROM ncodes, (SELECT unnest(range(0, 8)) AS w) w),
+       |${deltaBatchCte("bqdelta")},
+       |${bqExCte("eex", "(SELECT vec_id, embedding FROM embeddings UNION ALL SELECT vec_id, embedding FROM bqdelta) u")},
+       |${bqThrCtes("n", "eex")},
+       |${bqCodesCtes("n", "ex", "nthr", "embeddings")},
+       |${bqMeltCte("bw", "codes")},
+       |${bqMeltCte("nw", "ncodes")},
        |fl AS (
        |  SELECT b.vec_id, b.w, CAST(bit_count(xor(b.word, n.word)) AS INT) AS flips
        |  FROM bw b JOIN nw n ON b.vec_id = n.vec_id AND b.w = n.w)
@@ -1258,20 +1267,7 @@ object SparkEntry {
     */
   private def pqRerankSql: String =
     s"""$pqAdcCtes,
-       |short AS (SELECT qid, vec_id FROM ranked WHERE rnk <= ${Similarity.pqShortlist}),
-       |rr AS (
-       |  SELECT s.qid, s.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-       |      (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)) * (CAST(q.embedding[i] AS DOUBLE) - CAST(e.embedding[i] AS DOUBLE)))), (x, y) -> x + y) AS dist
-       |  FROM short s
-       |  JOIN embeddings e ON e.vec_id = s.vec_id
-       |  JOIN embeddings q ON q.vec_id = s.qid),
-       |ranked2 AS (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
-       |  FROM rr)
-       |SELECT qid, vec_id, dist, rnk FROM ranked2 WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+       |${exactRerankSql("ranked", Similarity.pqShortlist)}""".stripMargin
 
   /** One oracle text for j5_interval_overlap AND j5_salted_overlap: the
     * salted variant spreads the hot nation key over 8 reducers without
@@ -1325,7 +1321,7 @@ object SparkEntry {
     * the cosine probe search and the composed IVFPQ search.
     */
   private def ivfRankCtes: String =
-    """e AS (
+    s"""e AS (
       |  SELECT vec_id, label, embedding,
       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
       |  FROM embeddings),
@@ -1333,12 +1329,35 @@ object SparkEntry {
       |  SELECT cid AS c_label, centroid,
       |    sqrt(list_reduce(list_transform(range(1, 65), i -> centroid[i] * centroid[i]), (x, y) -> x + y)) AS cnorm
       |  FROM c3),
-      |rk AS (
-      |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-      |  FROM (
-      |    SELECT vec_id, label, embedding, vnorm, c_label,
-      |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-      |    FROM e, cn))""".stripMargin
+      |${cellRankCte("rk", "vec_id, label, embedding, vnorm", "e", "cn")}""".stripMargin
+
+  /** The cosine cell ranking of `src` (vec_id, embedding, vnorm, plus
+    * `cols`) against centroids `cents` (c_label, centroid, cnorm):
+    * `crnk` orders cells by cosine with the c_label tiebreak — ONE
+    * assignment rule for the corpus (`rk`), the delta (`drk`) and the
+    * retrained quantizer (`nrk`).
+    */
+  private def cellRankCte(name: String, cols: String, src: String,
+      cents: String): String =
+    s"""$name AS (
+       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
+       |  FROM (
+       |    SELECT $cols, c_label,
+       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
+       |    FROM $src, $cents))""".stripMargin
+
+  /** The IVF delta cell assignment under the frozen `cn` centroids: the
+    * delta batch (`delta`), its norms (`de`) and its cell ranking
+    * (`drk`) — one block for the ivf/ivfpq upserts, the drift audit and
+    * the retrain chain.
+    */
+  private def ivfDeltaCellCtes: String =
+    s"""${deltaBatchCte("delta")},
+       |de AS (
+       |  SELECT vec_id, embedding,
+       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
+       |  FROM delta),
+       |${cellRankCte("drk", "vec_id", "de", "cn")}""".stripMargin
 
   /** IVF cosine search over a member filter — `TRUE` is the full-corpus
     * search ([[ivfAnnSql]]); the delete twin substitutes the live-member
@@ -1983,11 +2002,7 @@ object SparkEntry {
          |${kcorePeelCtes(Similarity.kcoreK, Similarity.kcoreRounds)}"""
         .stripMargin
     graphSearchSqlOver(
-      s"""qsrc AS MATERIALIZED (
-         |  SELECT -vec_id - 1 AS vec_id,
-         |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-         |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-         |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0)""".stripMargin,
+      deltaBatchCte("qsrc", norm = true, materialized = true),
       k,
       extraCtes = graphDeleteCtes + ",",
       tailCtes = tail,
@@ -2261,25 +2276,21 @@ object SparkEntry {
 
   /** DuckDB twin of [[graft.queries.Similarity.simRerankCurve]]: the
     * standing PQ chain's full ADC ranking (pqAdcCtes `ranked`) and the
-    * standing OPQ chain's (opqIndexCtes + the opqAdcIndexedSql ADC text)
+    * standing OPQ chain's (opqIndexCtes + the shared [[adcRankCtes]])
     * cut at max(L), exact squared-L2 for every shortlist row (raw
     * corpus / rotated carve respectively), per-(qid, L) re-ranked top-5
     * by prefix, and the probe-curve-style truth join — all-integer
     * outputs.
     */
   private def rerankCurveSql: String = {
-    val sub = Similarity.pqSubDims
     val lList = Similarity.rerankCurveLs.mkString(", ")
     val lMax = Similarity.rerankCurveLs.max
-    def l2(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-         |      (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
     def truthCte(name: String, rel: String, vcol: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT qid, vec_id FROM (
          |    SELECT q.vec_id AS qid, e.vec_id,
          |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        ${l2(s"q.$vcol", s"e.$vcol")} ASC, e.vec_id ASC) AS rnk
+         |        ${exactL2Sql(s"q.$vcol", s"e.$vcol")} ASC, e.vec_id ASC) AS rnk
          |    FROM $rel e, $rel q
          |    WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id)
          |  WHERE rnk <= 5)""".stripMargin
@@ -2287,7 +2298,7 @@ object SparkEntry {
         vcol: String, truth: String): String =
       s"""${fam}_ex AS MATERIALIZED (
          |  SELECT r.qid, r.vec_id, r.rnk AS adc_rnk,
-         |    ${l2(s"q.$vcol", s"e2.$vcol")} AS dist
+         |    ${exactL2Sql(s"q.$vcol", s"e2.$vcol")} AS dist
          |  FROM $rankedRel r
          |  JOIN $rel e2 ON e2.vec_id = r.vec_id
          |  JOIN $rel q ON q.vec_id = r.qid
@@ -2308,19 +2319,7 @@ object SparkEntry {
          |  GROUP BY t.l)""".stripMargin
     s"""$pqAdcCtes,
        |$opqIndexCtes,
-       |oqqdt AS (
-       |  SELECT q.vec_id AS qid, b.s, b.cid,
-       |    ${pqSlicedL2("q.vec", "b.centroid", s"b.s * $sub")} AS qdist
-       |  FROM rotv q, oqbooks b WHERE q.vec_id < 5),
-       |oqadist AS (
-       |  SELECT qid, c.vec_id AS vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM oqcodes c JOIN oqqdt ON c.s = oqqdt.s AND c.code = oqqdt.cid AND c.vec_id <> oqqdt.qid
-       |  GROUP BY 1, 2),
-       |oqranked AS (
-       |  SELECT qid, vec_id,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |  FROM oqadist),
+       |${adcRankCtes("oq", "oqcodes", "oqqdt")},
        |ls AS (SELECT unnest([$lList]) AS l),
        |${truthCte("pq_truth", "embeddings", "embedding")},
        |${truthCte("oq_truth", "rotv", "vec")},
@@ -2448,8 +2447,7 @@ object SparkEntry {
       .mkString(",\n")
     val unionAll = fams.map { case (n, _, _) => s"SELECT * FROM m_$n" }
       .mkString("\nUNION ALL\n")
-    s"""WITH ${liveTruth("t_flat",
-        s"vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}")},
+    s"""WITH ${liveTruth("t_flat", flatLivePred("vec_id"))},
        |${liveTruth("t_graph",
         s"vec_id % ${Similarity.graphDelMod} <> ${Similarity.graphDelRem}")},
        |$ivfTruth,
@@ -2477,11 +2475,7 @@ object SparkEntry {
          |      SELECT vec_id, embedding,
          |        sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS norm
          |      FROM embeddings),
-         |    ldel AS (
-         |      SELECT -vec_id - 1 AS vec_id,
-         |        list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-         |        sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-         |      FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+         |    ${deltaBatchCte("ldel", norm = true)},
          |    lm AS ($memberSel),
          |    lq AS (SELECT vec_id AS qid, embedding AS qvec, norm AS qnorm FROM le WHERE vec_id < 5),
          |    ls AS (
@@ -2543,11 +2537,7 @@ object SparkEntry {
          |  UNION SELECT qid AS v, vid AS u FROM ulinks
          |  UNION SELECT vid AS v, qid AS u FROM ulinks)""".stripMargin
     graphSearchSqlOver(
-      s"""qsrc AS MATERIALIZED (
-         |  SELECT -vec_id - 1 AS vec_id,
-         |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-         |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-         |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0)""".stripMargin,
+      deltaBatchCte("qsrc", norm = true, materialized = true),
       k,
       extraCtes = graphDeleteCtes + ",",
       tailCtes = tail,
@@ -2594,11 +2584,7 @@ object SparkEntry {
     s"""WITH $knnDescentCtes,
        |$graphDeleteCtes,
        |graph0 AS (SELECT src AS v, dst AS u FROM gedges),
-       |qdel AS MATERIALIZED (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+       |${deltaBatchCte("qdel", norm = true, materialized = true)},
        |uent AS (SELECT min(vec_id) AS ev FROM embeddings),
        |uf0 AS MATERIALIZED (SELECT vec_id AS qid, ev AS vid FROM qdel, uent),
        |${hopChain("uf", "graph0", "qdel", "e", beam, hops)},
@@ -2874,11 +2860,7 @@ object SparkEntry {
          |    FROM $pairs p JOIN e2 a ON a.vec_id = p.src JOIN e2 b ON b.vec_id = p.dst""".stripMargin
     s"""WITH $knnDescentCtes,
        |graph0 AS MATERIALIZED (SELECT src AS v, dst AS u FROM $g),
-       |qdel AS MATERIALIZED (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+       |${deltaBatchCte("qdel", norm = true, materialized = true)},
        |uent AS (SELECT min(vec_id) AS ev FROM embeddings),
        |uf0 AS MATERIALIZED (SELECT vec_id AS qid, ev AS vid FROM qdel, uent),
        |${hopChain("uf", "graph0", "qdel", "e", beam, hops)},
@@ -2929,11 +2911,7 @@ object SparkEntry {
     * discovery from first principles.
     */
   private def graphUpsertSql: String = graphSearchSqlOver(
-    s"""qsrc AS MATERIALIZED (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(embedding[65 - i] AS DOUBLE)), (x, y) -> x + y)) AS norm
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0)""".stripMargin,
+    deltaBatchCte("qsrc", norm = true, materialized = true),
     Similarity.knnDescentK)
 
   /** The shared beam-walk oracle generator — one hop-unrolled text over a
@@ -3225,7 +3203,7 @@ object SparkEntry {
   /** DuckDB twin of [[graft.queries.Similarity.simIvfPq]]: the kmeansCtes
     * coarse chain + the pqAdcCtes fine chain composed in ONE statement —
     * probed-cell candidate pairs filter the ADC ranking, then the
-    * pqRerankSql exact-refine tail runs on the bounded shortlist. Every
+    * [[exactRerankSql]] tail runs on the bounded shortlist. Every
     * sub-chain is the verbatim generator its standalone oracle uses, so
     * the composition cannot drift from the parts.
     */
@@ -3251,20 +3229,7 @@ object SparkEntry {
        |  SELECT a.qid, a.vec_id, a.adc,
        |    row_number() OVER (PARTITION BY a.qid ORDER BY a.adc ASC, a.vec_id ASC) AS rnk
        |  FROM adist a JOIN cand ON a.qid = cand.qid AND a.vec_id = cand.vec_id),
-       |short2 AS (SELECT qid, vec_id FROM iadc WHERE rnk <= ${Similarity.pqShortlist}),
-       |rr2 AS (
-       |  SELECT s.qid, s.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-       |      (CAST(q.embedding[i] AS DOUBLE) - CAST(e2.embedding[i] AS DOUBLE)) * (CAST(q.embedding[i] AS DOUBLE) - CAST(e2.embedding[i] AS DOUBLE)))), (x, y) -> x + y) AS dist
-       |  FROM short2 s
-       |  JOIN embeddings e2 ON e2.vec_id = s.vec_id
-       |  JOIN embeddings q ON q.vec_id = s.qid),
-       |ranked3 AS (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
-       |  FROM rr2)
-       |SELECT qid, vec_id, dist, rnk FROM ranked3 WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+       |${exactRerankSql("iadc", Similarity.pqShortlist)}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simIvfPqResidual]] —
     * FAISS's default `by_residual=true` IVFPQ: the kmeansCtes coarse
@@ -3311,30 +3276,8 @@ object SparkEntry {
        |  SELECT q.qid, q.cell, b.s, b.cid,
        |    ${pqSlicedL2("q.qrvec", "b.centroid", s"b.s * $sub")} AS qdist
        |  FROM qres q, rbooks b),
-       |radist AS (
-       |  SELECT qd.qid, c.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qd.qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM rcodes c JOIN rqdt qd
-       |    ON c.s = qd.s AND c.code = qd.cid AND c.cell = qd.cell AND c.vec_id <> qd.qid
-       |  GROUP BY 1, 2),
-       |rshort AS (
-       |  SELECT qid, vec_id FROM (
-       |    SELECT qid, vec_id,
-       |      row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |    FROM radist) WHERE rnk <= ${Similarity.pqShortlist}),
-       |rr2 AS (
-       |  SELECT s.qid, s.vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-       |      (CAST(q.embedding[i] AS DOUBLE) - CAST(e2.embedding[i] AS DOUBLE)) * (CAST(q.embedding[i] AS DOUBLE) - CAST(e2.embedding[i] AS DOUBLE)))), (x, y) -> x + y) AS dist
-       |  FROM rshort s
-       |  JOIN embeddings e2 ON e2.vec_id = s.vec_id
-       |  JOIN embeddings q ON q.vec_id = s.qid),
-       |ranked3 AS (
-       |  SELECT qid, vec_id, dist,
-       |    row_number() OVER (PARTITION BY qid ORDER BY dist ASC, vec_id ASC) AS rnk
-       |  FROM rr2)
-       |SELECT qid, vec_id, dist, rnk FROM ranked3 WHERE rnk <= 5
-       |ORDER BY qid, rnk""".stripMargin
+       |${adcRankCtes("r", "rcodes", "rqdt", extraOn = " AND c.cell = qd.cell")},
+       |${exactRerankSql("rranked", Similarity.pqShortlist)}""".stripMargin
   }
 
   /** DuckDB twin of [[graft.queries.Similarity.simOpqRotate]]: the
@@ -3417,69 +3360,29 @@ object SparkEntry {
     s"""${opqRotPair("aniso", "rotv", "embeddings")},
        |$chains,
        |oqbooks AS ($books),
-       |oqcodes AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT e.vec_id, b.s, b.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id, b.s ORDER BY
-       |        ${pqSlicedL2("e.vec", "b.centroid", s"b.s * $sub")} ASC,
-       |        b.cid ASC) AS rn
-       |    FROM rotv e, oqbooks b)
-       |  WHERE rn = 1)""".stripMargin
-  }
-
-  private def opqAdcIndexedSql: String = {
-    val sub = Similarity.pqSubDims
-    s"""WITH $opqIndexCtes,
+       |${pqEncodeCte("oqcodes", "rotv", "vec", "oqbooks")},
        |oqqdt AS (
        |  SELECT q.vec_id AS qid, b.s, b.cid,
        |    ${pqSlicedL2("q.vec", "b.centroid", s"b.s * $sub")} AS qdist
-       |  FROM rotv q, oqbooks b WHERE q.vec_id < 5),
-       |oqadist AS (
-       |  SELECT qid, c.vec_id AS vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM oqcodes c JOIN oqqdt ON c.s = oqqdt.s AND c.code = oqqdt.cid AND c.vec_id <> oqqdt.qid
-       |  GROUP BY 1, 2)
-       |SELECT qid, vec_id, adc, rnk FROM (
-       |  SELECT qid, vec_id, adc,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |  FROM oqadist)
-       |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
+       |  FROM rotv q, oqbooks b WHERE q.vec_id < 5)""".stripMargin
   }
+
+  private def opqAdcIndexedSql: String =
+    adcSearchSql(opqIndexCtes, "oq", "oqcodes", "oqqdt", "TRUE")
 
   /** DuckDB twin of [[graft.queries.Similarity.simOpqAdcDeleted]]: the
-    * shared rotated chain with the code table filtered to the live
-    * carve — the opqAdcIndexedSql search text over survivors only.
+    * shared rotated chain with candidates restricted to the live carve —
+    * the opqAdcIndexedSql search text over survivors only.
     */
-  private def opqAdcDeletedSql: String = {
-    val sub = Similarity.pqSubDims
-    s"""WITH $opqIndexCtes,
-       |oqlive AS (SELECT * FROM oqcodes
-       |  WHERE vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}),
-       |oqqdt AS (
-       |  SELECT q.vec_id AS qid, b.s, b.cid,
-       |    ${pqSlicedL2("q.vec", "b.centroid", s"b.s * $sub")} AS qdist
-       |  FROM rotv q, oqbooks b WHERE q.vec_id < 5),
-       |oqadist AS (
-       |  SELECT qid, c.vec_id AS vec_id,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qdist ORDER BY c.s)), (x, y) -> x + y) AS adc
-       |  FROM oqlive c JOIN oqqdt ON c.s = oqqdt.s AND c.code = oqqdt.cid AND c.vec_id <> oqqdt.qid
-       |  GROUP BY 1, 2)
-       |SELECT qid, vec_id, adc, rnk FROM (
-       |  SELECT qid, vec_id, adc,
-       |    row_number() OVER (PARTITION BY qid ORDER BY adc ASC, vec_id ASC) AS rnk
-       |  FROM oqadist)
-       |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
-  }
+  private def opqAdcDeletedSql: String =
+    adcSearchSql(opqIndexCtes, "oq", "oqcodes", "oqqdt", flatLivePred("c.vec_id"))
 
   /** The reversed negative-key delta carved + rotated under the FROZEN
     * Hadamard — the admission path of [[opqUpsertSql]] (raw reversal)
     * and, with the 5/4 amplitude, [[opqDriftSql]].
     */
   private def opqDeltaCtes(amp: String): String =
-    s"""oqdelta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE)$amp) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+    s"""${deltaBatchCte("oqdelta", x => s"CAST($x AS DOUBLE)$amp")},
        |${opqRotPair("oqdaniso", "oqdrot", "oqdelta")},
        |oqdcodes AS (
        |  SELECT vec_id, s, cid AS code, dist FROM (
@@ -3501,34 +3404,15 @@ object SparkEntry {
   private def opqUpsertSql: String =
     s"""WITH $opqIndexCtes,
        |${opqDeltaCtes("")},
-       |bc AS (SELECT s, code, count(*) AS n_base FROM oqcodes GROUP BY 1, 2),
-       |dc AS (SELECT s, code, count(*) AS n_new, min(vec_id) AS first_new_id
-       |       FROM oqdcodes GROUP BY 1, 2)
-       |SELECT coalesce(bc.s, dc.s) AS s, coalesce(bc.code, dc.code) AS code,
-       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
-       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
-       |FROM bc FULL OUTER JOIN dc ON bc.s = dc.s AND bc.code = dc.code
-       |ORDER BY s, code""".stripMargin
+       |${upsertAuditSql("oqcodes", "oqdcodes", Seq("s", "code"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
-    * `opqCodec`: the shared rotated chain, then per-(subspace, codeword)
-    * base / dead / live occupancy with the dead set from the carve
-    * arithmetic — the Spark side recounts n_live from the physically
-    * rewritten overlay, so a hash match proves the rewrite's content (the
-    * pqDeleteSql treatment).
+    * `opqCodec`: the shared rotated chain, then the [[deleteAuditSql]]
+    * split per (subspace, codeword) — the pqDeleteSql treatment.
     */
   private def opqDeleteSql: String =
-    s"""WITH $opqIndexCtes,
-       |bc AS (SELECT s, code, count(*) AS n_base FROM oqcodes GROUP BY 1, 2),
-       |dd AS (SELECT s, code, count(*) AS n_dead FROM oqcodes
-       |       WHERE vec_id % ${Similarity.pqDelMod} = ${Similarity.pqDelRem} GROUP BY 1, 2),
-       |lv AS (SELECT s, code, count(*) AS n_live FROM oqcodes
-       |       WHERE vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem} GROUP BY 1, 2)
-       |SELECT bc.s, bc.code, n_base,
-       |  coalesce(n_dead, 0) AS n_dead, coalesce(n_live, 0) AS n_live
-       |FROM bc LEFT JOIN dd ON bc.s = dd.s AND bc.code = dd.code
-       |LEFT JOIN lv ON bc.s = lv.s AND bc.code = lv.code
-       |ORDER BY bc.s, bc.code""".stripMargin
+    s"""WITH $opqIndexCtes
+       |${deleteAuditSql("oqcodes", Seq("s", "code"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simOpqDrift]]: the
     * standing chain re-assigned WITH the winning sub-distance for the
@@ -3572,29 +3456,9 @@ object SparkEntry {
   private def ivfPqUpsertSql: String =
     s"""WITH ${kmeansCtes()},
        |$ivfRankCtes,
-       |delta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |de AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
-       |  FROM delta),
-       |drk AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-       |  FROM (
-       |    SELECT vec_id, c_label,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-       |    FROM de, cn)),
+       |$ivfDeltaCellCtes,
        |${pqAdcCtes.stripPrefix("WITH ")},
-       |dcodes AS (
-       |  SELECT vec_id, s, cid AS code FROM (
-       |    SELECT d.vec_id, b.s, b.cid,
-       |      row_number() OVER (PARTITION BY d.vec_id, b.s ORDER BY
-       |        ${pqSlicedL2("d.embedding", "b.centroid", s"b.s * ${Similarity.pqSubDims}")} ASC,
-       |        b.cid ASC) AS rn
-       |    FROM delta d, books b)
-       |  WHERE rn = 1),
+       |${pqEncodeCte("dcodes", "delta", "embedding", "books")},
        |bcell AS (SELECT vec_id, c_label AS cell FROM rk WHERE crnk = 1),
        |dcell AS (SELECT vec_id, c_label AS cell FROM drk WHERE crnk = 1),
        |bst AS (
@@ -3622,29 +3486,9 @@ object SparkEntry {
   private def ivfUpsertSql: String =
     s"""WITH ${kmeansCtes()},
        |$ivfRankCtes,
-       |delta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |de AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
-       |  FROM delta),
-       |drk AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-       |  FROM (
-       |    SELECT vec_id, c_label,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-       |    FROM de, cn)),
-       |bc AS (SELECT c_label AS cell, count(*) AS n_base FROM rk WHERE crnk = 1 GROUP BY 1),
-       |dc AS (
-       |  SELECT c_label AS cell, count(*) AS n_new, min(vec_id) AS first_new_id
-       |  FROM drk WHERE crnk = 1 GROUP BY 1)
-       |SELECT coalesce(bc.cell, dc.cell) AS cell,
-       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
-       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
-       |FROM bc FULL OUTER JOIN dc ON bc.cell = dc.cell
-       |ORDER BY cell""".stripMargin
+       |$ivfDeltaCellCtes,
+       |${upsertAuditSql("(SELECT c_label AS cell FROM rk WHERE crnk = 1)",
+          "(SELECT vec_id, c_label AS cell FROM drk WHERE crnk = 1)", Seq("cell"))}""".stripMargin
 
   /** The shared MERGE carving CTEs (base snapshot + deterministic updates
     * batch) — ONE text for the pipeline_merge_snapshot classify oracle
@@ -3744,14 +3588,11 @@ object SparkEntry {
     */
   private def kmeansPpSql: String = {
     val k = Similarity.kppK
-    def l2(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-         |      (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
     val steps = (2 to k).map { i =>
       s"""s$i AS (SELECT $i AS rank, vec_id, embedding, md AS spread
          |  FROM d${i - 1} ORDER BY md DESC, vec_id ASC LIMIT 1),
          |d$i AS (SELECT d.vec_id, d.embedding,
-         |  least(d.md, ${l2("d.embedding", "s.embedding")}) AS md
+         |  least(d.md, ${exactL2Sql("d.embedding", "s.embedding")}) AS md
          |  FROM d${i - 1} d, s$i s)""".stripMargin
     }.mkString(",\n")
     val seedUnion = (1 to k)
@@ -3760,15 +3601,15 @@ object SparkEntry {
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
        |s1 AS (SELECT 1 AS rank, vec_id, embedding, CAST(NULL AS DOUBLE) AS spread
        |  FROM e ORDER BY vec_id ASC LIMIT 1),
-       |d1 AS (SELECT e.vec_id, e.embedding, ${l2("e.embedding", "s.embedding")} AS md
+       |d1 AS (SELECT e.vec_id, e.embedding, ${exactL2Sql("e.embedding", "s.embedding")} AS md
        |  FROM e, s1 s),
        |$steps,
        |seeds AS ($seedUnion),
        |asg AS (
        |  SELECT vec_id, rank, d FROM (
-       |    SELECT e.vec_id, s.rank, ${l2("e.embedding", "s.embedding")} AS d,
+       |    SELECT e.vec_id, s.rank, ${exactL2Sql("e.embedding", "s.embedding")} AS d,
        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${l2("e.embedding", "s.embedding")} ASC, s.rank ASC) AS rn
+       |        ${exactL2Sql("e.embedding", "s.embedding")} ASC, s.rank ASC) AS rn
        |    FROM e, seeds s)
        |  WHERE rn = 1),
        |cells AS (
@@ -3790,9 +3631,6 @@ object SparkEntry {
     val k = Similarity.kppK
     val ell = Similarity.kparEll
     val rounds = Similarity.kparRounds
-    def l2(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i ->
-         |      (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (x, y) -> x + y)""".stripMargin
     val roundCtes = (1 to rounds).map { r =>
       s"""s$r AS (
          |  SELECT vec_id, embedding FROM (
@@ -3803,12 +3641,12 @@ object SparkEntry {
          |c$r AS MATERIALIZED (SELECT vec_id, embedding FROM c${r - 1}
          |  UNION ALL SELECT vec_id, embedding FROM s$r),
          |d$r AS MATERIALIZED (
-         |  SELECT e.vec_id, e.embedding, min(${l2("e.embedding", "c.embedding")}) AS md
+         |  SELECT e.vec_id, e.embedding, min(${exactL2Sql("e.embedding", "c.embedding")}) AS md
          |  FROM e, c$r c GROUP BY e.vec_id, e.embedding)""".stripMargin
     }.mkString(",\n")
     val refineCtes = (2 to k).map { i =>
       s"""st$i AS (
-         |  SELECT r.vec_id, min(${l2("r.embedding", "c.embedding")}) AS mind
+         |  SELECT r.vec_id, min(${exactL2Sql("r.embedding", "c.embedding")}) AS mind
          |  FROM wt r, chs${i - 1} c
          |  WHERE r.vec_id NOT IN (SELECT vec_id FROM chs${i - 1})
          |  GROUP BY r.vec_id),
@@ -3826,14 +3664,14 @@ object SparkEntry {
       .mkString(" UNION ALL ")
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings),
        |c0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id ASC LIMIT 1),
-       |d0 AS (SELECT e.vec_id, e.embedding, ${l2("e.embedding", "c.embedding")} AS md
+       |d0 AS (SELECT e.vec_id, e.embedding, ${exactL2Sql("e.embedding", "c.embedding")} AS md
        |  FROM e, c0 c),
        |$roundCtes,
        |asgc AS (
        |  SELECT pid, cid FROM (
        |    SELECT e.vec_id AS pid, c.vec_id AS cid,
        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${l2("e.embedding", "c.embedding")} ASC, c.vec_id ASC) AS rn
+       |        ${exactL2Sql("e.embedding", "c.embedding")} ASC, c.vec_id ASC) AS rn
        |    FROM e, c$rounds c)
        |  WHERE rn = 1),
        |wt AS MATERIALIZED (
@@ -3851,9 +3689,9 @@ object SparkEntry {
        |seeds AS ($seedUnion),
        |asg AS (
        |  SELECT vec_id, rank, d FROM (
-       |    SELECT e.vec_id, s.rank, ${l2("e.embedding", "s.embedding")} AS d,
+       |    SELECT e.vec_id, s.rank, ${exactL2Sql("e.embedding", "s.embedding")} AS d,
        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |        ${l2("e.embedding", "s.embedding")} ASC, s.rank ASC) AS rn
+       |        ${exactL2Sql("e.embedding", "s.embedding")} ASC, s.rank ASC) AS rn
        |    FROM e, seeds s)
        |  WHERE rn = 1),
        |cells AS (
@@ -3872,20 +3710,7 @@ object SparkEntry {
          |      (CAST($v[i] AS DOUBLE) - $c[i]) * (CAST($v[i] AS DOUBLE) - $c[i]))), (x, y) -> x + y)""".stripMargin
     s"""WITH ${kmeansCtes()},
        |$ivfRankCtes,
-       |delta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |de AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
-       |  FROM delta),
-       |drk AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-       |  FROM (
-       |    SELECT vec_id, c_label,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-       |    FROM de, cn)),
+       |$ivfDeltaCellCtes,
        |bd AS (
        |  SELECT rk.vec_id, rk.c_label AS cell,
        |    ${l2Fold("rk.embedding", "cn.centroid")} AS d2
@@ -3930,10 +3755,7 @@ object SparkEntry {
          |      (CAST($v[i] AS DOUBLE) - $c[i]) * (CAST($v[i] AS DOUBLE) - $c[i]))), (x, y) -> x + y)""".stripMargin
     val rounds = Similarity.ivfRetrainRounds
     require(rounds == 2, "ivfRetrainCtes unrolls exactly 2 warm rounds")
-    s"""delta AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> embedding[65 - i]) AS embedding
-       |  FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
+    s"""$ivfDeltaCellCtes,
        |uni AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL SELECT vec_id, embedding FROM delta),
@@ -3975,18 +3797,7 @@ object SparkEntry {
        |  SELECT vec_id, embedding,
        |    sqrt(list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)), (x, y) -> x + y)) AS vnorm
        |  FROM uni),
-       |drk AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-       |  FROM (
-       |    SELECT vec_id, c_label,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-       |    FROM (SELECT * FROM ue WHERE vec_id < 0), cn)),
-       |nrk AS (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label ASC) AS crnk
-       |  FROM (
-       |    SELECT vec_id, c_label,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(embedding[i] AS DOUBLE) * centroid[i]), (x, y) -> x + y) / (vnorm * cnorm) AS cos_c
-       |    FROM ue, cn2)),
+       |${cellRankCte("nrk", "vec_id", "ue", "cn2")},
        |bp AS (SELECT vec_id, c_label AS cell FROM rk WHERE crnk = 1),
        |om AS (
        |  SELECT vec_id, c_label AS cell FROM rk WHERE crnk = 1
@@ -4568,20 +4379,17 @@ object SparkEntry {
 
   /** DuckDB twin of [[graft.queries.Similarity.simSqInt8]] AND its
     * standing-index serve (bit-identical by the shared sqSearch tail
-    * and frozen persisted scale/codes — one text, the bm25TopkSql rule).
-    */
-  /** SQ int8 search over a member predicate — `TRUE` is the full-corpus
-    * search; the delete twin substitutes the live carve so the
-    * post-delete oracle is the SAME text over the SAME frozen-scale
-    * quantization chain (the ivfAnnSqlOver one-generator rule).
+    * and frozen persisted scale/codes — one text, the bm25TopkSql rule),
+    * over a member predicate — `TRUE` is the full-corpus search; the
+    * delete twin substitutes the live carve so the post-delete oracle is
+    * the SAME text over the SAME frozen-scale quantization chain (the
+    * ivfAnnSqlOver one-generator rule).
     */
   private def sqInt8SqlOver(memberPred: String): String =
-      s"""WITH sc AS (
-        |  SELECT CAST(127 AS DOUBLE) / max(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))) AS s
-        |  FROM embeddings),
+      s"""WITH sc AS (SELECT $sqScaleSql AS s FROM embeddings),
         |qn AS (
         |  SELECT vec_id, label,
-        |    list_transform(embedding, x -> CAST(greatest(-127, least(127, floor(CAST(x AS DOUBLE) * sc.s))) AS BIGINT)) AS qe
+        |    list_transform(embedding, x -> ${sqQuantSql("x", "sc.s")}) AS qe
         |  FROM embeddings, sc),
         |n AS (
         |  SELECT vec_id, label, qe,
@@ -4604,22 +4412,28 @@ object SparkEntry {
     * rewritten overlay must serve exactly the live search from first
     * principles.
     */
-  private def sqInt8DeletedSql: String =
-    sqInt8SqlOver(
-      s"vec_id % ${Similarity.pqDelMod} <> ${Similarity.pqDelRem}")
+  private def sqInt8DeletedSql: String = sqInt8SqlOver(flatLivePred("vec_id"))
 
+  /** The int8 scale of the `embedding` rows in scope: 127 over the
+    * largest absolute element.
+    */
+  private val sqScaleSql: String =
+    "CAST(127 AS DOUBLE) / max(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))))"
 
+  /** The int8 clamp of one element under a scale — the oracle twin of
+    * [[graft.queries.Similarity.sqQuantize]].
+    */
+  private def sqQuantSql(x: String, scale: String): String =
+    s"CAST(greatest(-127, least(127, floor(CAST($x AS DOUBLE) * $scale))) AS BIGINT)"
 
   // the SQ quantization chain under the frozen base-corpus scale — the
   // shared prefix of the three sq lifecycle oracles (the sqInt8Sql rule)
   private def sqScaleCtes: String =
-    """sc AS (
-      |  SELECT CAST(127 AS DOUBLE) / max(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))) AS s
-      |  FROM embeddings),
-      |qb AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(greatest(-127, least(127, floor(CAST(x AS DOUBLE) * sc.s))) AS BIGINT)) AS qe
-      |  FROM embeddings, sc)""".stripMargin
+    s"""sc AS (SELECT $sqScaleSql AS s FROM embeddings),
+       |qb AS (
+       |  SELECT vec_id,
+       |    list_transform(embedding, x -> ${sqQuantSql("x", "sc.s")}) AS qe
+       |  FROM embeddings, sc)""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.codecUpsertAudit]] over
     * `sqCodec`: the delta carve re-encoded under the SAME frozen scale,
@@ -4627,18 +4441,9 @@ object SparkEntry {
     */
   private def sqUpsertSql: String =
     s"""WITH $sqScaleCtes,
-       |qd AS (
-       |  SELECT -vec_id - 1 AS vec_id,
-       |    list_transform(range(1, 65), i -> CAST(greatest(-127, least(127, floor(CAST(embedding[65 - i] AS DOUBLE) * sc.s))) AS BIGINT)) AS qe
-       |  FROM embeddings, sc WHERE vec_id % ${Similarity.upsertDeltaMod} = 0),
-       |bh AS (SELECT q, count(*) AS n_base FROM (SELECT unnest(qe) AS q FROM qb) GROUP BY 1),
-       |nh AS (SELECT q, count(*) AS n_new, min(vec_id) AS first_new_id
-       |       FROM (SELECT vec_id, unnest(qe) AS q FROM qd) GROUP BY 1)
-       |SELECT coalesce(bh.q, nh.q) AS q,
-       |  coalesce(n_base, 0) AS n_base, coalesce(n_new, 0) AS n_new,
-       |  coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total, first_new_id
-       |FROM bh FULL OUTER JOIN nh ON bh.q = nh.q
-       |ORDER BY q""".stripMargin
+       |${deltaBatchCte("qd", x => sqQuantSql(x, "sc.s"), col = "qe", from = "embeddings, sc")},
+       |${upsertAuditSql("(SELECT unnest(qe) AS q FROM qb)",
+          "(SELECT vec_id, unnest(qe) AS q FROM qd)", Seq("q"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.simSqDrift]]: scale
     * re-derived over base ∪ 5/4-amplitude delta, base re-encoded, changed
@@ -4646,15 +4451,15 @@ object SparkEntry {
     */
   private def sqDriftSql: String =
     s"""WITH $sqScaleCtes,
+       |${deltaBatchCte("sqdelta", x => s"CAST($x AS DOUBLE) * CAST(1.25 AS DOUBLE)")},
        |nsc AS (
-       |  SELECT CAST(127 AS DOUBLE) / max(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))) AS s
+       |  SELECT $sqScaleSql AS s
        |  FROM (SELECT embedding FROM embeddings
        |        UNION ALL
-       |        SELECT list_transform(range(1, 65), i -> CAST(embedding[65 - i] AS DOUBLE) * CAST(1.25 AS DOUBLE)) AS embedding
-       |        FROM embeddings WHERE vec_id % ${Similarity.upsertDeltaMod} = 0)),
+       |        SELECT embedding FROM sqdelta)),
        |qnn AS (
        |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(greatest(-127, least(127, floor(CAST(x AS DOUBLE) * nsc.s))) AS BIGINT)) AS qn,
+       |    list_transform(embedding, x -> ${sqQuantSql("x", "nsc.s")}) AS qn,
        |    nsc.s AS new_scale
        |  FROM embeddings, nsc),
        |dx AS (
@@ -4670,19 +4475,12 @@ object SparkEntry {
        |FROM dx GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Similarity.codecDeleteAudit]] over
-    * `sqCodec`: encode chain + carve arithmetic; the Spark side recounts
-    * n_live from the physically rewritten overlay, so a hash match proves
-    * the rewrite.
+    * `sqCodec`: encode chain, then the [[deleteAuditSql]] split per code
+    * value.
     */
   private def sqDeleteSql: String =
-    s"""WITH $sqScaleCtes,
-       |bh AS (SELECT q, count(*) AS n_base FROM (SELECT unnest(qe) AS q FROM qb) GROUP BY 1),
-       |dh AS (SELECT q, count(*) AS n_dead
-       |       FROM (SELECT unnest(qe) AS q FROM qb WHERE vec_id % ${Similarity.pqDelMod} = ${Similarity.pqDelRem}) GROUP BY 1)
-       |SELECT bh.q AS q, n_base, coalesce(n_dead, 0) AS n_dead,
-       |  n_base - coalesce(n_dead, 0) AS n_live
-       |FROM bh LEFT JOIN dh ON bh.q = dh.q
-       |ORDER BY q""".stripMargin
+    s"""WITH $sqScaleCtes
+       |${deleteAuditSql("(SELECT vec_id, unnest(qe) AS q FROM qb)", Seq("q"))}""".stripMargin
 
   /** DuckDB twin of [[graft.queries.Text.txCmsFrequency]] AND the
     * standing-cells [[graft.queries.Text.txCmsRefresh]] (identical output

@@ -267,6 +267,20 @@ class IngestSpec extends SparkSpec {
     assert(m.select("series_name").distinct().count() == 3)
     assert(m.filter("value IS NULL").count() == 0)
 
+    // every written dataset has exactly the columns, order and types its
+    // graft.Schemas entry declares (internal _p_* partition columns aside)
+    def cols(s: StructType) = s.fields.toSeq
+      .filterNot(_.name.startsWith("_p_")).map(c => (c.name, c.dataType))
+    val drift = for {
+      dir <- Seq("data_processed", "data_meta")
+      f <- new java.io.File(s"$root/$dir").listFiles().toSeq.sortBy(_.getName)
+      if f.getName.endsWith(".parquet")
+      name = f.getName.stripSuffix(".parquet")
+      got = cols(read(s"$dir/${f.getName}").schema)
+      if got != cols(Schemas.all(name))
+    } yield s"$name writes $got"
+    assert(drift.size == 0, drift.mkString("; "))
+
     // manifests exist
     assert(Files.exists(java.nio.file.Paths.get(s"$root/data_meta/data_sources.yml")))
     assert(Files.exists(java.nio.file.Paths.get(s"$root/reference/field_manifest.csv")))

@@ -91,27 +91,36 @@ class OpqLifecycleSpec extends SparkSpec {
     }
   }
 
-  test("one delta carve: src/main writes `% upsertDeltaMod === 0` only inside upsertDeltaFrame") {
+  test("pinned lifecycle fragments appear in src/main only inside their owning defs") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found under ${root.toAbsolutePath}")
-    val hits = for {
-      src <- java.nio.file.Files.walk(root).iterator().asScala.toList
-      if src.toString.endsWith(".scala")
-      lines = java.nio.file.Files.readAllLines(src).asScala.toIndexedSeq
-      // the helper's body: its def line through the next blank line
-      helper = lines.indexWhere(_.contains("def upsertDeltaFrame(")) match {
-        case -1 => Range(0, 0)
-        case d => Range(d, lines.indexWhere(_.trim.isEmpty, d))
-      }
-      (line, i) <- lines.zipWithIndex
-      if line.contains("% upsertDeltaMod === 0")
-    } yield (s"$src:${i + 1}", helper.contains(i))
-    assert(hits.count(_._2) == 1, s"the carve must live in upsertDeltaFrame: $hits")
-    val offenders = hits.filterNot(_._2).map(_._1)
-    assert(offenders.isEmpty,
-      "delta carve copied outside upsertDeltaFrame:\n" + offenders.mkString("\n"))
+    // (fragment, the def that owns it): the Spark-side delta carve, its
+    // DuckDB twin and the oracle's occupancy-audit tail
+    val pinned = Seq(
+      "% upsertDeltaMod === 0" -> "def upsertDeltaFrame(",
+      "upsertDeltaMod} = 0" -> "def deltaBatchCte(",
+      "coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total" -> "def upsertAuditSql(")
+    val sources = java.nio.file.Files.walk(root).iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .map(src => src -> java.nio.file.Files.readAllLines(src).asScala.toIndexedSeq)
+    pinned.foreach { case (pattern, owner) =>
+      val hits = for {
+        (src, lines) <- sources
+        // the owner's body: its def line through the next blank line
+        body = lines.indexWhere(_.contains(owner)) match {
+          case -1 => Range(0, 0)
+          case d => Range(d, lines.indexWhere(_.trim.isEmpty, d))
+        }
+        (line, i) <- lines.zipWithIndex
+        if line.contains(pattern)
+      } yield (s"$src:${i + 1}", body.contains(i))
+      assert(hits.count(_._2) == 1, s"`$pattern` must live in $owner: $hits")
+      val offenders = hits.filterNot(_._2).map(_._1)
+      assert(offenders.isEmpty,
+        s"`$pattern` copied outside $owner:\n" + offenders.mkString("\n"))
+    }
   }
 
   test("opq delete serve: no tombstoned id ever surfaces from the overlay") {

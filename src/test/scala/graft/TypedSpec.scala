@@ -22,7 +22,8 @@ class TypedSpec extends SparkSpec {
         StructField("first_date", TimestampType), StructField("last_date", TimestampType))))
       .write.parquet(s"$root/data_meta/assets_master.parquet")
     spark.createDataFrame(Seq(
-        Row(ts("2020-01-02"), 1L, "AAA", 10.0, 11.0, 9.0, 10.5, null, 1000L)).asJava,
+        Row(1L, ts("2020-01-02"), 10.0, 11.0, 9.0, 10.5, null, null, null,
+          1000L, null, "AAA")).asJava,
       Schemas.pricesDaily)
       .write.parquet(s"$root/data_processed/prices_daily.parquet")
 
