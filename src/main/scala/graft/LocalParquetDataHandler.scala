@@ -123,22 +123,36 @@ class LocalParquetDataHandler(
 
   private val mandatoryCols = Seq("date", "asset_id", "ticker")
 
-  override def getPrices(tickers: Option[Seq[String]],
-      startDate: Option[String], endDate: Option[String],
-      fields: Option[Seq[String]]): DataFrame = {
-    val df = readPanel(s"$processedPath/prices_daily.parquet", startDate, endDate)
-    filterFields(
-      filterDates(filterAssets(df, tickers), "date", startDate, endDate),
+  /** The one processed-panel read: partition-pruned scan of `dataset`,
+    * then the ticker filter, then the inclusive `dateCol` range — in
+    * that order, so every method's plan is the same scan + filters.
+    */
+  private def readFiltered(dataset: String, dateCol: String,
+      start: Option[String], end: Option[String],
+      tickers: Option[Seq[String]] = None): DataFrame =
+    filterDates(
+      filterAssets(readPanel(s"$processedPath/$dataset.parquet", start, end),
+        tickers),
+      dateCol, start, end)
+
+  /** A per-asset daily panel with optional field projection — prices
+    * and both analyst panels.
+    */
+  private def fieldPanel(dataset: String, tickers: Option[Seq[String]],
+      start: Option[String], end: Option[String],
+      fields: Option[Seq[String]]): DataFrame =
+    filterFields(readFiltered(dataset, "date", start, end, tickers),
       fields, mandatoryCols)
       .orderBy("date", "asset_id")
-  }
+
+  override def getPrices(tickers: Option[Seq[String]],
+      startDate: Option[String], endDate: Option[String],
+      fields: Option[Seq[String]]): DataFrame =
+    fieldPanel("prices_daily", tickers, startDate, endDate, fields)
 
   override def getReturns(tickers: Option[Seq[String]],
       startDate: Option[String], endDate: Option[String]): DataFrame =
-    filterDates(
-      filterAssets(readPanel(s"$processedPath/returns_daily.parquet",
-        startDate, endDate), tickers),
-      "date", startDate, endDate)
+    readFiltered("returns_daily", "date", startDate, endDate, tickers)
       .orderBy("date", "asset_id")
 
   override def getUniverse(date: Option[String]): DataFrame = {
@@ -150,12 +164,11 @@ class LocalParquetDataHandler(
 
   override def getFundamentals(tickers: Option[Seq[String]],
       startDate: Option[String], endDate: Option[String]): DataFrame = {
-    val df = readPanel(s"$processedPath/fundamentals_quarterly.parquet",
-      startDate, endDate)
     // Idempotent friendly rename (`parquet.py:136-138`): ingestion already
     // renamed, so only still-raw mnemonics are touched.
     val renamed = Transforms.fundamentalsFieldMap.foldLeft(
-      filterDates(filterAssets(df, tickers), "report_date", startDate, endDate)) {
+      readFiltered("fundamentals_quarterly", "report_date", startDate,
+        endDate, tickers)) {
       case (d, (from, to)) =>
         if (d.columns.contains(from)) d.withColumnRenamed(from, to) else d
     }
@@ -165,37 +178,21 @@ class LocalParquetDataHandler(
   override def getAnalystConsensus(tickers: Option[Seq[String]],
       startDate: Option[String], endDate: Option[String],
       fields: Option[Seq[String]]): DataFrame =
-    filterFields(
-      filterDates(
-        filterAssets(readPanel(s"$processedPath/analyst_consensus.parquet",
-          startDate, endDate), tickers),
-        "date", startDate, endDate),
-      fields, mandatoryCols)
-      .orderBy("date", "asset_id")
+    fieldPanel("analyst_consensus", tickers, startDate, endDate, fields)
 
   override def getAnalystRatingsHistory(tickers: Option[Seq[String]],
       startDate: Option[String], endDate: Option[String],
       fields: Option[Seq[String]]): DataFrame =
-    filterFields(
-      filterDates(
-        filterAssets(readPanel(s"$processedPath/analyst_ratings_history.parquet",
-          startDate, endDate), tickers),
-        "date", startDate, endDate),
-      fields, mandatoryCols)
-      .orderBy("date", "asset_id")
+    fieldPanel("analyst_ratings_history", tickers, startDate, endDate, fields)
 
   override def getMacro(startDate: Option[String],
       endDate: Option[String]): DataFrame =
-    filterDates(readPanel(s"$processedPath/macro_timeseries.parquet",
-      startDate, endDate),
-      "date", startDate, endDate)
+    readFiltered("macro_timeseries", "date", startDate, endDate)
       .orderBy("date", "series_name")
 
   override def getStyleFactorReturns(startDate: Option[String],
       endDate: Option[String]): DataFrame =
-    filterDates(readPanel(s"$processedPath/style_factor_returns.parquet",
-      startDate, endDate),
-      "date", startDate, endDate)
+    readFiltered("style_factor_returns", "date", startDate, endDate)
       .orderBy("date", "factor_name")
 
   override def getBenchmarkReturns(benchmark: String,

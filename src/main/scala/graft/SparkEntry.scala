@@ -2044,7 +2044,7 @@ object SparkEntry {
         ivfAnnSqlOver(s"label = ${Similarity.filteredAnnLabel}"),
         "t_filt"),
       ("graph", graphSearchSql, "irtruth"),
-      ("hnsw", hnswSearchSql, "irtruth"),
+      ("hnsw", hnswSearchSql(deleted = false), "irtruth"),
       ("ivf", ivfAnnSql, "irtruth"),
       ("ivfpq", ivfPqSql, "irtruth"),
       ("opq", opqAdcIndexedSql, "irtruth"),
@@ -2488,7 +2488,7 @@ object SparkEntry {
          |  WHERE rnk <= 5)""".stripMargin
     val fams = Seq(
       ("graph_gen2", graphSearchCompactedSql, "t_mut"),
-      ("hnsw_deleted", hnswDeletedSearchSql, "t_liveb"),
+      ("hnsw_deleted", hnswSearchSql(deleted = true), "t_liveb"),
       ("hnsw_upserted", hnswUpsertedSearchSql, "t_ups"))
     val famCtes = fams.map { case (n, sql, _) =>
       s"""r_$n AS MATERIALIZED (
@@ -2563,31 +2563,13 @@ object SparkEntry {
     val k = Similarity.knnDescentK
     val beam = Similarity.graphSearchBeam
     val hops = Similarity.graphSearchHops
-    val g = s"g${Similarity.knnDescentRounds}"
-    def cosOf: String =
-      "list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm)"
-    def hopChain(prefix: String, graph: String, qsrc: String,
-        members: String, b: Int, n: Int): String =
-      (1 to n).map { h =>
-        s"""${prefix}x$h AS MATERIALIZED (
-           |  SELECT DISTINCT qid, vid FROM (
-           |    SELECT qid, vid FROM $prefix${h - 1}
-           |    UNION ALL
-           |    SELECT f.qid, g2.u AS vid FROM $prefix${h - 1} f JOIN $graph g2 ON g2.v = f.vid)
-           |  WHERE vid <> qid),
-           |$prefix$h AS MATERIALIZED (
-           |  SELECT qid, vid, $cosOf AS cosine,
-           |    row_number() OVER (PARTITION BY qid ORDER BY $cosOf DESC, vid ASC) AS rnk
-           |  FROM ${prefix}x$h x JOIN $members a ON a.vec_id = x.vid JOIN $qsrc qq ON qq.vec_id = x.qid
-           |  QUALIFY rnk <= $b)""".stripMargin
-      }.mkString(",\n")
     s"""WITH $knnDescentCtes,
        |$graphDeleteCtes,
        |graph0 AS (SELECT src AS v, dst AS u FROM gedges),
        |${deltaBatchCte("qdel", norm = true, materialized = true)},
        |uent AS (SELECT min(vec_id) AS ev FROM embeddings),
        |uf0 AS MATERIALIZED (SELECT vec_id AS qid, ev AS vid FROM qdel, uent),
-       |${hopChain("uf", "graph0", "qdel", "e", beam, hops)},
+       |${hopChainSql("uf", "graph0", "qdel", "e", beam, hops)},
        |ulinks AS MATERIALIZED (
        |  SELECT qid, vid FROM uf$hops WHERE rnk <= $k
        |    AND vid NOT IN (SELECT vec_id FROM gdead)),
@@ -2603,10 +2585,46 @@ object SparkEntry {
        |ent AS (SELECT min(vec_id) AS ev FROM embeddings
        |  WHERE vec_id % ${Similarity.graphDelMod} <> ${Similarity.graphDelRem}),
        |f0 AS MATERIALIZED (SELECT vec_id AS qid, ev AS vid FROM qsrc, ent),
-       |${hopChain("f", "kmerged", "qsrc", "e2", beam, hops)}
+       |${hopChainSql("f", "kmerged", "qsrc", "e2", beam, hops)}
        |SELECT qid, vid AS vec_id, cosine, rnk FROM f$hops WHERE rnk <= 5
        |ORDER BY qid, rnk""".stripMargin
   }
+
+  /** The query-to-member cosine every walk hop ranks by (`qq` the query
+    * row, `a` the member row).
+    */
+  private def walkQcos: String =
+    "list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm)"
+
+  /** Exact cosine of every (src, dst) row of `pairs`, both endpoints
+    * looked up in `rel` (the corpus `e`, or the upserted corpus `e2`) —
+    * the scoring of the repair candidates and the HNSW upper layers.
+    */
+  private def scoredPairsSql(pairs: String, rel: String): String =
+    s"""SELECT p.src, p.dst,
+       |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
+       |    FROM $pairs p JOIN $rel a ON a.vec_id = p.src JOIN $rel b ON b.vec_id = p.dst""".stripMargin
+
+  /** `n` MATERIALIZED beam hops `<prefix>1..n` from `<prefix>0` over a
+    * (v, u) adjacency `graph`, each hop keeping the top `b` members of
+    * `members` by cosine to the query rows of `qsrc` — the insert and
+    * serve walks of the compacted-graph and upserted-HNSW oracles.
+    */
+  private def hopChainSql(prefix: String, graph: String, qsrc: String,
+      members: String, b: Int, n: Int): String =
+    (1 to n).map { h =>
+      s"""${prefix}x$h AS MATERIALIZED (
+         |  SELECT DISTINCT qid, vid FROM (
+         |    SELECT qid, vid FROM $prefix${h - 1}
+         |    UNION ALL
+         |    SELECT f.qid, g2.u AS vid FROM $prefix${h - 1} f JOIN $graph g2 ON g2.v = f.vid)
+         |  WHERE vid <> qid),
+         |$prefix$h AS MATERIALIZED (
+         |  SELECT qid, vid, $walkQcos AS cosine,
+         |    row_number() OVER (PARTITION BY qid ORDER BY $walkQcos DESC, vid ASC) AS rnk
+         |  FROM ${prefix}x$h x JOIN $members a ON a.vec_id = x.vid JOIN $qsrc qq ON qq.vec_id = x.qid
+         |  QUALIFY rnk <= $b)""".stripMargin
+    }.mkString(",\n")
 
   /** The graph-delete repair chain as a reusable CTE body (tombstones →
     * surviving edges → FreshDiskANN bridge pairs → rescored top-k
@@ -2643,9 +2661,7 @@ object SparkEntry {
        |grep AS MATERIALIZED (
        |  SELECT src, dst, cosine,
        |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rnk
-       |  FROM (SELECT p.src, p.dst,
-       |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
-       |    FROM gcand p JOIN e a ON a.vec_id = p.src JOIN e b ON b.vec_id = p.dst)
+       |  FROM (${scoredPairsSql("gcand", "e")})
        |  QUALIFY rnk <= $k)""".stripMargin
   }
 
@@ -2687,27 +2703,29 @@ object SparkEntry {
     entSel = "SELECT min(vec_id) AS ev FROM embeddings " +
       s"WHERE vec_id % ${Similarity.graphDelMod} <> ${Similarity.graphDelRem}")
 
-  /** DuckDB twin of [[graft.queries.Similarity.simHnswSearch]]: the
-    * descent chain rebuilds layer 0, the stratification rules + 2-hop
-    * closure/complete-rescore rebuild the upper layers from first
-    * principles, the greedy per-level routing walks unroll inside the
+  /** DuckDB twin of [[graft.queries.Similarity.simHnswSearch]] and, with
+    * `deleted`, of [[graft.queries.Similarity.simHnswSearchDeleted]]: the
+    * descent chain rebuilds layer 0 (after a delete, the repair chain
+    * [[graphDeleteCtes]] — the SAME text the flat deleted walk and the
+    * lifecycle audit use — rebuilds it over the survivors), the
+    * stratification rules + 2-hop closure/complete-rescore rebuild the
+    * upper layers from first principles (over the SURVIVORS after a
+    * delete), the greedy per-level routing walks unroll inside the
     * (MATERIALIZED) f0 entry CTE, and the standard layer-0 hop chain
     * follows — one generator ([[graphSearchSqlOver]]) for all four walk
     * twins, so serve, insert, delete and hierarchy can never walk
     * different graphs. Constants interpolate from the ONE Scala
     * definition each.
     */
-  private def hnswSearchSql: String = {
+  private def hnswSearchSql(deleted: Boolean): String = {
     val m1 = Similarity.hnswL1Mod
     val m2 = Similarity.hnswL2Mod
     val uh = Similarity.hnswUpperHops
-    val g = s"g${Similarity.knnDescentRounds}"
-    val qcos =
-      "list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm)"
-    def scoredPairs(pairs: String): String =
-      s"""SELECT p.src, p.dst,
-         |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
-         |    FROM $pairs p JOIN e a ON a.vec_id = p.src JOIN e b ON b.vec_id = p.dst""".stripMargin
+    val layer0 =
+      if (deleted) "grep" else s"g${Similarity.knnDescentRounds}"
+    val live =
+      if (deleted) s" AND vec_id % ${Similarity.graphDelMod} <> ${Similarity.graphDelRem}"
+      else ""
     // every per-hop CTE MATERIALIZED: each hop references its
     // predecessor twice, so the inlined chain re-expands ~2^hops and —
     // stacked twice (hu + hm) over the descent CTEs — OOM'd DuckDB at
@@ -2722,18 +2740,18 @@ object SparkEntry {
            |  WHERE vid <> qid),
            |$prefix$h AS MATERIALIZED (
            |  SELECT qid, vid,
-           |    row_number() OVER (PARTITION BY qid ORDER BY $qcos DESC, vid ASC) AS rnk
+           |    row_number() OVER (PARTITION BY qid ORDER BY $walkQcos DESC, vid ASC) AS rnk
            |  FROM ${prefix}x$h x JOIN e a ON a.vec_id = x.vid JOIN qsrc qq ON qq.vec_id = x.qid
            |  QUALIFY rnk <= 1)""".stripMargin
       }.mkString(",\n")
     val extra =
-      s"""hl2 AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE vec_id % $m2 = 0),
+      s"""${if (deleted) s"$graphDeleteCtes,\n" else ""}hl2 AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE vec_id % $m2 = 0$live),
          |hl2e AS MATERIALIZED (
          |  SELECT src, dst, cosine,
          |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-         |  FROM (${scoredPairs("(SELECT x.vec_id AS src, y.vec_id AS dst FROM hl2 x JOIN hl2 y ON x.vec_id <> y.vec_id)")})
+         |  FROM (${scoredPairsSql("(SELECT x.vec_id AS src, y.vec_id AS dst FROM hl2 x JOIN hl2 y ON x.vec_id <> y.vec_id)", "e")})
          |  QUALIFY rn <= ${Similarity.hnswL2K}),
-         |hedges AS MATERIALIZED (SELECT src, dst FROM $g),
+         |hedges AS MATERIALIZED (SELECT src, dst FROM $layer0),
          |hl1cand AS (
          |  SELECT src, dst FROM hedges WHERE src % $m1 = 0 AND dst % $m1 = 0
          |  UNION
@@ -2742,71 +2760,7 @@ object SparkEntry {
          |hl1e AS MATERIALIZED (
          |  SELECT src, dst, cosine,
          |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-         |  FROM (${scoredPairs("hl1cand")})
-         |  QUALIFY rn <= ${Similarity.hnswL1K}),""".stripMargin
-    val route =
-      s"""WITH hu0 AS (SELECT vec_id AS qid, ev2 AS vid FROM qsrc, (SELECT min(vec_id) AS ev2 FROM hl2) e2),
-         |${greedy("hu", "hl2e")},
-         |hm0 AS MATERIALIZED (SELECT qid, vid FROM hu$uh),
-         |${greedy("hm", "hl1e")}
-         |SELECT qid, vid FROM hm$uh""".stripMargin
-    graphSearchSqlOver(
-      "qsrc AS MATERIALIZED (SELECT vec_id, embedding, norm FROM e WHERE vec_id < 5)",
-      5, extraCtes = extra, f0Sel = route)
-  }
-
-  /** DuckDB twin of [[graft.queries.Similarity.simHnswSearchDeleted]]:
-    * the delete repair chain ([[graphDeleteCtes]] — the SAME text the
-    * flat deleted walk and the lifecycle audit use) rebuilds layer 0,
-    * the upper layers re-derive over the SURVIVORS, and the routed walk
-    * unrolls over the repaired graph — one generator family
-    * ([[graphSearchSqlOver]]), so the layered and flat post-delete
-    * serves can never walk different graphs.
-    */
-  private def hnswDeletedSearchSql: String = {
-    val m1 = Similarity.hnswL1Mod
-    val m2 = Similarity.hnswL2Mod
-    val uh = Similarity.hnswUpperHops
-    val dm = Similarity.graphDelMod
-    val dr = Similarity.graphDelRem
-    val qcos =
-      "list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm)"
-    def scoredPairs(pairs: String): String =
-      s"""SELECT p.src, p.dst,
-         |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
-         |    FROM $pairs p JOIN e a ON a.vec_id = p.src JOIN e b ON b.vec_id = p.dst""".stripMargin
-    def greedy(prefix: String, graph: String): String =
-      (1 to uh).map { h =>
-        s"""${prefix}x$h AS MATERIALIZED (
-           |  SELECT DISTINCT qid, vid FROM (
-           |    SELECT qid, vid FROM $prefix${h - 1}
-           |    UNION ALL
-           |    SELECT f.qid, g2.dst AS vid FROM $prefix${h - 1} f JOIN $graph g2 ON g2.src = f.vid)
-           |  WHERE vid <> qid),
-           |$prefix$h AS MATERIALIZED (
-           |  SELECT qid, vid,
-           |    row_number() OVER (PARTITION BY qid ORDER BY $qcos DESC, vid ASC) AS rnk
-           |  FROM ${prefix}x$h x JOIN e a ON a.vec_id = x.vid JOIN qsrc qq ON qq.vec_id = x.qid
-           |  QUALIFY rnk <= 1)""".stripMargin
-      }.mkString(",\n")
-    val extra =
-      s"""$graphDeleteCtes,
-         |hl2 AS MATERIALIZED (SELECT vec_id FROM embeddings WHERE vec_id % $m2 = 0 AND vec_id % $dm <> $dr),
-         |hl2e AS MATERIALIZED (
-         |  SELECT src, dst, cosine,
-         |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-         |  FROM (${scoredPairs("(SELECT x.vec_id AS src, y.vec_id AS dst FROM hl2 x JOIN hl2 y ON x.vec_id <> y.vec_id)")})
-         |  QUALIFY rn <= ${Similarity.hnswL2K}),
-         |hedges AS MATERIALIZED (SELECT src, dst FROM grep),
-         |hl1cand AS (
-         |  SELECT src, dst FROM hedges WHERE src % $m1 = 0 AND dst % $m1 = 0
-         |  UNION
-         |  SELECT i.src AS src, o.dst AS dst FROM hedges i JOIN hedges o ON i.dst = o.src
-         |  WHERE i.src % $m1 = 0 AND o.dst % $m1 = 0 AND i.src <> o.dst),
-         |hl1e AS MATERIALIZED (
-         |  SELECT src, dst, cosine,
-         |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-         |  FROM (${scoredPairs("hl1cand")})
+         |  FROM (${scoredPairsSql("hl1cand", "e")})
          |  QUALIFY rn <= ${Similarity.hnswL1K}),""".stripMargin
     val route =
       s"""WITH hu0 AS (SELECT vec_id AS qid, ev2 AS vid FROM qsrc, (SELECT min(vec_id) AS ev2 FROM hl2) e2),
@@ -2817,7 +2771,7 @@ object SparkEntry {
     graphSearchSqlOver(
       "qsrc AS MATERIALIZED (SELECT vec_id, embedding, norm FROM e WHERE vec_id < 5)",
       5, extraCtes = extra,
-      graphSel = "SELECT src AS v, dst AS u FROM grep", f0Sel = route)
+      graphSel = s"SELECT src AS v, dst AS u FROM $layer0", f0Sel = route)
   }
 
   /** DuckDB twin of [[graft.queries.Similarity.simHnswSearchUpserted]]:
@@ -2837,33 +2791,12 @@ object SparkEntry {
     val g = s"g${Similarity.knnDescentRounds}"
     // all scoring below runs against the UPSERTED corpus e2 except the
     // insert walk, which (like the live insert) sees the base corpus
-    def cosOf(qs: String): String =
-      s"list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm)"
-    def hopChain(prefix: String, graph: String, qsrc: String,
-        members: String, b: Int, n: Int): String =
-      (1 to n).map { h =>
-        s"""${prefix}x$h AS MATERIALIZED (
-           |  SELECT DISTINCT qid, vid FROM (
-           |    SELECT qid, vid FROM $prefix${h - 1}
-           |    UNION ALL
-           |    SELECT f.qid, g2.u AS vid FROM $prefix${h - 1} f JOIN $graph g2 ON g2.v = f.vid)
-           |  WHERE vid <> qid),
-           |$prefix$h AS MATERIALIZED (
-           |  SELECT qid, vid, ${cosOf(qsrc)} AS cosine,
-           |    row_number() OVER (PARTITION BY qid ORDER BY ${cosOf(qsrc)} DESC, vid ASC) AS rnk
-           |  FROM ${prefix}x$h x JOIN $members a ON a.vec_id = x.vid JOIN $qsrc qq ON qq.vec_id = x.qid
-           |  QUALIFY rnk <= $b)""".stripMargin
-      }.mkString(",\n")
-    def scoredPairs2(pairs: String): String =
-      s"""SELECT p.src, p.dst,
-         |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
-         |    FROM $pairs p JOIN e2 a ON a.vec_id = p.src JOIN e2 b ON b.vec_id = p.dst""".stripMargin
     s"""WITH $knnDescentCtes,
        |graph0 AS MATERIALIZED (SELECT src AS v, dst AS u FROM $g),
        |${deltaBatchCte("qdel", norm = true, materialized = true)},
        |uent AS (SELECT min(vec_id) AS ev FROM embeddings),
        |uf0 AS MATERIALIZED (SELECT vec_id AS qid, ev AS vid FROM qdel, uent),
-       |${hopChain("uf", "graph0", "qdel", "e", beam, hops)},
+       |${hopChainSql("uf", "graph0", "qdel", "e", beam, hops)},
        |ulinks AS MATERIALIZED (SELECT qid, vid FROM uf$hops WHERE rnk <= $k),
        |e2 AS MATERIALIZED (
        |  SELECT vec_id, embedding, norm FROM e
@@ -2878,7 +2811,7 @@ object SparkEntry {
        |hl2e AS MATERIALIZED (
        |  SELECT src, dst, cosine,
        |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-       |  FROM (${scoredPairs2("(SELECT x.vec_id AS src, y.vec_id AS dst FROM hl2 x JOIN hl2 y ON x.vec_id <> y.vec_id)")})
+       |  FROM (${scoredPairsSql("(SELECT x.vec_id AS src, y.vec_id AS dst FROM hl2 x JOIN hl2 y ON x.vec_id <> y.vec_id)", "e2")})
        |  QUALIFY rn <= ${Similarity.hnswL2K}),
        |hl2g AS (SELECT src AS v, dst AS u FROM hl2e),
        |hl1cand AS (
@@ -2889,17 +2822,17 @@ object SparkEntry {
        |hl1e AS MATERIALIZED (
        |  SELECT src, dst, cosine,
        |    row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rn
-       |  FROM (${scoredPairs2("hl1cand")})
+       |  FROM (${scoredPairsSql("hl1cand", "e2")})
        |  QUALIFY rn <= ${Similarity.hnswL1K}),
        |hl1g AS (SELECT src AS v, dst AS u FROM hl1e),
        |qsrc AS MATERIALIZED (SELECT vec_id, embedding, norm FROM e WHERE vec_id < 5),
        |hent AS (SELECT min(vec_id) AS ev2 FROM hl2),
        |hu0 AS MATERIALIZED (SELECT vec_id AS qid, ev2 AS vid FROM qsrc, hent),
-       |${hopChain("hu", "hl2g", "qsrc", "e2", 1, uh)},
+       |${hopChainSql("hu", "hl2g", "qsrc", "e2", 1, uh)},
        |hm0 AS MATERIALIZED (SELECT qid, vid FROM hu$uh),
-       |${hopChain("hm", "hl1g", "qsrc", "e2", 1, uh)},
+       |${hopChainSql("hm", "hl1g", "qsrc", "e2", 1, uh)},
        |f0 AS MATERIALIZED (SELECT qid, vid FROM hm$uh),
-       |${hopChain("f", "l0g", "qsrc", "e2", beam, hops)}
+       |${hopChainSql("f", "l0g", "qsrc", "e2", beam, hops)}
        |SELECT qid, vid AS vec_id, cosine, rnk FROM f$hops WHERE rnk <= 5
        |ORDER BY qid, rnk""".stripMargin
   }
@@ -2936,9 +2869,9 @@ object SparkEntry {
          |  WHERE vid <> qid),
          |${p}f$h AS (
          |  SELECT qid, vid,
-         |    list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm) AS cosine,
+         |    $walkQcos AS cosine,
          |    row_number() OVER (PARTITION BY qid ORDER BY
-         |      list_reduce(list_transform(range(1, 65), i -> CAST(qq.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (qq.norm * a.norm) DESC, vid ASC) AS rnk
+         |      $walkQcos DESC, vid ASC) AS rnk
          |  FROM ${p}x$h x JOIN e a ON a.vec_id = x.vid JOIN qsrc qq ON qq.vec_id = x.qid
          |  QUALIFY rnk <= $beam)""".stripMargin
     }.mkString(",\n")
@@ -8598,9 +8531,9 @@ object SparkEntry {
     "sim_graph_search_deleted" -> graphSearchDeletedSql,
     "sim_knn_graph_compact" -> knnGraphCompactSql,
     "sim_graph_search_compacted" -> graphSearchCompactedSql,
-    "sim_hnsw_search" -> hnswSearchSql,
+    "sim_hnsw_search" -> hnswSearchSql(deleted = false),
     "sim_hnsw_search_upserted" -> hnswUpsertedSearchSql,
-    "sim_hnsw_search_deleted" -> hnswDeletedSearchSql,
+    "sim_hnsw_search_deleted" -> hnswSearchSql(deleted = true),
     "dd_semdedup_graph" -> semdedupGraphSql,
     "sim_lsh_buckets" ->
       """SELECT bucket, count(*) AS n_vecs, min(vec_id) AS min_vec_id, max(vec_id) AS max_vec_id

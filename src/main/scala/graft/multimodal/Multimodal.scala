@@ -277,8 +277,8 @@ object Multimodal {
           |  ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)).as("g"))
 
   /** STANDING temporal-align index over the base media carve
-    * (`media_id % 5 != 0` — the incremental carve every standing table
-    * shares): the order-sensitive 3-frame shingle table landing media
+    * (`!Text.isDelta(media_id)` — the incremental carve every standing
+    * table shares): the order-sensitive 3-frame shingle table landing media
     * probe for candidates, and the non-empty frame table the compaction
     * rollup aligns against. shingles/ is written last and carries the
     * marker.
@@ -288,7 +288,7 @@ object Multimodal {
     graft.Standing.dir(spark, dir, "align_index", Seq("shingles")) { base =>
       val media = fromDocuments(
         graft.Tables(spark, dir, "documents")
-          .filter(col("doc_id") % 5 =!= 0), alignFrames)
+          .filter(!graft.queries.Text.isDelta(col("doc_id"))), alignFrames)
       frameSample(media).filter(col("frame_bytes") > 0)
         .select(col("media_id"), col("frame_idx"), col("frame_md5"))
         .write.mode("overwrite").parquet(s"$base/frames")
@@ -333,7 +333,7 @@ object Multimodal {
 
   /** ALIGN-INDEX REFRESH audit (the lifecycle half [[ensureAlignIndex]]
     * lacked — every other standing artifact has one): the landing carve
-    * (`media_id % 5 = 0`, the incremental-delta convention) is admitted
+    * (`Text.isDelta(media_id)`, the incremental-delta convention) is admitted
     * by computing its frames/shingles with the IDENTICAL projections
     * the standing tables were built from, and the refreshed index is
     * DERIVED by composition — counts add, the 64-bit md5 XOR folds XOR
@@ -355,7 +355,7 @@ object Multimodal {
       spark.read.parquet(s"$base/shingles"), "base")
     val deltaMedia = fromDocuments(
       graft.Tables(spark, dir, "documents")
-        .filter(col("doc_id") % 5 === 0), alignFrames)
+        .filter(graft.queries.Text.isDelta(col("doc_id"))), alignFrames)
     val dStats = alignSideStats(
       frameSample(deltaMedia).filter(col("frame_bytes") > 0)
         .select(col("media_id"), col("frame_idx"), col("frame_md5")),

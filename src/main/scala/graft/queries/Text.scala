@@ -1536,10 +1536,10 @@ object Text {
     val scratch = evoScratchDir.toString
     val d = docs(spark, dir).select(col("doc_id"), col("lang"),
       col("source"), col("text"))
-    d.filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
+    d.filter(!isDelta(col("doc_id")))
       .write.mode("overwrite").partitionBy("source")
       .parquet(s"$scratch/pe1")
-    d.filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+    d.filter(isDelta(col("doc_id")))
       .write.mode("overwrite").partitionBy("lang")
       .parquet(s"$scratch/pe2")
     (s"$scratch/pe1", s"$scratch/pe2")
@@ -1873,6 +1873,41 @@ object Text {
     */
   private[graft] val incrementalDeltaMod = 5L
 
+  /** The DELTA carve (`doc_id % incrementalDeltaMod = 0`) — the one
+    * Spark-side statement of the base/delta split every incremental
+    * operator and standing base-carve summary shares; the base carve is
+    * `!isDelta(id)`. Never restate the modulus at a call site
+    * (OpqLifecycleSpec's source scan fails on a copy).
+    */
+  private[graft] def isDelta(id: Column): Column =
+    pmod(id, lit(incrementalDeltaMod)) === 0
+
+  /** A standing summary of the BASE carve (`!isDelta`): `summarize` over
+    * the base documents, written once under `<name>/<marker>` through
+    * [[graft.Standing.dir]] — the one lifecycle the base-carve sketches
+    * and materialized views share ([[kmvBase]], [[cmsBase]],
+    * [[histBase]], [[statsMvBase]], [[aggMvBase]], [[noveltyBase]]).
+    * A refresh merges the [[delta]] carve's summary into [[standing]]
+    * instead of rescanning the base.
+    */
+  private[graft] final case class BaseSummary(name: String, marker: String,
+      summarize: DataFrame => DataFrame) {
+    /** Build once; returns the artifact dir. */
+    def ensure(spark: SparkSession, dir: String): String =
+      graft.Standing.dir(spark, dir, name, Seq(marker)) { base =>
+        summarize(docs(spark, dir).filter(!isDelta(col("doc_id"))))
+          .write.mode("overwrite").parquet(s"$base/$marker")
+      }
+
+    /** The standing summary, built first if absent. */
+    def standing(spark: SparkSession, dir: String): DataFrame =
+      spark.read.parquet(s"${ensure(spark, dir)}/$marker")
+
+    /** The same summary over the delta carve. */
+    def delta(spark: SparkSession, dir: String): DataFrame =
+      summarize(docs(spark, dir).filter(isDelta(col("doc_id"))))
+  }
+
   /** 60-bit md5-derived BIGINT digest of the full document text — the
     * content key of [[ddIncremental]] and its streaming twin
     * (`StreamingOps.baseDigestKeys` / `admittedDeltaDocs`). ONE
@@ -1890,8 +1925,8 @@ object Text {
     * already exists in the base (`dup_vs_base`), dropped if an earlier
     * delta document has the same digest (`dup_in_delta`, keep-first by
     * doc_id), and `admitted` otherwise; reported per language. The
-    * base/delta split is deterministic (`doc_id % deltaMod = 0` is the
-    * delta) so every engine sees the same snapshots.
+    * base/delta split is deterministic ([[isDelta]]) so every engine
+    * sees the same snapshots.
     *
     * Scale shape — at 100 TB the base is petabytes but its digest set is
     * what ships: the base side collapses to DISTINCT 8-byte keys (the
@@ -1908,19 +1943,17 @@ object Text {
     * `wrds_ingestion.py:626` applied across snapshot boundaries, the
     * incremental form every recurring ingest runs.
     */
-  def ddIncremental(spark: SparkSession, dir: String,
-      deltaMod: Long = incrementalDeltaMod): DataFrame = {
-    require(deltaMod > 1, "deltaMod must leave both a base and a delta")
+  def ddIncremental(spark: SparkSession, dir: String): DataFrame = {
     // Hash projection feeds the base digest set, the keep-first aggregate
     // and the delta probe — scoped-cache it so the md5 pass over the
     // corpus runs once per execution (expensive join-key expressions are
     // re-evaluated per join side and in pushed-down filters; same
     // treatment as txDecontaminateHashed's shingle keys).
-    val keyed = graft.Caches.scoped(s"dd_incremental.keyed.$deltaMod",
+    val keyed = graft.Caches.scoped("dd_incremental.keyed",
       docs(spark, dir)
         .select(col("doc_id"), col("lang"),
           expr(textDigestExpr).as("hk"),
-          (pmod(col("doc_id"), lit(deltaMod)) === 0).as("is_delta")))
+          isDelta(col("doc_id")).as("is_delta")))
     val baseKeys = keyed.filter(!col("is_delta"))
       .select("hk").distinct()
     val delta = keyed.filter(col("is_delta"))
@@ -2007,7 +2040,7 @@ object Text {
   /** Incremental NEAR-dup admission — the fuzzy companion of
     * [[ddIncremental]], together the pass a recurring crawl ingest runs
     * (RefinedWeb/CCNet-style: exact digests first, MinHash near-dup
-    * second): a delta document (`doc_id % deltaMod = 0`) is dropped if
+    * second): a delta document ([[isDelta]]) is dropped if
     * it is a shingle-Jaccard ≥ `threshold` near-duplicate of ANY base
     * document (`near_dup_vs_base` — the base is the standing corpus, so
     * id order is irrelevant), or of a LOWER-ID delta document
@@ -2021,19 +2054,16 @@ object Text {
     * blocking, same recall curve, same DuckDB bit-replication), so at
     * 100 TB the candidate set grows with true near-dup clusters, not
     * O(n·delta): band keys meet only inside buckets, the delta side of
-    * every bucket is ~deltaMod× smaller than the corpus, and exact
+    * every bucket is ~incrementalDeltaMod× smaller than the corpus, and exact
     * Jaccard runs on candidates only. In steady state the base band
     * table is the persisted index (the [[ddIncremental]] digest-set
     * argument applied to bands) — the delta pass computes bands for the
     * snapshot alone and joins the standing table.
     */
   def ddIncrementalFuzzy(spark: SparkSession, dir: String,
-      deltaMod: Long = incrementalDeltaMod, numSlots: Int = 16,
-      bandSize: Int = 4, threshold: Double = 0.5): DataFrame = {
-    require(deltaMod > 1, "deltaMod must leave both a base and a delta")
+      numSlots: Int = 16, bandSize: Int = 4,
+      threshold: Double = 0.5): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    def isDelta(c: org.apache.spark.sql.Column) =
-      pmod(c, lit(deltaMod)) === 0
     val confirmed = jaccardScoredPairs(tokenizedDocs(spark, dir),
         numSlots, bandSize)
       .filter(col("jaccard") >= threshold)
@@ -2078,11 +2108,9 @@ object Text {
     * re-banding the base.
     */
   def fuzzyBuildIndex(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      deltaMod: Long = incrementalDeltaMod): Unit = {
+      numSlots: Int = 16, bandSize: Int = 4): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val base = tokenizedDocs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(deltaMod)) =!= 0)
+    val base = tokenizedDocs(spark, dir).filter(!isDelta(col("doc_id")))
     val bands = base
       .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
       .select(col("doc_id"), col("lang"), posexplode(col("bands")))
@@ -2100,17 +2128,15 @@ object Text {
 
   /** Build-once accessor for the standing fuzzy index. A geometry change
     * is a rebuild, as with any index — the key carries (dir, numSlots,
-    * bandSize, deltaMod) so a non-default probe can never silently read
-    * an index whose base partition was carved with different parameters
-    * (ADVICE r8-1).
+    * bandSize) so a non-default probe can never silently read an index
+    * banded with different parameters (ADVICE r8-1).
     */
   private[graft] def ensureFuzzyIndex(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      deltaMod: Long = incrementalDeltaMod): Unit =
+      numSlots: Int = 16, bandSize: Int = 4): Unit =
     graft.Standing.tables(spark,
         Seq("graft_fuzzy_bands_bq", "graft_fuzzy_sh_bq"),
-        (dir, numSlots, bandSize, deltaMod))(
-      fuzzyBuildIndex(spark, dir, numSlots, bandSize, deltaMod))
+        (dir, numSlots, bandSize))(
+      fuzzyBuildIndex(spark, dir, numSlots, bandSize))
 
   /** [[ddIncrementalFuzzy]] against the STANDING index
     * ([[fuzzyBuildIndex]]) — identical admission semantics and audit
@@ -2126,13 +2152,10 @@ object Text {
     * number of colliding bands, not with the base corpus.
     */
   def ddIncrementalFuzzyIndexed(spark: SparkSession, dir: String,
-      deltaMod: Long = incrementalDeltaMod, numSlots: Int = 16,
-      bandSize: Int = 4, threshold: Double = 0.5): DataFrame = {
-    require(deltaMod > 1, "deltaMod must leave both a base and a delta")
+      numSlots: Int = 16, bandSize: Int = 4,
+      threshold: Double = 0.5): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    ensureFuzzyIndex(spark, dir, numSlots, bandSize, deltaMod)
-    def isDelta(c: org.apache.spark.sql.Column) =
-      pmod(c, lit(deltaMod)) === 0
+    ensureFuzzyIndex(spark, dir, numSlots, bandSize)
     val deltaDocs = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
     val (dBands, dSh) = fuzzyBandsAndShingles(deltaDocs, numSlots, bandSize)
     // delta-vs-base: either id order makes the DELTA doc the duplicate
@@ -2246,9 +2269,16 @@ object Text {
       threshold)
       .select(col("id_a"), col("id_b"))
 
+  /** Batch 1 of the fuzzy upsert lifecycle — the even half of the delta
+    * carve (`doc_id % ${2·incrementalDeltaMod} = 0`); batch 2 is the
+    * rest of the delta.
+    */
+  private def isUpsertBatch1(id: Column): Column =
+    isDelta(id) && pmod(id, lit(2)) === 0
+
   /** UPSERT the standing fuzzy index (VERDICT r8 item 3 — the
     * sim_ivf_upsert treatment for dedup): batch 1 of the delta
-    * (`doc_id % ${2·deltaMod} = 0`) is admitted against the standing
+    * ([[isUpsertBatch1]]) is admitted against the standing
     * index, and the ADMITTED docs' bands and shingles are written to
     * OVERLAY bucketed tables (`graft_fuzzy_bands_ups` / `_sh_ups`,
     * bucketed on the same full candidate-join key sets as the standing
@@ -2262,9 +2292,7 @@ object Text {
       threshold: Double = 0.5): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
-    val m2 = 2 * incrementalDeltaMod
-    val b1 = tokenizedDocs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(m2)) === 0)
+    val b1 = tokenizedDocs(spark, dir).filter(isUpsertBatch1(col("doc_id")))
     val (b1Bands0, b1Sh0) = fuzzyBandsAndShingles(b1, numSlots, bandSize)
     // both admission legs and the overlay write consume these — scoped-
     // cache so the shingle/minhash pass over batch 1 runs once
@@ -2295,10 +2323,10 @@ object Text {
 
   /** Two-batch standing-index lifecycle — the oracle'd
     * `dd_incremental_fuzzy_upsert` entry (VERDICT r8 item 3): batch 1
-    * (`doc_id % ${2m} = 0`) admits against the standing index and its
+    * ([[isUpsertBatch1]]) admits against the standing index and its
     * ADMITTED docs are upserted into the overlay
-    * ([[fuzzyBuildUpsertOverlay]]); batch 2 (`doc_id % m = 0` and not
-    * batch 1) then admits against standing ∪ overlay merge-on-read —
+    * ([[fuzzyBuildUpsertOverlay]]); batch 2 (the rest of the delta)
+    * then admits against standing ∪ overlay merge-on-read —
     * so batch-2 candidates INCLUDE the admitted batch-1 docs, which is
     * the whole point of an index upsert. Per language, in drop-priority
     * order (base > upserted > within-batch, mirroring the exact
@@ -2325,11 +2353,7 @@ object Text {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
     ensureFuzzyUpsertOverlay(spark, dir, numSlots, bandSize)
-    val m = incrementalDeltaMod
-    val m2 = 2 * m
-    def isB1(c: org.apache.spark.sql.Column) = pmod(c, lit(m2)) === 0
-    def isB2(c: org.apache.spark.sql.Column) =
-      pmod(c, lit(m)) === 0 && pmod(c, lit(m2)) =!= 0
+    def isB2(c: Column) = isDelta(c) && !isUpsertBatch1(c)
     val b2 = tokenizedDocs(spark, dir).filter(isB2(col("doc_id")))
     val (b2Bands0, b2Sh0) = fuzzyBandsAndShingles(b2, numSlots, bandSize)
     // three admission legs share these — scoped-cache (the expensive-
@@ -2358,7 +2382,7 @@ object Text {
         sum(when(col("prio") === 1, 1L).otherwise(0L)).as("b2_in_batch"),
         sum(when(col("prio").isNull, 1L).otherwise(0L)).as("b2_admitted"),
         min(when(col("prio").isNull, col("doc_id"))).as("first_admitted"))
-    val audit1 = docs(spark, dir).filter(isB1(col("doc_id")))
+    val audit1 = docs(spark, dir).filter(isUpsertBatch1(col("doc_id")))
       .groupBy("lang").agg(count(lit(1)).as("n_batch1"))
       .join(spark.table("graft_fuzzy_bands_ups")
         .groupBy("lang").agg(countDistinct(col("doc_id")).as("n_b1_admitted")),
@@ -2410,9 +2434,8 @@ object Text {
       numSlots: Int = 16, bandSize: Int = 4): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
-    val m = incrementalDeltaMod
     val base = tokenizedDocs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(m)) =!= 0)
+      .filter(!isDelta(col("doc_id")))
       .select("doc_id", "lang")
     graft.Layout.saveBucketed(
       base.filter(fuzzyDeadCond(col("doc_id"), col("lang"))),
@@ -2480,8 +2503,6 @@ object Text {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
     ensureFuzzyDeleteOverlay(spark, dir, numSlots, bandSize)
-    val m = incrementalDeltaMod
-    def isDelta(c: org.apache.spark.sql.Column) = pmod(c, lit(m)) === 0
     val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
     val (dBands0, dSh0) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
     // four admission legs share these — scoped-cache (the expensive-
@@ -2986,7 +3007,17 @@ object Text {
     val edges = jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize)
       .filter(col("jaccard") >= 0.5)
       .select(col("id_a"), col("id_b"))
-    val comp = graft.ConnectedComponents.run(edges, "id_a", "id_b")
+    clusterReport(spark, dir,
+      graft.ConnectedComponents.run(edges, "id_a", "id_b"))
+  }
+
+  /** The served cluster report over (id, component) labels: one row per
+    * clustered doc with its language and its cluster's size, in
+    * (component, doc_id) order — the [[ddDupClusters]] shape every
+    * incremental, refreshed and post-delete closure serves.
+    */
+  private def clusterReport(spark: SparkSession, dir: String,
+      comp: DataFrame): DataFrame = {
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     comp.select(col("component"), col("id").as("doc_id"))
       .join(sizes, "component")
@@ -3094,8 +3125,8 @@ object Text {
   }
 
   /** Standing connected-component labels over the BASE carve's confirmed
-    * near-dup pairs (`doc_id % incrementalDeltaMod != 0` — the carve
-    * every incremental demo shares): one (id, component) row per
+    * near-dup pairs (`!isDelta` — the carve every incremental demo
+    * shares): one (id, component) row per
     * clustered base doc, built once by the full
     * [[graft.ConnectedComponents]] contraction and persisted as a
     * standing artifact witnessed by both tables.
@@ -3104,8 +3135,7 @@ object Text {
       numSlots: Int = 16, bandSize: Int = 4): String = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     graft.Standing.dir(spark, dir, "cc_base", Seq("labels", "edges")) { base =>
-      val baseToks = tokenizedDocs(spark, dir)
-        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
+      val baseToks = tokenizedDocs(spark, dir).filter(!isDelta(col("doc_id")))
       val edges = jaccardScoredPairs(baseToks, numSlots, bandSize)
         .filter(col("jaccard") >= 0.5)
         .select(col("id_a"), col("id_b"))
@@ -3152,13 +3182,8 @@ object Text {
   def ddCcIncremental(spark: SparkSession, dir: String,
       numSlots: Int = 16, bandSize: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val comp = ccIncrementalLabels(spark, dir, numSlots, bandSize, threshold)
-    val sizes = comp.groupBy("component").agg(count(lit(1)).as("cluster_size"))
-    comp.select(col("component"), col("id").as("doc_id"))
-      .join(sizes, "component")
-      .join(docs(spark, dir).select("doc_id", "lang"), Seq("doc_id"))
-      .select(col("component"), col("doc_id"), col("lang"), col("cluster_size"))
-      .orderBy("component", "doc_id")
+    clusterReport(spark, dir,
+      ccIncrementalLabels(spark, dir, numSlots, bandSize, threshold))
   }
 
   /** The merged (id, component) labels of [[ddCcIncremental]] — factored
@@ -3172,8 +3197,7 @@ object Text {
     ensureFuzzyIndex(spark, dir, numSlots, bandSize)
     val base = ensureCcBase(spark, dir, numSlots, bandSize)
     val labels = spark.read.parquet(s"$base/labels")
-    val delta = tokenizedDocs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+    val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
     val (dBands0, dSh0) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
     val dBands = graft.Caches.scoped("cc_inc.dbands", dBands0)
     val dSh = graft.Caches.scoped("cc_inc.dsh", dSh0)
@@ -3217,13 +3241,7 @@ object Text {
   def ddCcRefresh(spark: SparkSession, dir: String,
       numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
     val base = ensureCcRefreshed(spark, dir, numSlots, bandSize)
-    val labels = spark.read.parquet(s"$base/labels")
-    val sizes = labels.groupBy("component").agg(count(lit(1)).as("cluster_size"))
-    labels.select(col("component"), col("id").as("doc_id"))
-      .join(sizes, "component")
-      .join(docs(spark, dir).select("doc_id", "lang"), Seq("doc_id"))
-      .select(col("component"), col("doc_id"), col("lang"), col("cluster_size"))
-      .orderBy("component", "doc_id")
+    clusterReport(spark, dir, spark.read.parquet(s"$base/labels"))
   }
 
   /** DELETE from the standing cluster closure — the one standing
@@ -3261,7 +3279,7 @@ object Text {
     val labels = spark.read.parquet(s"$base/labels")
     val edges = spark.read.parquet(s"$base/edges")
     val tombs = docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
+      .filter(!isDelta(col("doc_id")))
       .filter(fuzzyDeadCond(col("doc_id"), col("lang")))
       .select("doc_id")
     val touched = labels.join(tombs, labels("id") === tombs("doc_id"),
@@ -3274,15 +3292,9 @@ object Text {
       .join(tombs.select(col("doc_id").as("id_a")), Seq("id_a"), "left_anti")
       .join(tombs.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
       .select("id_a", "id_b")
-    val merged = kept.select(col("id"), col("component"))
+    clusterReport(spark, dir, kept.select(col("id"), col("component"))
       .unionByName(graft.ConnectedComponents.run(localEdges, "id_a", "id_b")
-        .select(col("id"), col("component")))
-    val sizes = merged.groupBy("component").agg(count(lit(1)).as("cluster_size"))
-    merged.select(col("component"), col("id").as("doc_id"))
-      .join(sizes, "component")
-      .join(docs(spark, dir).select("doc_id", "lang"), Seq("doc_id"))
-      .select(col("component"), col("doc_id"), col("lang"), col("cluster_size"))
-      .orderBy("component", "doc_id")
+        .select(col("id"), col("component"))))
   }
 
   /** The within-batch confirmed delta pairs — factored for the
@@ -3294,8 +3306,7 @@ object Text {
       numSlots: Int = 16, bandSize: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val delta = tokenizedDocs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+    val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
     val (dBands, dSh) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
     fuzzySelfPairs(dBands, dSh, threshold)
   }
@@ -3585,17 +3596,20 @@ object Text {
       .orderBy("source")
   }
 
-  /** Standing per-source KMV sketches over the BASE carve
-    * (`doc_id % incrementalDeltaMod != 0`, the [[ensureAggMv]]
-    * convention), built once under the warehouse. #sources·k longs —
-    * kilobytes at any corpus size.
+  /** Standing per-source KMV sketches over the base carve.
+    * #sources·k longs — kilobytes at any corpus size.
     */
-  def ensureKmvSketches(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "kmv_sketches", Seq("sketches")) { base =>
-      kmvSketches(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(s"$base/sketches")
-    }
+  private[graft] val kmvBase =
+    BaseSummary("kmv_sketches", "sketches", kmvSketches(_))
+
+  /** The standing base sketches ∪ the delta carve's sketches — the
+    * merged per-source rows the refresh and the retirement serve.
+    * kmvReport's distinct + per-source bottom-k IS the sketch merge:
+    * standing and delta sketch rows for one source collapse to the
+    * bottom-k of their union (lossless), so no pre-aggregation needed.
+    */
+  private def kmvMerged(spark: SparkSession, dir: String): DataFrame =
+    kmvBase.standing(spark, dir).unionByName(kmvBase.delta(spark, dir))
 
   /** Incremental KMV REFRESH — the [[pipelineAggRefresh]] maintenance
     * pattern applied to the cardinality sketches, with a stronger
@@ -3607,16 +3621,8 @@ object Text {
     * O(|delta|) corpus bytes plus #sources·k standing longs; the base
     * corpus is never rescanned.
     */
-  def txKmvRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureKmvSketches(spark, dir)
-    val delta = kmvSketches(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))
-    // kmvReport's distinct + per-source bottom-k IS the sketch merge:
-    // standing and delta sketch rows for one source collapse to the
-    // bottom-k of their union (lossless), so no pre-aggregation needed
-    kmvReport(spark.read.parquet(s"$base/sketches").unionByName(delta),
-      KmvK)
-  }
+  def txKmvRefresh(spark: SparkSession, dir: String): DataFrame =
+    kmvReport(kmvMerged(spark, dir), KmvK)
 
   /** The source the KMV retirement demo pulls — one literal for both
     * engines (the ttCarves rule). Chosen mid-range so survivors exist
@@ -3639,13 +3645,9 @@ object Text {
     * sketches the surviving corpus DIRECTLY from raw text and must
     * match bit-for-bit.
     */
-  def txKmvRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureKmvSketches(spark, dir)
-    val delta = kmvSketches(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))
-    kmvReport(spark.read.parquet(s"$base/sketches").unionByName(delta)
+  def txKmvRetract(spark: SparkSession, dir: String): DataFrame =
+    kmvReport(kmvMerged(spark, dir)
       .filter(col("source") =!= kmvRetiredSource), KmvK)
-  }
 
   /** Boilerplate document-frequency threshold: a block shared by at
     * least this many DISTINCT documents of one source is boilerplate
@@ -3775,9 +3777,18 @@ object Text {
     // (the tx_overlap_fraction rule)
     val grams = graft.Caches.scoped("tx_cms.grams",
       cmsGrams(Tables.spread(docs(spark, dir))))
+    cmsServe(grams, cmsCells(grams))
+  }
+
+  /** The probe/estimate/exact report over a gram stream and a (j, cell,
+    * cnt) sketch — one serve for the direct query, the refresh and the
+    * retraction: the probe set is the benchmark source's first
+    * [[CmsProbeLimit]] distinct bigrams, est = min over the depth rows
+    * of the probed cell, and the exact count rides along as the audit.
+    */
+  private def cmsServe(grams: DataFrame, cells: DataFrame): DataFrame = {
     val probes = grams.filter(col("source") === "src0")
       .select("g").distinct().orderBy("g").limit(CmsProbeLimit)
-    val cells = cmsCells(grams)
     val est = probes
       .select(col("g"), explode(expr(s"sequence(0, ${CmsDepth - 1})")).as("j"))
       .withColumn("cell", expr(cmsCellExpr))
@@ -3791,6 +3802,21 @@ object Text {
       .withColumn("overestimate", col("est_count") - col("exact_count"))
       .orderBy("g")
   }
+
+  /** The linear-counter MERGE of the CMS and histogram lifecycles:
+    * standing cells + delta cells − deleted cells, summed by `keys`,
+    * zero cells dropped (a zero cell and an absent cell are the same
+    * sketch; on a refresh every count is positive, so the drop is a
+    * no-op there). Counters are linear and every deleted occurrence was
+    * once counted, so the result is exactly the surviving corpus's
+    * sketch.
+    */
+  private def counterMerge(keys: Seq[String], standing: DataFrame,
+      delta: DataFrame, deleted: Option[DataFrame] = None): DataFrame =
+    (Seq(standing, delta) ++ deleted.map(_.withColumn("cnt", -col("cnt"))))
+      .reduce(_ unionByName _)
+      .groupBy(keys.map(col): _*).agg(sum("cnt").as("cnt"))
+      .filter(col("cnt") > 0)
 
   /** The PER-SOURCE CMS cell table — [[cmsCells]] keyed by source, the
     * standing/mergeable form (a per-source counter table sums to the
@@ -3806,18 +3832,13 @@ object Text {
       .groupBy("source", "j", "cell")
       .agg(count(lit(1)).as("cnt"))
 
-  /** Standing per-source count-min cell tables over the BASE carve
-    * (`doc_id % incrementalDeltaMod != 0`, the [[ensureKmvSketches]]
-    * convention) — the sketch lifecycle the r11 verdict queued (KMV got
-    * it first; CMS counters are exactly mergeable too). ≤ #sources ·
-    * depth · width rows — bounded no matter the corpus size.
+  /** Standing per-source count-min cell tables over the base carve —
+    * the sketch lifecycle the r11 verdict queued (KMV got it first; CMS
+    * counters are exactly mergeable too). ≤ #sources · depth · width
+    * rows — bounded no matter the corpus size.
     */
-  def ensureCmsCells(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "cms_cells", Seq("cells")) { base =>
-      cmsCellsBySource(cmsGrams(Tables.spread(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))))
-        .write.mode("overwrite").parquet(s"$base/cells")
-    }
+  private[graft] val cmsBase = BaseSummary("cms_cells", "cells",
+    d => cmsCellsBySource(cmsGrams(Tables.spread(d))))
 
   /** Incremental CMS REFRESH — the [[txKmvRefresh]] treatment for the
     * frequency sketch: the standing base-carve cell tables absorb the
@@ -3833,30 +3854,12 @@ object Text {
     * is the audit's cost, not the sketch's.
     */
   def txCmsRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureCmsCells(spark, dir)
-    val deltaCells = cmsCellsBySource(cmsGrams(Tables.spread(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))))
     // per-source base+delta merge AND the cross-source corpus fold are
     // the same counter addition — one sum does both
-    val cells = spark.read.parquet(s"$base/cells")
-      .unionByName(deltaCells)
-      .groupBy("j", "cell").agg(sum("cnt").as("cnt"))
-    val grams = graft.Caches.scoped("tx_cms_refresh.grams",
-      cmsGrams(Tables.spread(docs(spark, dir))))
-    val probes = grams.filter(col("source") === "src0")
-      .select("g").distinct().orderBy("g").limit(CmsProbeLimit)
-    val est = probes
-      .select(col("g"), explode(expr(s"sequence(0, ${CmsDepth - 1})")).as("j"))
-      .withColumn("cell", expr(cmsCellExpr))
-      .join(cells, Seq("j", "cell"))
-      .groupBy("g")
-      .agg(min("cnt").as("est_count"))
-    val exact = grams.join(probes, Seq("g"))
-      .groupBy("g")
-      .agg(count(lit(1)).as("exact_count"))
-    est.join(exact, Seq("g"))
-      .withColumn("overestimate", col("est_count") - col("exact_count"))
-      .orderBy("g")
+    val cells = counterMerge(Seq("j", "cell"), cmsBase.standing(spark, dir),
+      cmsBase.delta(spark, dir))
+    cmsServe(graft.Caches.scoped("tx_cms_refresh.grams",
+      cmsGrams(Tables.spread(docs(spark, dir)))), cells)
   }
 
   /** CMS RETRACT — the deletion half of the frequency-sketch lifecycle,
@@ -3869,7 +3872,7 @@ object Text {
     * an absent cell are the same sketch), after which retracted ≡
     * survivor-rebuild bit-for-bit — which is the oracle: the direct
     * full-sketch SQL text over the survivor carve, never seeing the
-    * standing tables. The delete carve is [[retractMod]]/[[retractRem]]
+    * standing tables. The delete carve is [[isRetracted]]
     * (the MV retract convention — cuts across base AND delta, so the
     * subtraction exercises counters that arrived via both merge paths).
     *
@@ -3879,33 +3882,12 @@ object Text {
     * txCmsRefresh note).
     */
   def txCmsRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureCmsCells(spark, dir)
-    val survives = pmod(col("doc_id"), lit(retractMod)) =!= lit(retractRem)
-    val deltaCells = cmsCellsBySource(cmsGrams(Tables.spread(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))))
-    val delCells = cmsCellsBySource(cmsGrams(Tables.spread(docs(spark, dir)
-        .filter(!survives))))
-      .select(col("source"), col("j"), col("cell"), (-col("cnt")).as("cnt"))
-    val cells = spark.read.parquet(s"$base/cells")
-      .unionByName(deltaCells).unionByName(delCells)
-      .groupBy("j", "cell").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") > 0)
-    val grams = graft.Caches.scoped("tx_cms_retract.grams",
-      cmsGrams(Tables.spread(docs(spark, dir).filter(survives))))
-    val probes = grams.filter(col("source") === "src0")
-      .select("g").distinct().orderBy("g").limit(CmsProbeLimit)
-    val est = probes
-      .select(col("g"), explode(expr(s"sequence(0, ${CmsDepth - 1})")).as("j"))
-      .withColumn("cell", expr(cmsCellExpr))
-      .join(cells, Seq("j", "cell"))
-      .groupBy("g")
-      .agg(min("cnt").as("est_count"))
-    val exact = grams.join(probes, Seq("g"))
-      .groupBy("g")
-      .agg(count(lit(1)).as("exact_count"))
-    est.join(exact, Seq("g"))
-      .withColumn("overestimate", col("est_count") - col("exact_count"))
-      .orderBy("g")
+    val d = docs(spark, dir)
+    val cells = counterMerge(Seq("j", "cell"), cmsBase.standing(spark, dir),
+      cmsBase.delta(spark, dir),
+      Some(cmsBase.summarize(d.filter(isRetracted(col("doc_id"))))))
+    cmsServe(graft.Caches.scoped("tx_cms_retract.grams",
+      cmsGrams(Tables.spread(d.filter(!isRetracted(col("doc_id")))))), cells)
   }
 
   /** Pairwise source-overlap estimation from the SAME per-source KMV
@@ -5759,9 +5741,9 @@ object Text {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val ref = docs(spark, dir).filter(col("source") === "src0")
     val baseH = lmHistogram(lmFeaturize(
-      ref.filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)))
+      ref.filter(!isDelta(col("doc_id")))))
     val deltaH = lmHistogram(lmFeaturize(
-      ref.filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)))
+      ref.filter(isDelta(col("doc_id")))))
     baseH
       .select(col("pos").as("j"), col("nb_j").as("b_nb"), col("nc_j").as("b_nc"))
       .join(deltaH.select(col("pos").as("j"),
@@ -6772,9 +6754,9 @@ object Text {
     rmRecursive(evoScratchDir)
     val scratch = evoScratchDir.toString
     val base = docs(spark, dir)
-    base.filter(col("doc_id") % 5 =!= 0)
+    base.filter(!isDelta(col("doc_id")))
       .write.mode("overwrite").parquet(s"$scratch/t/epoch=1")
-    base.filter(col("doc_id") % 5 === 0)
+    base.filter(isDelta(col("doc_id")))
       .withColumn("tok_count", size(split(col("text"), " ")).cast("long"))
       .write.mode("overwrite").parquet(s"$scratch/t/epoch=2")
     spark.read.option("mergeSchema", "true").parquet(s"$scratch/t")
@@ -6881,16 +6863,9 @@ object Text {
     statsColumns.map { case (c, s) => statsLeg(in, c, s) }
       .reduce(_ unionByName _)
 
-  /** Standing per-column stats over the BASE carve
-    * (`doc_id % incrementalDeltaMod != 0` — the [[ensureAggMv]]
-    * convention), built once under the warehouse.
-    */
-  def ensureStatsMv(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "stats_mv", Seq("stats")) { base =>
-      statsPartials(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(s"$base/stats")
-    }
+  /** Standing per-column stats over the base carve. */
+  private[graft] val statsMvBase =
+    BaseSummary("stats_mv", "stats", statsPartials)
 
   /** Incremental ANALYZE REFRESH — [[pipelineTableStats]]'s maintenance
     * form: the standing per-column stats table absorbs the delta carve
@@ -6906,10 +6881,8 @@ object Text {
     * sized scan, kilobytes of merge state, no corpus rescans.
     */
   def pipelineStatsRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureStatsMv(spark, dir)
-    val standing = spark.read.parquet(s"$base/stats")
-    val delta = statsPartials(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))
+    val standing = statsMvBase.standing(spark, dir)
+    val delta = statsMvBase.delta(spark, dir)
     def b(c: String) = col(s"b.$c"); def d(c: String) = col(s"d.$c")
     def addNullable(c: String) =
       when(b(c).isNull && d(c).isNull, lit(null).cast("long"))
@@ -7058,7 +7031,7 @@ object Text {
   }
 
   /** The (lang, source) partial-aggregate projection shared by the
-    * standing materialized aggregate ([[ensureAggMv]]) and the delta
+    * standing materialized aggregate ([[aggMvBase]]) and the delta
     * refresh pass — one definition (the mergeUpdates rule), so the
     * standing table and the refresh can never aggregate different
     * columns. Folds: counts and token sums (exact integers) and the
@@ -7074,24 +7047,23 @@ object Text {
         sum(size(split(col("text"), " "))).cast("long").as("n_tokens"),
         expr(s"bit_xor(${md5SignedHash64Expr("hd")})").as("text_xor"))
 
-  /** Standing materialized aggregate over the BASE carve
-    * (`doc_id % incrementalDeltaMod != 0` — the complement of the
-    * established delta convention), built once under the warehouse.
+  /** Standing materialized aggregate over the base carve. */
+  private[graft] val aggMvBase = BaseSummary("agg_mv", "aggs", aggMvPartials)
+
+  /** The refreshed view: standing base partials ⊕ the delta carve's —
+    * |groups| rows, served by the refresh and retracted from by the
+    * retract.
     */
-  def ensureAggMv(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "agg_mv", Seq("aggs")) { base =>
-      aggMvPartials(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(s"$base/aggs")
-    }
+  private def aggMvRefreshed(spark: SparkSession, dir: String): DataFrame =
+    aggMvMerge(aggMvBase.standing(spark, dir), aggMvBase.delta(spark, dir))
 
   /** Incremental materialized-view REFRESH — the lakehouse maintenance
     * pattern the reference's full-rewrite warehouse refresh
     * (`wrds_ingestion.py:1004-1125`) becomes at 100 TB: a standing
     * per-(lang, source) aggregate table absorbs a delta batch by MERGING
     * partial aggregates instead of recomputing the corpus. The delta
-    * pass reads ONLY the delta carve (`doc_id % incrementalDeltaMod = 0`
-    * — the [[ddIncremental]] convention), computes the same partials the
+    * pass reads ONLY the delta carve ([[isDelta]] — the
+    * [[ddIncremental]] convention), computes the same partials the
     * standing table holds ([[aggMvPartials]] — one shared definition),
     * and one bounded full-outer join on the group key adds counts and
     * XORs the hash folds (identity 0 for a side with no rows). Because
@@ -7107,13 +7079,8 @@ object Text {
     * O(|delta|) corpus bytes + |groups| standing rows — never the base
     * corpus. The merge join is bounded-by-groups on both sides.
     */
-  def pipelineAggRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureAggMv(spark, dir)
-    aggMvMerge(spark.read.parquet(s"$base/aggs"),
-        aggMvPartials(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)))
-      .orderBy("lang", "source")
-  }
+  def pipelineAggRefresh(spark: SparkSession, dir: String): DataFrame =
+    aggMvRefreshed(spark, dir).orderBy("lang", "source")
 
   /** The CDC delete carve for the MV retract path — shared with the
     * generated oracle (the kmeansCtes rule). Deliberately NOT the delta
@@ -7123,6 +7090,12 @@ object Text {
     */
   private[graft] val retractMod = 7L
   private[graft] val retractRem = 3L
+
+  /** The delete carve (`doc_id % retractMod = retractRem`) — the one
+    * Spark-side statement of it; survivors are `!isRetracted(id)`.
+    */
+  private[graft] def isRetracted(id: Column): Column =
+    pmod(id, lit(retractMod)) === lit(retractRem)
 
   /** Incremental MV RETRACT — the delete half of the refresh lifecycle
     * (CDC retraction; Delta/Iceberg MERGE DELETE at the aggregate
@@ -7141,15 +7114,10 @@ object Text {
     * [[pipelineAggRefresh]], applied to deletes.
     */
   def pipelineAggRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureAggMv(spark, dir)
-    // the refreshed standing view (base ⊕ delta), |groups| rows
-    val standingFull = aggMvMerge(
-      spark.read.parquet(s"$base/aggs"),
-      aggMvPartials(docs(spark, dir)
-        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)))
+    val standingFull = aggMvRefreshed(spark, dir)
       .select("lang", "source", "n_docs", "n_tokens", "text_xor")
     val deleted = aggMvPartials(docs(spark, dir)
-      .filter(pmod(col("doc_id"), lit(retractMod)) === lit(retractRem)))
+      .filter(isRetracted(col("doc_id"))))
     aggMvRetract(standingFull, deleted).orderBy("lang", "source")
   }
 
@@ -7341,27 +7309,19 @@ object Text {
     * in this corpus family — asserted at build), t = Σ tf over all
     * postings.
     *
-    * `excludeDeltaMod` carves the index corpus for the upsert demo
-    * (docs with `doc_id % mod = 0` left OUT of the build — the
-    * fuzzyBuildIndex carve); the index name must differ per carve, and
-    * the carve tag is part of the memo key.
+    * `part` names the corpus the index covers: `"full"` (the shared
+    * index, `bm25_index`), or the upsert demo's `"base"` / `"delta"`
+    * carve ([[isDelta]]; `bm25_base` / `bm25_delta`).
     */
   def ensureBm25Index(spark: SparkSession, dir: String,
-      name: String = "bm25_index",
-      excludeDeltaMod: Option[Long] = None,
-      onlyDeltaMod: Option[Long] = None): String = {
-    require(excludeDeltaMod.isEmpty || onlyDeltaMod.isEmpty,
-      "at most one carve")
-    val carveTag = excludeDeltaMod.map("ex" + _)
-      .orElse(onlyDeltaMod.map("on" + _)).getOrElse("full")
-    graft.Standing.dir(spark, dir, name, Seq("termstats"), carveTag) { base =>
-      val corpus = (excludeDeltaMod, onlyDeltaMod) match {
-        case (Some(m), _) =>
-          docs(spark, dir).filter(pmod(col("doc_id"), lit(m)) =!= 0)
-        case (_, Some(m)) =>
-          docs(spark, dir).filter(pmod(col("doc_id"), lit(m)) === 0)
-        case _ => docs(spark, dir)
-      }
+      part: String = "full"): String = {
+    val (name, keep) = part match {
+      case "full" => ("bm25_index", None)
+      case "base" => ("bm25_base", Some(!isDelta(col("doc_id"))))
+      case "delta" => ("bm25_delta", Some(isDelta(col("doc_id"))))
+    }
+    graft.Standing.dir(spark, dir, name, Seq("termstats"), part) { base =>
+      val corpus = keep.fold(docs(spark, dir))(docs(spark, dir).filter(_))
       val toks = Tables.spread(corpus)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
@@ -7433,7 +7393,7 @@ object Text {
   /** BM25 UPSERT serve — completing the standing index's lifecycle
     * (VERDICT r11 missing #1: IVF/PQ/graph/BQ/fuzzy/LM/BPE/MV all carry
     * build/serve/upsert/delete; BM25 had build/serve only). The base
-    * index holds the base carve (`doc_id % 5 ≠ 0`); the delta docs
+    * index holds the base carve (`!isDelta`); the delta docs
     * arrive as a SEPARATE standing overlay built by the same builder
     * over the delta carve (`append postings` = a second tb-partitioned
     * dir read union-style — merge-on-read, the ivf_del rule: the base
@@ -7446,26 +7406,34 @@ object Text {
     */
   def txBm25Upsert(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     val terms = bm25Terms
-    val b = ensureBm25Index(spark, dir, "bm25_base",
-      excludeDeltaMod = Some(incrementalDeltaMod))
-    val o = ensureBm25Index(spark, dir, "bm25_delta",
-      onlyDeltaMod = Some(incrementalDeltaMod))
+    val b = ensureBm25Index(spark, dir, "base")
+    val o = ensureBm25Index(spark, dir, "delta")
     val postings = bm25PrunedPostings(spark, b, terms)
       .unionByName(bm25PrunedPostings(spark, o, terms))
+    val stats = bm25MergedStats(spark, b, o)
+      .filter(col("term").isin(terms: _*))
+      .select("term", "df", "n", "t")
+    bm25Gather(postings, stats, k)
+  }
+
+  /** The merged termstats of a base and a delta index — df summed per
+    * term with the two carve contributions beside it, corpus totals
+    * added. df/n/t are SUMS, so this is the whole upsert merge.
+    */
+  private def bm25MergedStats(spark: SparkSession, b: String,
+      o: String): DataFrame = {
     val (bn, bt) = bm25Totals(spark, b)
     val (dn, dt) = bm25Totals(spark, o)
-    val bDf = spark.read.parquet(s"$b/termstats")
-      .filter(col("term").isin(terms: _*))
+    spark.read.parquet(s"$b/termstats")
       .select(col("term"), col("df").as("df_b"))
-    val dDf = spark.read.parquet(s"$o/termstats")
-      .filter(col("term").isin(terms: _*))
-      .select(col("term"), col("df").as("df_d"))
-    val stats = bDf.join(dDf, Seq("term"), "full_outer")
+      .join(spark.read.parquet(s"$o/termstats")
+        .select(col("term"), col("df").as("df_d")), Seq("term"), "full_outer")
       .select(col("term"),
         (coalesce(col("df_b"), lit(0L)) + coalesce(col("df_d"), lit(0L)))
           .as("df"),
+        coalesce(col("df_b"), lit(0L)).as("df_base"),
+        coalesce(col("df_d"), lit(0L)).as("df_delta"),
         lit(bn + dn).as("n"), lit(bt + dt).as("t"))
-    bm25Gather(postings, stats, k)
   }
 
   /** BM25 DELETE serve — tombstones anti-joined merge-on-read against
@@ -7476,7 +7444,7 @@ object Text {
     * totals drop by the tombstoned docs' (count, Σdl) off the bounded
     * `doclens/` table. Output is bit-identical to the direct query over
     * the surviving corpus (the oracle re-derives everything from raw
-    * text with `doc_id % 5 ≠ 0`).
+    * text with `doc_id % incrementalDeltaMod ≠ 0`).
     */
   def txBm25Delete(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     val terms = bm25Terms
@@ -7501,7 +7469,7 @@ object Text {
     bm25Gather(postings, stats, k)
   }
 
-  /** The delete demo's tombstone overlay: doc_ids with `doc_id % 5 = 0`,
+  /** The delete demo's tombstone overlay: the delta carve's doc_ids,
     * written ONCE from the index's own `doclens/` (no text scan) into a
     * dir separate from the shared index (the ivf_del isolation rule).
     */
@@ -7509,7 +7477,7 @@ object Text {
     graft.Standing.dir(spark, dir, "bm25_tombstones", Seq("ids")) { base =>
       val idx = ensureBm25Index(spark, dir)
       spark.read.parquet(s"$idx/doclens")
-        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+        .filter(isDelta(col("doc_id")))
         .select(col("doc_id"))
         .write.mode("overwrite").parquet(s"$base/ids")
     }
@@ -7522,25 +7490,10 @@ object Text {
     * row count), so a lossless merge can't hide behind the three query
     * terms.
     */
-  def txBm25Refresh(spark: SparkSession, dir: String): DataFrame = {
-    val b = ensureBm25Index(spark, dir, "bm25_base",
-      excludeDeltaMod = Some(incrementalDeltaMod))
-    val o = ensureBm25Index(spark, dir, "bm25_delta",
-      onlyDeltaMod = Some(incrementalDeltaMod))
-    val (bn, bt) = bm25Totals(spark, b)
-    val (dn, dt) = bm25Totals(spark, o)
-    spark.read.parquet(s"$b/termstats")
-      .select(col("term"), col("df").as("df_b"))
-      .join(spark.read.parquet(s"$o/termstats")
-        .select(col("term"), col("df").as("df_d")), Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df_b"), lit(0L)) + coalesce(col("df_d"), lit(0L)))
-          .as("df"),
-        coalesce(col("df_b"), lit(0L)).as("df_base"),
-        coalesce(col("df_d"), lit(0L)).as("df_delta"),
-        lit(bn + dn).as("n"), lit(bt + dt).as("t"))
+  def txBm25Refresh(spark: SparkSession, dir: String): DataFrame =
+    bm25MergedStats(spark, ensureBm25Index(spark, dir, "base"),
+      ensureBm25Index(spark, dir, "delta"))
       .orderBy("term")
-  }
 
   /** The partial-aggregate MERGE itself, factored over any (standing,
     * delta) pair of [[aggMvPartials]]-shaped frames — one definition for
@@ -7623,29 +7576,24 @@ object Text {
   }
 
   /** Standing first-seen gram index for the BASE snapshot — the distinct
-    * 60-bit 8-gram keys of the base carve, persisted once
-    * ([[ensureCmsCells]] discipline). The incremental novelty probe
+    * 60-bit 8-gram keys of the base carve. The incremental novelty probe
     * reads THIS instead of rescanning the base corpus.
     */
-  def ensureNoveltyGrams(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "novelty_grams", Seq("grams")) { base =>
-      Tables.spread(docs(spark, dir))
-        .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0)
-        .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= 8)
-        .select(explode(expr(shingleExpr(8))).as("g"))
-        .select(expr(
-          "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)")
-          .as("gk"))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$base/grams")
-    }
+  private[graft] val noveltyBase = BaseSummary("novelty_grams", "grams",
+    d => Tables.spread(d)
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 8)
+      .select(explode(expr(shingleExpr(8))).as("g"))
+      .select(expr(
+        "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)")
+        .as("gk"))
+      .distinct())
 
   /** INCREMENTAL NOVELTY — [[txNoveltyProfile]]'s lifecycle form, the
     * way a real pipeline scores crawl N+1 against crawl N (the
     * dd_incremental admission semantics applied to grams): the delta
-    * carve's grams probe the STANDING base gram index ([[
-    * ensureNoveltyGrams]]) — a gram is novel iff it is absent from the
+    * carve's grams probe the STANDING base gram index
+    * ([[noveltyBase]]) — a gram is novel iff it is absent from the
     * base snapshot AND this doc is its first carrier within the batch
     * (keep-first). Snapshot order, not id order: a gram in base is
     * never novel in the delta, whatever the ids say — the semantics
@@ -7659,16 +7607,14 @@ object Text {
     * the whole point of the standing index.
     */
   def txNoveltyIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureNoveltyGrams(spark, dir)
-    val delta = Tables.spread(docs(spark, dir))
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
+    val delta = Tables.spread(docs(spark, dir)).filter(isDelta(col("doc_id")))
     val toks = delta.withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 8)
     val sh = toks
       .select(col("doc_id"), explode(expr(shingleExpr(8))).as("g"))
       .select(col("doc_id"), expr(
         "CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gk"))
-    val baseGk = spark.read.parquet(s"$base/grams")
+    val baseGk = noveltyBase.standing(spark, dir)
     val inBase = sh.join(baseGk, Seq("gk"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("nb"))
     val novel = sh.join(baseGk, Seq("gk"), "left_anti")
@@ -7781,17 +7727,34 @@ object Text {
     * quantile sketch).
     */
   private[graft] def histCells(df: DataFrame): DataFrame =
-    df.select(col("source"),
-        least(expr(s"size(split(text, ' ')) div $histBucketWidth"),
-          lit(histMaxBucket)).cast("long").as("bucket"))
+    histCellsOfLens(histLens(df))
+
+  /** (doc_id, source, n_toks) — the token-count projection the cells
+    * bucket and the exact-percentile audit ranks.
+    */
+  private def histLens(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), col("source"),
+      expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_toks"))
+
+  /** Bucket counters over a [[histLens]] frame — the one statement of
+    * the fixed-width bucket.
+    */
+  private def histCellsOfLens(lens: DataFrame): DataFrame =
+    lens.select(col("source"),
+        least(expr(s"n_toks div $histBucketWidth"), lit(histMaxBucket))
+          .cast("long").as("bucket"))
       .groupBy("source", "bucket").agg(count(lit(1)).as("cnt"))
 
-  def ensureHistCells(spark: SparkSession, dir: String): String =
-    graft.Standing.dir(spark, dir, "hist_cells", Seq("cells")) { base =>
-      histCells(docs(spark, dir)
-          .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) =!= 0))
-        .write.mode("overwrite").parquet(s"$base/cells")
-    }
+  /** Standing per-source histogram cells over the base carve. */
+  private[graft] val histBase = BaseSummary("hist_cells", "cells", histCells)
+
+  /** The corpus lengths both histogram serves read: ONE tokenize pass
+    * feeds the delta/delete counters and the exact audit leg (uncached
+    * this split ran twice — the shared-projection rule); the bounded
+    * (source, n_toks) rollup is what gets cached.
+    */
+  private def histCorpusLens(spark: SparkSession, dir: String): DataFrame =
+    graft.Caches.scoped("tx_hist.lens", histLens(docs(spark, dir)))
 
   /** HISTOGRAM-QUANTILE REFRESH — the quantile member of the sketch
     * lifecycle family (KMV = cardinality, CMS = frequency, histogram =
@@ -7816,23 +7779,10 @@ object Text {
     * cost, not the sketch's — the [[txCmsRefresh]] note).
     */
   def txHistRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureHistCells(spark, dir)
-    // ONE tokenize pass feeds both the delta counters and the exact
-    // audit leg (uncached this split ran twice — the shared-projection
-    // rule); the bounded (source, n_toks) rollup is what gets cached
-    val lens0 = graft.Caches.scoped("tx_hist.lens",
-      docs(spark, dir)
-        .select(col("doc_id"), col("source"),
-          expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_toks")))
-    val deltaCells = lens0
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0)
-      .select(col("source"),
-        least(expr(s"n_toks div $histBucketWidth"), lit(histMaxBucket))
-          .cast("long").as("bucket"))
-      .groupBy("source", "bucket").agg(count(lit(1)).as("cnt"))
-    val cells = spark.read.parquet(s"$base/cells")
-      .unionByName(deltaCells)
-      .groupBy("source", "bucket").agg(sum("cnt").as("cnt"))
+    val standing = histBase.standing(spark, dir)
+    val lens0 = histCorpusLens(spark, dir)
+    val cells = counterMerge(Seq("source", "bucket"), standing,
+        histCellsOfLens(lens0.filter(isDelta(col("doc_id")))))
       .localCheckpoint(false)
     histServe(cells, lens0)
   }
@@ -7879,33 +7829,19 @@ object Text {
     * was once counted, the difference is exactly the survivor rebuild —
     * not an approximation of it): the standing base cells absorb the
     * delta carve by addition and the retract carve
-    * (`doc_id ≡ retractRem mod retractMod`) by subtraction, empty
+    * ([[isRetracted]]) by subtraction, empty
     * buckets drop, and the merged sketch serves the same
     * quantile-containment report over the SURVIVOR corpus. The oracle
     * recomputes from surviving raw text only — subtraction ≡ rebuild.
     */
   def txHistRetract(spark: SparkSession, dir: String): DataFrame = {
-    val base = ensureHistCells(spark, dir)
-    val survives = pmod(col("doc_id"), lit(retractMod)) =!= lit(retractRem)
-    val lens0 = graft.Caches.scoped("tx_hist.lens",
-      docs(spark, dir)
-        .select(col("doc_id"), col("source"),
-          expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_toks")))
-    def cellsOf(df: DataFrame): DataFrame =
-      df.select(col("source"),
-          least(expr(s"n_toks div $histBucketWidth"), lit(histMaxBucket))
-            .cast("long").as("bucket"))
-        .groupBy("source", "bucket").agg(count(lit(1)).as("cnt"))
-    val deltaCells = cellsOf(lens0
-      .filter(pmod(col("doc_id"), lit(incrementalDeltaMod)) === 0))
-    val delCells = cellsOf(lens0.filter(!survives))
-      .select(col("source"), col("bucket"), (-col("cnt")).as("cnt"))
-    val cells = spark.read.parquet(s"$base/cells")
-      .unionByName(deltaCells).unionByName(delCells)
-      .groupBy("source", "bucket").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") > 0)
+    val standing = histBase.standing(spark, dir)
+    val lens0 = histCorpusLens(spark, dir)
+    val cells = counterMerge(Seq("source", "bucket"), standing,
+        histCellsOfLens(lens0.filter(isDelta(col("doc_id")))),
+        Some(histCellsOfLens(lens0.filter(isRetracted(col("doc_id"))))))
       .localCheckpoint(false)
-    histServe(cells, lens0.filter(survives))
+    histServe(cells, lens0.filter(!isRetracted(col("doc_id"))))
   }
 
   // ---------------------------------------------------------------------

@@ -369,10 +369,9 @@ object StreamingOps {
     * In production this is the persisted digest index the batch operator's
     * scaladoc describes, refreshed by compaction between stream restarts.
     */
-  def baseDigestKeys(spark: SparkSession, dir: String,
-      deltaMod: Long = graft.queries.Text.incrementalDeltaMod): DataFrame =
+  def baseDigestKeys(spark: SparkSession, dir: String): DataFrame =
     graft.Tables(spark, dir, "documents")
-      .filter(pmod(col("doc_id"), lit(deltaMod)) =!= 0)
+      .filter(!graft.queries.Text.isDelta(col("doc_id")))
       .select(expr(graft.queries.Text.textDigestExpr).as("hk"))
       .distinct()
 
@@ -796,12 +795,11 @@ object StreamingOps {
     * [[graft.multimodal.Multimodal.frameDedup]] rule — media landing
     * later dedup against what the lake already holds).
     */
-  def baseFrameKeys(spark: SparkSession, dir: String,
-      deltaMod: Long = 5L): DataFrame =
+  def baseFrameKeys(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Multimodal.frameSample(
       graft.multimodal.Multimodal.fromDocuments(
         graft.Tables(spark, dir, "documents")
-          .filter(col("doc_id") % deltaMod =!= 0)))
+          .filter(!graft.queries.Text.isDelta(col("doc_id")))))
       .select("frame_md5").distinct()
 
   /** Streaming twin of the frame dedup's admission half — dedup media at

@@ -32,7 +32,7 @@ class AggRefreshSpec extends SparkSpec {
   }
 
   test("refresh reads the corpus once — the delta carve, never the base") {
-    Text.ensureAggMv(spark, dir) // standing table in place before planning
+    Text.aggMvBase.ensure(spark, dir) // standing table in place before planning
     val df = Text.pipelineAggRefresh(spark, dir)
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val corpusScans = df.queryExecution.optimizedPlan.collect {
@@ -59,7 +59,7 @@ class AggRefreshSpec extends SparkSpec {
       .writeStream.format("memory").queryName("aggmv_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not drain within timeout")
-    val base = Text.ensureAggMv(spark, dir)
+    val base = Text.aggMvBase.ensure(spark, dir)
     val merged = Text.aggMvMerge(spark.read.parquet(s"$base/aggs"),
         spark.table("aggmv_stream"))
       .orderBy("lang", "source").collect()
@@ -101,7 +101,7 @@ class AggRefreshSpec extends SparkSpec {
       .writeStream.format("memory").queryName("aggmv_retract_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not drain within timeout")
-    val base = Text.ensureAggMv(spark, dir)
+    val base = Text.aggMvBase.ensure(spark, dir)
     val standingFull = Text.aggMvMerge(spark.read.parquet(s"$base/aggs"),
         Text.aggMvPartials(Tables(spark, dir, "documents")
           .filter(pmod(col("doc_id"), lit(Text.incrementalDeltaMod)) === 0)))
@@ -116,7 +116,7 @@ class AggRefreshSpec extends SparkSpec {
   }
 
   test("the standing table is served, not rebuilt per refresh") {
-    val base = Text.ensureAggMv(spark, dir)
+    val base = Text.aggMvBase.ensure(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(s"$base/aggs/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t0 = fs.getFileStatus(marker).getModificationTime

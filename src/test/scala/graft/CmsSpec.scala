@@ -59,7 +59,7 @@ class CmsSpec extends SparkSpec {
   }
 
   test("standing cells are served, not rebuilt per refresh") {
-    val base = Text.ensureCmsCells(spark, sf001)
+    val base = Text.cmsBase.ensure(spark, sf001)
     val marker = new org.apache.hadoop.fs.Path(s"$base/cells/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t0 = fs.getFileStatus(marker).getModificationTime
@@ -82,7 +82,7 @@ class CmsSpec extends SparkSpec {
       .writeStream.format("memory").queryName("cms_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not drain within timeout")
-    val base = Text.ensureCmsCells(spark, sf001)
+    val base = Text.cmsBase.ensure(spark, sf001)
     def toMap(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[Int]("j"), r.getAs[Long]("cell")) ->
         r.getAs[Long]("cnt")).toMap

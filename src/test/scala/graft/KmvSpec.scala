@@ -108,7 +108,7 @@ class KmvSpec extends SparkSpec {
   }
 
   test("refresh scans the corpus once — the delta carve, never the base") {
-    Text.ensureKmvSketches(spark, sf001) // standing table before planning
+    Text.kmvBase.ensure(spark, sf001) // standing table before planning
     val df = Text.txKmvRefresh(spark, sf001)
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val corpusScans = df.queryExecution.optimizedPlan.collect {
@@ -145,7 +145,7 @@ class KmvSpec extends SparkSpec {
       directAll.map(_.toSeq).toSeq,
       "re-merged ALL row drifted from the survivor rebuild")
     // scan shape: one corpus scan (the delta leg), same as the refresh
-    Text.ensureKmvSketches(spark, sf001)
+    Text.kmvBase.ensure(spark, sf001)
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val corpusScans = Text.txKmvRetract(spark, sf001)
       .queryExecution.optimizedPlan.collect {
@@ -159,7 +159,7 @@ class KmvSpec extends SparkSpec {
   }
 
   test("standing sketches are served, not rebuilt per refresh") {
-    val base = Text.ensureKmvSketches(spark, sf001)
+    val base = Text.kmvBase.ensure(spark, sf001)
     val marker = new org.apache.hadoop.fs.Path(s"$base/sketches/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t0 = fs.getFileStatus(marker).getModificationTime
@@ -183,7 +183,7 @@ class KmvSpec extends SparkSpec {
       .writeStream.format("memory").queryName("kmv_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not drain within timeout")
-    val base = Text.ensureKmvSketches(spark, sf001)
+    val base = Text.kmvBase.ensure(spark, sf001)
     val merged = spark.read.parquet(s"$base/sketches")
       .select(col("source"), explode(col("sketch")).as("gk"))
       .unionByName(spark.table("kmv_stream").select("source", "gk"))

@@ -189,7 +189,7 @@ class NoveltyHistSpec extends SparkSpec {
       .writeStream.format("memory").queryName("hist_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000), "stream did not drain within timeout")
-    val base = Text.ensureHistCells(spark, sf)
+    val base = Text.histBase.ensure(spark, sf)
     def toMap(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getAs[String]("source"), r.getAs[Long]("bucket")) ->
         r.getAs[Long]("cnt")).toMap

@@ -97,11 +97,14 @@ class OpqLifecycleSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found under ${root.toAbsolutePath}")
     // (fragment, the def that owns it): the Spark-side delta carve, its
-    // DuckDB twin and the oracle's occupancy-audit tail
+    // DuckDB twin, the oracle's occupancy-audit tail, and Text's
+    // incremental delta and delete carves
     val pinned = Seq(
       "% upsertDeltaMod === 0" -> "def upsertDeltaFrame(",
       "upsertDeltaMod} = 0" -> "def deltaBatchCte(",
-      "coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total" -> "def upsertAuditSql(")
+      "coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total" -> "def upsertAuditSql(",
+      "lit(incrementalDeltaMod)" -> "def isDelta(",
+      "lit(retractMod)" -> "def isRetracted(")
     val sources = java.nio.file.Files.walk(root).iterator().asScala.toList
       .filter(_.toString.endsWith(".scala"))
       .map(src => src -> java.nio.file.Files.readAllLines(src).asScala.toIndexedSeq)

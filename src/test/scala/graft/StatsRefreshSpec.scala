@@ -48,7 +48,7 @@ class StatsRefreshSpec extends SparkSpec {
   }
 
   test("refresh serves off the standing table without rebuilding it") {
-    val base = Text.ensureStatsMv(spark, dir)
+    val base = Text.statsMvBase.ensure(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(s"$base/stats/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t0 = fs.getFileStatus(marker).getModificationTime

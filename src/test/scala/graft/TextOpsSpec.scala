@@ -677,8 +677,8 @@ class TextOpsSpec extends SparkSpec {
     val fsConf = spark.sparkContext.hadoopConfiguration
     val markers = Seq(
       s"${Text.ensureBm25Index(spark, sfDir)}/termstats/_SUCCESS",
-      s"${Text.ensureBm25Index(spark, sfDir, "bm25_base", excludeDeltaMod = Some(5L))}/termstats/_SUCCESS",
-      s"${Text.ensureBm25Index(spark, sfDir, "bm25_delta", onlyDeltaMod = Some(5L))}/termstats/_SUCCESS",
+      s"${Text.ensureBm25Index(spark, sfDir, "base")}/termstats/_SUCCESS",
+      s"${Text.ensureBm25Index(spark, sfDir, "delta")}/termstats/_SUCCESS",
       s"${Text.ensureBm25Tombstones(spark, sfDir)}/ids/_SUCCESS")
       .map(new org.apache.hadoop.fs.Path(_))
     val mtimes = markers.map(m =>
