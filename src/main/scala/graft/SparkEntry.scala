@@ -1747,10 +1747,6 @@ object SparkEntry {
     val rounds = Similarity.knnDescentRounds
     require(Similarity.knnDescentNbits == 8,
       "the oracle's lsh_bucket replica is generated for 8 bits")
-    def scored(pairs: String): String =
-      s"""SELECT p.src, p.dst,
-         |    list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
-         |  FROM $pairs p JOIN e a ON a.vec_id = p.src JOIN e b ON b.vec_id = p.dst""".stripMargin
     val ringSelects = Similarity.knnDescentStrides.map(s =>
       s"SELECT vec_id AS src, (vec_id + $s) % n AS dst FROM e, cnt")
     val roundCtes = (1 to rounds).map { r =>
@@ -1770,7 +1766,7 @@ object SparkEntry {
          |  UNION SELECT src, dst FROM g${r - 1}),
          |g$r AS MATERIALIZED (
          |  SELECT src, dst, cosine, row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rnk
-         |  FROM (${scored(s"pr$r")})
+         |  FROM (${scoredPairsSql(s"pr$r", "e")})
          |  QUALIFY rnk <= $k)""".stripMargin
     }.mkString(",\n")
     // e is MATERIALIZED: DuckDB inlines plain CTEs, so the dozens of
@@ -1792,7 +1788,7 @@ object SparkEntry {
        |  ${ringSelects.mkString("\n  UNION\n  ")}),
        |g0 AS MATERIALIZED (
        |  SELECT src, dst, cosine, row_number() OVER (PARTITION BY src ORDER BY cosine DESC, dst ASC) AS rnk
-       |  FROM (${scored("p0")})
+       |  FROM (${scoredPairsSql("p0", "e")})
        |  QUALIFY rnk <= $k),
        |$roundCtes""".stripMargin.stripPrefix("WITH ")
   }
@@ -2605,19 +2601,22 @@ object SparkEntry {
        |      list_reduce(list_transform(range(1, 65), i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), (x, y) -> x + y) / (a.norm * b.norm) AS cosine
        |    FROM $pairs p JOIN $rel a ON a.vec_id = p.src JOIN $rel b ON b.vec_id = p.dst""".stripMargin
 
-  /** `n` MATERIALIZED beam hops `<prefix>1..n` from `<prefix>0` over a
-    * (v, u) adjacency `graph`, each hop keeping the top `b` members of
-    * `members` by cosine to the query rows of `qsrc` — the insert and
-    * serve walks of the compacted-graph and upserted-HNSW oracles.
+  /** `n` MATERIALIZED beam hops `<prefix>1..n` from `start` (by default
+    * `<prefix>0`) over a (v, u) adjacency `graph`, each hop keeping the
+    * top `b` members of `members` by cosine to the query rows of `qsrc`
+    * — every walk oracle's hop chain (graph search, upsert, delete,
+    * compacted, HNSW, and the beam curve's per-beam walks from one
+    * shared `f0`).
     */
   private def hopChainSql(prefix: String, graph: String, qsrc: String,
-      members: String, b: Int, n: Int): String =
+      members: String, b: Int, n: Int, start: Option[String] = None): String =
     (1 to n).map { h =>
+      val prev = if (h == 1) start.getOrElse(s"${prefix}0") else s"$prefix${h - 1}"
       s"""${prefix}x$h AS MATERIALIZED (
          |  SELECT DISTINCT qid, vid FROM (
-         |    SELECT qid, vid FROM $prefix${h - 1}
+         |    SELECT qid, vid FROM $prev
          |    UNION ALL
-         |    SELECT f.qid, g2.u AS vid FROM $prefix${h - 1} f JOIN $graph g2 ON g2.v = f.vid)
+         |    SELECT f.qid, g2.u AS vid FROM $prev f JOIN $graph g2 ON g2.v = f.vid)
          |  WHERE vid <> qid),
          |$prefix$h AS MATERIALIZED (
          |  SELECT qid, vid, $walkQcos AS cosine,
@@ -2847,44 +2846,17 @@ object SparkEntry {
     deltaBatchCte("qsrc", norm = true, materialized = true),
     Similarity.knnDescentK)
 
-  /** The shared beam-walk oracle generator — one hop-unrolled text over a
-    * pluggable query-source CTE (corpus head for the search, the delta
-    * carve for the upsert), so serve and insert can never walk different
-    * graphs.
-    */
-  /** The unrolled beam-walk hop chain over a `graph`/`qsrc`/`f0` scope —
-    * factored from [[graphSearchSqlOver]] with the beam and CTE-name
-    * prefix as arguments so the beam operating-point curve can unroll
-    * several walks over ONE shared graph (VERDICT r15 item 6).
-    */
-  private def walkHopCtes(beam: Int, hops: Int, p: String,
-      f0: String): String =
-    (1 to hops).map { h =>
-      val prev = if (h == 1) f0 else s"${p}f${h - 1}"
-      s"""${p}x$h AS (
-         |  SELECT DISTINCT qid, vid FROM (
-         |    SELECT qid, vid FROM $prev
-         |    UNION ALL
-         |    SELECT f.qid, g.u AS vid FROM $prev f JOIN graph g ON g.v = f.vid)
-         |  WHERE vid <> qid),
-         |${p}f$h AS (
-         |  SELECT qid, vid,
-         |    $walkQcos AS cosine,
-         |    row_number() OVER (PARTITION BY qid ORDER BY
-         |      $walkQcos DESC, vid ASC) AS rnk
-         |  FROM ${p}x$h x JOIN e a ON a.vec_id = x.vid JOIN qsrc qq ON qq.vec_id = x.qid
-         |  QUALIFY rnk <= $beam)""".stripMargin
-    }.mkString(",\n")
-
   /** DuckDB twin of [[graft.queries.Similarity.simBeamCurve]]: ONE
-    * descent chain + graph, one walk unroll per beam (the
-    * [[walkHopCtes]] prefixes), each cut to top-5 and scored against
-    * the exact cosine top-5 with the probe-curve truth join.
+    * descent chain + graph, one walk unroll per beam ([[hopChainSql]]
+    * prefixes `b<beam>_f`, all from the shared `f0`), each cut to top-5
+    * and scored against the exact cosine top-5 with the probe-curve
+    * truth join.
     */
   private def beamCurveSql: String = {
     val hops = Similarity.graphSearchHops
     val walks = Similarity.beamCurveBeams.map(b =>
-      walkHopCtes(b, hops, s"b${b}_", "f0")).mkString(",\n")
+      hopChainSql(s"b${b}_f", "graph", "qsrc", "e", b, hops, start = Some("f0")))
+      .mkString(",\n")
     val metrics = Similarity.beamCurveBeams.map { b =>
       s"""mb_$b AS (
          |  SELECT $b AS beam,
@@ -2917,6 +2889,11 @@ object SparkEntry {
        |ORDER BY beam""".stripMargin
   }
 
+  /** The shared beam-walk oracle generator — one hop-unrolled text over a
+    * pluggable query-source CTE (corpus head for the search, the delta
+    * carve for the upsert), so serve and insert can never walk different
+    * graphs.
+    */
   private def graphSearchSqlOver(querySrcCte: String, k: Int,
       extraCtes: String = "",
       graphSel: String =
@@ -2926,7 +2903,7 @@ object SparkEntry {
       tailCtes: String = "", finalSel: String = ""): String = {
     val hops = Similarity.graphSearchHops
     val hopCtes =
-      walkHopCtes(Similarity.graphSearchBeam, hops, "", "f0")
+      hopChainSql("f", "graph", "qsrc", "e", Similarity.graphSearchBeam, hops)
     val tc = if (tailCtes.nonEmpty) s",\n$tailCtes\n" else "\n"
     val fin = if (finalSel.nonEmpty) finalSel
       else

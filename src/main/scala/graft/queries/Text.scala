@@ -32,6 +32,57 @@ object Text {
     s"array_distinct(transform(sequence(0, size(toks) - $width), i -> concat_ws(' ', $terms)))"
   }
 
+  /** Width of the long shingle: benchmark decontamination (exact,
+    * hashed, Bloom, overlap fraction, the prepare recipe's stage 4 and
+    * the stream twins), the ExactSubstr span passes and the novelty
+    * profile. Short shingles over a small vocabulary flag everything
+    * (3-grams mark 84% of this corpus as contaminated); 8-grams isolate
+    * exactly the planted cross-source duplicates.
+    */
+  private[graft] val GramWidth = 8
+
+  /** The benchmark split the decontamination family holds out. */
+  private[graft] val BenchmarkSource = "src0"
+
+  /** The near-dup band geometry, one for the whole MinHash family (index
+    * build, delta admission, the upsert/delete overlays, the cc closures,
+    * fuzzy decontamination and the stream twins): `NumSlots` minhash
+    * slots in bands of `BandSize` rows, so b = 4 bands of r = 4 rows and
+    * the banding S-curve P(candidate | j) = 1 − (1 − j^r)^b is 0.986 at
+    * j = 0.9, with its inflection near the `NearDupThreshold` τ = 0.5
+    * that confirms a pair ([[ddLshScurve]] measures the curve).
+    */
+  private[graft] val NumSlots = 16
+  private[graft] val BandSize = 4
+  private[graft] val NearDupThreshold = 0.5
+
+  /** MinHash band rows `(carry…, band, key)` of a frame with a `toks`
+    * column — the ONE Spark-side band projection, so the geometry
+    * cannot drift between the family's members. `xx` selects the
+    * engine-native xxhash64 chain ([[ddMinhashLshXx]]) instead of the
+    * md5 chain the DuckDB oracles replicate.
+    */
+  private[graft] def bandRows(toks: DataFrame, carry: Seq[Column],
+      xx: Boolean = false): DataFrame = {
+    val bands =
+      if (xx) s"minhash_xx_bands(toks, 3, $NumSlots, $BandSize)"
+      else s"minhash_bands(toks, 3, $NumSlots, $BandSize)"
+    toks.select(carry :+ posexplode(expr(bands)).as(Seq("band", "key")): _*)
+  }
+
+  /** Exact shingle-set Jaccard of each row's `sh_a` and `sh_b` arrays
+    * (distinct shingles): adds `inter` = |a ∩ b| and `jaccard` =
+    * inter / (|a| + |b| − inter) — the ONE Spark-side Jaccard of the
+    * near-dup family. A null side (an outer-join miss) gives null.
+    */
+  private[graft] def withJaccard(pairs: DataFrame): DataFrame = pairs
+    .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
+    .withColumn("jaccard", col("inter").cast("double") /
+      (expr("size(sh_a)") + expr("size(sh_b)") - col("inter")))
+
+  /** A [[withJaccard]] row's pair is a confirmed near-dup. */
+  private[graft] val isNearDup: Column = col("jaccard") >= NearDupThreshold
+
   /** Tokenized (doc_id, lang, toks) projection shared by the MinHash-band
     * near-dup family. spread: the md5 minhash is the expensive narrow
     * stage (16 digests per shingle) — see Tables.spread on why small
@@ -60,11 +111,8 @@ object Text {
     * intersect only runs on the few candidate rows the pair set selects.
     */
   private def jaccardScoredPairs(d: DataFrame,
-      numSlots: Int, bandSize: Int, langBlocked: Boolean = true): DataFrame = {
-    val bands = d
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+      langBlocked: Boolean = true): DataFrame = {
+    val bands = bandRows(d, Seq(col("doc_id"), col("lang")))
     val bucketEq = col("x.band") === col("y.band") &&
       col("x.key") === col("y.key") && col("x.doc_id") < col("y.doc_id")
     val pairs = bands.as("x").join(bands.as("y"),
@@ -76,14 +124,9 @@ object Text {
     val sh = d
       .withColumn("sh", expr(shingleExpr(3)))
       .select(col("doc_id"), col("sh"))
-    pairs
+    withJaccard(pairs
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("n_a", expr("size(sh_a)").cast("long"))
-      .withColumn("n_b", expr("size(sh_b)").cast("long"))
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")))
+      .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b"))
   }
 
   /** EXACT set-similarity join via frequency-ordered prefix filtering —
@@ -756,10 +799,25 @@ object Text {
       .orderBy("lang")
   }
 
+  /** The paragraph length of [[ddParagraph]] and the prepare recipe's
+    * rewrite, and the prepare recipe's quality gate on the rewritten
+    * text ([[pipelinePrepareCorpus]]).
+    */
+  private[graft] val ParaTokens = 20
+  private[graft] val MinTokens = 10
+
+  /** SQL text of a `toks` column's consecutive [[ParaTokens]]-token
+    * chunks — the "paragraphs" of this newline-free corpus.
+    */
+  private val paragraphsExpr: String =
+    s"""transform(sequence(0, (size(toks) - 1) div $ParaTokens),
+       |  i -> concat_ws(' ', slice(toks, i * $ParaTokens + 1, $ParaTokens)))"""
+      .stripMargin
+
   /** Corpus-wide exact paragraph deduplication, keep-first (the
     * MassiveText/C4 sub-document pass: Rae et al. 2021 remove repeated
     * paragraphs across documents before any fuzzy dedup). This corpus
-    * has no newlines, so a "paragraph" is each consecutive `paraTokens`-
+    * has no newlines, so a "paragraph" is each consecutive [[ParaTokens]]-
     * token chunk; an occurrence survives iff its (doc_id, pos) is the
     * corpus-wide minimum for that paragraph's md5 — the same keep=first
     * rule as the reference's dedup (`wrds_ingestion.py:626`) applied
@@ -774,9 +832,7 @@ object Text {
     * join-back skew is the AQE-skew-join-handled kind, whereas a window's
     * hot hash partition has no map-side reduction at all.
     */
-  def ddParagraph(spark: SparkSession, dir: String,
-      paraTokens: Int = 20): DataFrame = {
-    require(paraTokens > 0)
+  def ddParagraph(spark: SparkSession, dir: String): DataFrame = {
     // keep-first aggregate + join-back both consume this subtree (no
     // ReusedExchange: partial-min digests vs full occurrence rows) —
     // scoped-cache so the interpreted slice/concat_ws + per-paragraph
@@ -785,14 +841,11 @@ object Text {
     // alternating dirs in one session evict each other's entries every
     // call — sameResult keeps correctness, but the cache never helps a
     // cross-dir workload (the corpus-scoped index-path convention)
-    val paras = graft.Caches.scoped(s"dd_paragraph.paras.$paraTokens@$dir",
+    val paras = graft.Caches.scoped(s"dd_paragraph.paras@$dir",
       Tables.spread(docs(spark, dir))
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), col("lang"),
-          posexplode(expr(
-            s"""transform(sequence(0, (size(toks) - 1) div $paraTokens),
-               |  i -> concat_ws(' ', slice(toks, i * $paraTokens + 1, $paraTokens)))"""
-              .stripMargin)))
+          posexplode(expr(paragraphsExpr)))
         .select(col("doc_id"), col("lang"), col("pos"),
           expr("md5(cast(col AS BINARY))").as("h"),
           expr("size(split(col, ' '))").as("n_toks")))
@@ -808,11 +861,20 @@ object Text {
       .orderBy("doc_id")
   }
 
+  /** SQL text of the md5 digest of every stride-1 [[GramWidth]]-token
+    * span of a `toks` column, in position order — the occurrences
+    * [[ddSubstring]] measures and [[substringCutStats]] cuts.
+    */
+  private val spanDigestsExpr: String =
+    s"""transform(sequence(0, size(toks) - $GramWidth),
+       |  i -> md5(cast(concat_ws(' ', slice(toks, i + 1, $GramWidth)) AS BINARY)))"""
+      .stripMargin
+
   /** Duplicated-SPAN statistics — the stride-1 companion of
     * [[ddParagraph]] (Lee et al. 2021, "Deduplicating Training Data
     * Makes Language Models Better": their ExactSubstr pass finds every
     * repeated span, not just repeated disjoint chunks). A position is
-    * "duplicated" when its `width`-token shingle occurs more than once
+    * "duplicated" when its [[GramWidth]]-token shingle occurs more than once
     * in the WHOLE corpus (including twice within one document — the
     * paper's rule). Per document:
     *
@@ -835,9 +897,7 @@ object Text {
     * (AQE-skew-handled). The run/coverage windows partition by doc_id —
     * bounded by document length, never corpus-wide.
     */
-  def ddSubstring(spark: SparkSession, dir: String,
-      width: Int = 8): DataFrame = {
-    require(width > 0)
+  def ddSubstring(spark: SparkSession, dir: String): DataFrame = {
     // the digest stream is a join key consumed by the count AND the
     // join-back (and `marked` by the stats AND window legs) — scoped
     // caches keep the stride-1 md5 pass at ONE corpus scan (the
@@ -846,12 +906,9 @@ object Text {
     val occ = graft.Caches.scoped("dd_substring.occ",
       Tables.spread(docs(spark, dir))
         .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= width)
+        .filter(size(col("toks")) >= GramWidth)
         .select(col("doc_id"), col("lang"),
-          posexplode(expr(
-            s"""transform(sequence(0, size(toks) - $width),
-               |  i -> md5(cast(concat_ws(' ', slice(toks, i + 1, $width)) AS BINARY)))"""
-              .stripMargin)))
+          posexplode(expr(spanDigestsExpr)))
         .select(col("doc_id"), col("lang"), col("pos"), col("col").as("h")))
     val counts = occ.groupBy("h").agg(count(lit(1)).as("c"))
     val marked = graft.Caches.scoped("dd_substring.marked",
@@ -868,7 +925,7 @@ object Text {
       .agg(count(lit(1)).as("run"))
       .groupBy("doc_id").agg(max("run").as("maxrun"))
     val cover = dupPos.groupBy("doc_id")
-      .agg(sum(when(col("gap").isNull || col("gap") >= width, lit(width.toLong))
+      .agg(sum(when(col("gap").isNull || col("gap") >= GramWidth, lit(GramWidth.toLong))
         .otherwise(col("gap"))).as("covered"))
     marked.groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_pos"),
@@ -877,7 +934,7 @@ object Text {
       .join(cover, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("n_pos"), col("n_dup_pos"),
         when(col("maxrun").isNull, 0L)
-          .otherwise(col("maxrun") + lit(width - 1).cast("long"))
+          .otherwise(col("maxrun") + lit(GramWidth - 1).cast("long"))
           .as("max_dup_span_tokens"),
         coalesce(col("covered"), lit(0L)).as("dup_covered_tokens"))
       .orderBy("doc_id")
@@ -1037,7 +1094,7 @@ object Text {
   /** The REWRITE half of the ExactSubstr pass — [[ddSubstring]] measures
     * duplicated spans; this CUTS them, which is what Lee et al. 2021
     * actually do to the corpus ("remove all but one occurrence"): an
-    * occurrence of a `width`-token shingle is REMOVABLE when the shingle
+    * occurrence of a [[GramWidth]]-token shingle is REMOVABLE when the shingle
     * occurs more than once corpus-wide and this occurrence is not the
     * corpus-wide first (min (doc_id, pos) — the keep-first rule of
     * [[ddParagraph]] at stride 1). Every token covered by a removable
@@ -1055,9 +1112,8 @@ object Text {
     * arithmetic — interpreted HOFs, but over one document's tokens at a
     * time, the [[pipelinePrepareCorpus]] rewrite's cost shape.
     */
-  def ddSubstringCut(spark: SparkSession, dir: String,
-      width: Int = 8): DataFrame =
-    substringCutStats(docs(spark, dir), width, "dd_substring_cut")
+  def ddSubstringCut(spark: SparkSession, dir: String): DataFrame =
+    substringCutStats(docs(spark, dir), "dd_substring_cut")
 
   /** Scrub → cut as ONE declarative plan — the privacy-then-dedup prefix
     * of a production prep flow (scrub FIRST, so no duplicated span of
@@ -1069,8 +1125,7 @@ object Text {
     * cannot drift from the standalone operators (the
     * pipelinePrepareCorpus discipline).
     */
-  def pipelineScrubCut(spark: SparkSession, dir: String,
-      width: Int = 8): DataFrame = {
+  def pipelineScrubCut(spark: SparkSession, dir: String): DataFrame = {
     val scrubbed = graft.Caches.scoped("pipeline_scrub_cut.scrubbed",
       piiScrub(docs(spark, dir))
         .select(col("doc_id"), col("lang"), col("red").as("text"),
@@ -1078,7 +1133,7 @@ object Text {
             .as("had_pii")))
     val scrubStats = scrubbed.groupBy("lang")
       .agg(sum(when(col("had_pii"), 1L).otherwise(0L)).as("n_docs_scrubbed"))
-    substringCutStats(scrubbed.select("doc_id", "lang", "text"), width,
+    substringCutStats(scrubbed.select("doc_id", "lang", "text"),
         "pipeline_scrub_cut")
       .join(scrubStats, "lang")
       .select(col("lang"), col("n_docs"), col("n_docs_scrubbed"),
@@ -1093,19 +1148,15 @@ object Text {
     * definition, two inputs). `cacheTag` keeps the two consumers'
     * scoped digest caches from evicting each other.
     */
-  private def substringCutStats(input: DataFrame, width: Int,
+  private def substringCutStats(input: DataFrame,
       cacheTag: String): DataFrame = {
-    require(width > 0)
     val base = Tables.spread(input)
       .withColumn("toks", split(col("text"), " "))
     // the expensive-join-key rule (see ddSubstring): one md5 pass feeds
     // both the keep-first stats and the occurrence join-back
     val occ = graft.Caches.scoped(s"$cacheTag.occ", base
-      .filter(size(col("toks")) >= width)
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(0, size(toks) - $width),
-           |  i -> md5(cast(concat_ws(' ', slice(toks, i + 1, $width)) AS BINARY)))"""
-          .stripMargin)))
+      .filter(size(col("toks")) >= GramWidth)
+      .select(col("doc_id"), posexplode(expr(spanDigestsExpr)))
       .select(col("doc_id"), col("pos"), col("col").as("h")))
     val stats = occ.groupBy("h")
       .agg(count(lit(1)).as("c"),
@@ -1119,7 +1170,7 @@ object Text {
       .join(removable, Seq("doc_id"), "left")
       .withColumn("cov", expr(
         s"""array_distinct(flatten(transform(coalesce(rpos, array()),
-           |  p -> sequence(p, p + ${width - 1}))))""".stripMargin))
+           |  p -> sequence(p, p + ${GramWidth - 1}))))""".stripMargin))
       .withColumn("kept", expr(
         """filter(transform(sequence(0, size(toks) - 1),
           |  i -> IF(array_contains(cov, i), CAST(NULL AS STRING), toks[i])),
@@ -1143,7 +1194,7 @@ object Text {
     *     from its surviving paragraphs (`concat_ws` over the
     *     pos-sorted collect_list — array_sort pins the order, so the
     *     rebuilt text is deterministic under any shuffle);
-    *  2. quality gate on the rewritten text (≥ `minTokens` tokens);
+    *  2. quality gate on the rewritten text (≥ [[MinTokens]] tokens);
     *  3. exact dedup of rewritten docs (min doc_id per md5 — keep
     *     first, the reference rule `wrds_ingestion.py:626`);
     *  4. 8-gram benchmark decontamination ([[txDecontaminate]]'s
@@ -1157,15 +1208,12 @@ object Text {
     * keep-first joins are the partial-aggregated min + key-join shape
     * (AQE-skew-safe), not windows.
     */
-  def pipelinePrepareCorpus(spark: SparkSession, dir: String,
-      paraTokens: Int = 20, minTokens: Int = 10,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame = {
-    val out = prepareCorpusSurvivors(spark, dir, paraTokens, minTokens,
-      benchmarkSource, width)
+  def pipelinePrepareCorpus(spark: SparkSession, dir: String): DataFrame = {
+    val out = prepareCorpusSurvivors(spark, dir)
     val outStats = out.groupBy("lang")
       .agg(count(lit(1)).as("n_docs_out"), sum("n2").as("tokens_out"),
         min("doc_id").as("first_kept_doc_id"))
-    docs(spark, dir).filter(col("source") =!= benchmarkSource)
+    docs(spark, dir).filter(col("source") =!= BenchmarkSource)
       .groupBy("lang").agg(count(lit(1)).as("n_docs_in"))
       .join(outStats, Seq("lang"), "left")
       .select(col("lang"), col("n_docs_in"),
@@ -1181,11 +1229,9 @@ object Text {
     * (doc_id, lang, source, text2 = rewritten text, n2 = token count,
     * plus pipeline intermediates).
     */
-  private[graft] def prepareCorpusSurvivors(spark: SparkSession, dir: String,
-      paraTokens: Int = 20, minTokens: Int = 10,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame =
-    prepareCorpusSurvivorsOver(spark, docs(spark, dir), s"@$dir", paraTokens,
-      minTokens, benchmarkSource, width)
+  private[graft] def prepareCorpusSurvivors(spark: SparkSession,
+      dir: String): DataFrame =
+    prepareCorpusSurvivorsOver(spark, docs(spark, dir), s"@$dir")
 
   /** [[prepareCorpusSurvivors]] over an ARBITRARY (doc_id, lang, source,
     * text) frame — factored so the version-pinned release
@@ -1196,9 +1242,7 @@ object Text {
     * not collide in the plan-keyed cache.
     */
   private[graft] def prepareCorpusSurvivorsOver(spark: SparkSession,
-      src: DataFrame, cacheTag: String,
-      paraTokens: Int = 20, minTokens: Int = 10,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame = {
+      src: DataFrame, cacheTag: String): DataFrame = {
     // the keep-first aggregate AND its join-back both consume this
     // subtree (the partial-min side shuffles digest partials, the probe
     // side full paragraph rows — no ReusedExchange can unify them), so
@@ -1206,14 +1250,11 @@ object Text {
     // md5 runs TWICE per prepare execution. Scoped-cache the exploded
     // pass (r16-opt, guide §1.2 step 1: remove passes before tuning
     // code; the dd_ppjoin expensive-join-key rule).
-    val paras = graft.Caches.scoped(s"prepare.paras$cacheTag.$paraTokens",
+    val paras = graft.Caches.scoped(s"prepare.paras$cacheTag",
       Tables.spread(src)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"), col("lang"), col("source"),
-          posexplode(expr(
-            s"""transform(sequence(0, (size(toks) - 1) div $paraTokens),
-               |  i -> concat_ws(' ', slice(toks, i * $paraTokens + 1, $paraTokens)))"""
-              .stripMargin)))
+          posexplode(expr(paragraphsExpr)))
         .select(col("doc_id"), col("lang"), col("source"), col("pos"),
           col("col").as("para"), expr("md5(cast(col AS BINARY))").as("h")))
     val firsts = paras.groupBy("h")
@@ -1232,25 +1273,25 @@ object Text {
     // bound that to one rewrite + one dedup join (the documented
     // expensive-projection-reused-across-join-sides rule).
     val q = graft.Caches.scoped(
-      s"prepare.rewritten$cacheTag.$paraTokens.$minTokens",
+      s"prepare.rewritten$cacheTag",
       rewritten
         .withColumn("toks", split(col("text2"), " "))
         .withColumn("n2", size(col("toks")).cast("long"))
-        .filter(col("n2") >= minTokens)
+        .filter(col("n2") >= MinTokens)
         .withColumn("h2", expr("md5(cast(text2 AS BINARY))")))
     val keepIds = q.groupBy("h2").agg(min("doc_id").as("keep_id"))
     val dd = graft.Caches.scoped(
-      s"prepare.deduped$cacheTag.$paraTokens.$minTokens",
+      s"prepare.deduped$cacheTag",
       q.join(keepIds, "h2").filter(col("doc_id") === col("keep_id")))
-    val bench = dd.filter(col("source") === benchmarkSource)
-      .filter(size(col("toks")) >= width)
-      .select(explode(expr(shingleExpr(width))).as("g")).distinct()
-    val flagged = dd.filter(col("source") =!= benchmarkSource)
-      .filter(size(col("toks")) >= width)
-      .select(col("doc_id"), explode(expr(shingleExpr(width))).as("g"))
+    val bench = dd.filter(col("source") === BenchmarkSource)
+      .filter(size(col("toks")) >= GramWidth)
+      .select(explode(expr(shingleExpr(GramWidth))).as("g")).distinct()
+    val flagged = dd.filter(col("source") =!= BenchmarkSource)
+      .filter(size(col("toks")) >= GramWidth)
+      .select(col("doc_id"), explode(expr(shingleExpr(GramWidth))).as("g"))
       .join(bench, Seq("g"), "left_semi")
       .select("doc_id").distinct()
-    dd.filter(col("source") =!= benchmarkSource)
+    dd.filter(col("source") =!= BenchmarkSource)
       .join(flagged, Seq("doc_id"), "left_anti")
   }
 
@@ -1298,11 +1339,8 @@ object Text {
   }
 
   def pipelineMaterialize(spark: SparkSession, dir: String,
-      paraTokens: Int = 20, minTokens: Int = 10,
-      benchmarkSource: String = "src0", width: Int = 8,
       baseDir: Option[String] = None): DataFrame = {
-    val contract = prepareCorpusSurvivors(spark, dir, paraTokens, minTokens,
-        benchmarkSource, width)
+    val contract = prepareCorpusSurvivors(spark, dir)
       .select(col("doc_id"), col("text2").as("text"), col("lang"),
         col("source"), length(col("text2")).cast("long").as("n_chars"))
     // Per-JVM scratch path, cleared on intra-JVM reuse and deleted at JVM
@@ -2041,7 +2079,7 @@ object Text {
     * [[ddIncremental]], together the pass a recurring crawl ingest runs
     * (RefinedWeb/CCNet-style: exact digests first, MinHash near-dup
     * second): a delta document ([[isDelta]]) is dropped if
-    * it is a shingle-Jaccard ≥ `threshold` near-duplicate of ANY base
+    * it is a shingle-Jaccard ≥ [[NearDupThreshold]] near-duplicate of ANY base
     * document (`near_dup_vs_base` — the base is the standing corpus, so
     * id order is irrelevant), or of a LOWER-ID delta document
     * (`near_dup_in_delta` — the keep-first rule of
@@ -2060,13 +2098,10 @@ object Text {
     * argument applied to bands) — the delta pass computes bands for the
     * snapshot alone and joins the standing table.
     */
-  def ddIncrementalFuzzy(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  def ddIncrementalFuzzy(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val confirmed = jaccardScoredPairs(tokenizedDocs(spark, dir),
-        numSlots, bandSize)
-      .filter(col("jaccard") >= threshold)
+    val confirmed = jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .filter(isNearDup)
       .select("id_a", "id_b")
     // a delta doc's drop partners: any base doc (either pair side), or a
     // lower-id delta doc (id_a < id_b by construction, so only id_a)
@@ -2107,36 +2142,24 @@ object Text {
     * and each delta admission reads the standing tables instead of
     * re-banding the base.
     */
-  def fuzzyBuildIndex(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): Unit = {
+  def fuzzyBuildIndex(spark: SparkSession, dir: String): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val base = tokenizedDocs(spark, dir).filter(!isDelta(col("doc_id")))
-    val bands = base
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+    val (bands, sh) = fuzzyBandsAndShingles(base)
     // bucketed on ALL the candidate-join keys: V1 bucketed reads are only
     // consumed when the join keys cover every bucket column — bucketing
     // on `key` alone left the scan "Bucketed: false (disabled by query
     // planner)" and re-shuffled the standing side (measured, r8 probe)
     graft.Layout.saveBucketed(bands, "graft_fuzzy_bands_bq", 8,
       Seq("band", "key", "lang"))
-    graft.Layout.saveBucketed(
-      base.withColumn("sh", expr(shingleExpr(3))).select("doc_id", "sh"),
-      "graft_fuzzy_sh_bq", 8, Seq("doc_id"))
+    graft.Layout.saveBucketed(sh, "graft_fuzzy_sh_bq", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the standing fuzzy index. A geometry change
-    * is a rebuild, as with any index — the key carries (dir, numSlots,
-    * bandSize) so a non-default probe can never silently read an index
-    * banded with different parameters (ADVICE r8-1).
-    */
-  private[graft] def ensureFuzzyIndex(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): Unit =
+  /** Build-once accessor for the standing fuzzy index. */
+  private[graft] def ensureFuzzyIndex(spark: SparkSession, dir: String): Unit =
     graft.Standing.tables(spark,
-        Seq("graft_fuzzy_bands_bq", "graft_fuzzy_sh_bq"),
-        (dir, numSlots, bandSize))(
-      fuzzyBuildIndex(spark, dir, numSlots, bandSize))
+        Seq("graft_fuzzy_bands_bq", "graft_fuzzy_sh_bq"), dir)(
+      fuzzyBuildIndex(spark, dir))
 
   /** [[ddIncrementalFuzzy]] against the STANDING index
     * ([[fuzzyBuildIndex]]) — identical admission semantics and audit
@@ -2151,20 +2174,17 @@ object Text {
     * formed at all. Steady-state cost scales with |delta| and the
     * number of colliding bands, not with the base corpus.
     */
-  def ddIncrementalFuzzyIndexed(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  def ddIncrementalFuzzyIndexed(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    ensureFuzzyIndex(spark, dir, numSlots, bandSize)
+    ensureFuzzyIndex(spark, dir)
     val deltaDocs = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
-    val (dBands, dSh) = fuzzyBandsAndShingles(deltaDocs, numSlots, bandSize)
+    val (dBands, dSh) = fuzzyBandsAndShingles(deltaDocs)
     // delta-vs-base: either id order makes the DELTA doc the duplicate
     val vb = fuzzyVsIndexDrops(dBands, dSh,
-        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"),
-        threshold)
+        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"))
       .withColumn("vs_base", lit(true))
     // delta-vs-delta: keep-first — only the HIGHER id is the duplicate
-    val vd = fuzzySelfDrops(dBands, dSh, threshold)
+    val vd = fuzzySelfDrops(dBands, dSh)
       .withColumn("vs_base", lit(false))
     val dropped = vb.unionByName(vd)
       .groupBy("doc_id").agg(max("vs_base").as("vs_base"))
@@ -2188,22 +2208,9 @@ object Text {
     * carve every standing-index consumer shares (build, delta admission,
     * overlay upsert), so the band geometry cannot drift between them.
     */
-  private def fuzzyBandsAndShingles(toks: DataFrame, numSlots: Int,
-      bandSize: Int): (DataFrame, DataFrame) = {
-    val bands = toks
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    val sh = toks.withColumn("sh", expr(shingleExpr(3))).select("doc_id", "sh")
-    (bands, sh)
-  }
-
-  private def fuzzyJaccardConfirm(df: DataFrame,
-      threshold: Double): DataFrame = df
-    .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-    .withColumn("jaccard", col("inter").cast("double") /
-      (expr("size(sh_a)") + expr("size(sh_b)") - col("inter")))
-    .filter(col("jaccard") >= threshold)
+  private def fuzzyBandsAndShingles(toks: DataFrame): (DataFrame, DataFrame) =
+    (bandRows(toks, Seq(col("doc_id"), col("lang"))),
+      toks.withColumn("sh", expr(shingleExpr(3))).select("doc_id", "sh"))
 
   /** Delta doc_ids that near-dup-match ANY doc of an indexed side (band
     * tables bucketed on the full candidate-join key set): either id
@@ -2216,9 +2223,9 @@ object Text {
     * probe results, never rewrite the index on the search path).
     */
   private def fuzzyVsIndexDrops(dBands: DataFrame, dSh: DataFrame,
-      bBands: DataFrame, bSh: DataFrame, threshold: Double,
+      bBands: DataFrame, bSh: DataFrame,
       excludeBase: Option[DataFrame] = None): DataFrame =
-    fuzzyVsIndexPairs(dBands, dSh, bBands, bSh, threshold, excludeBase)
+    fuzzyVsIndexPairs(dBands, dSh, bBands, bSh, excludeBase)
       .select(col("delta_id").as("doc_id")).distinct()
 
   /** Confirmed (delta_id, base_id) near-dup PAIRS of a delta batch
@@ -2226,7 +2233,7 @@ object Text {
     * [[fuzzyVsIndexDrops]] and the incremental-CC delta edges.
     */
   private def fuzzyVsIndexPairs(dBands: DataFrame, dSh: DataFrame,
-      bBands: DataFrame, bSh: DataFrame, threshold: Double,
+      bBands: DataFrame, bSh: DataFrame,
       excludeBase: Option[DataFrame] = None): DataFrame = {
     val pairs0 = dBands.as("d").join(bBands.as("b"),
         col("d.band") === col("b.band") && col("d.key") === col("b.key") &&
@@ -2236,37 +2243,36 @@ object Text {
     val pairs = excludeBase.fold(pairs0)(ex =>
       pairs0.join(ex.select(col("doc_id").as("base_id")),
         Seq("base_id"), "left_anti"))
-    fuzzyJaccardConfirm(pairs
+    withJaccard(pairs
       .join(dSh.select(col("doc_id").as("delta_id"), col("sh").as("sh_a")),
         "delta_id")
       .join(bSh.select(col("doc_id").as("base_id"), col("sh").as("sh_b")),
-        "base_id"), threshold)
+        "base_id"))
+      .filter(isNearDup)
       .select(col("delta_id"), col("base_id"))
   }
 
   /** Within-batch keep-first drops: only the HIGHER id of a confirmed
     * pair is the duplicate.
     */
-  private def fuzzySelfDrops(dBands: DataFrame, dSh: DataFrame,
-      threshold: Double): DataFrame =
-    fuzzySelfPairs(dBands, dSh, threshold)
+  private def fuzzySelfDrops(dBands: DataFrame, dSh: DataFrame): DataFrame =
+    fuzzySelfPairs(dBands, dSh)
       .select(col("id_b").as("doc_id")).distinct()
 
   /** Confirmed within-batch near-dup PAIRS (id_a < id_b) — the
     * pair-level core behind [[fuzzySelfDrops]] and the incremental-CC
     * delta edges.
     */
-  private def fuzzySelfPairs(dBands: DataFrame, dSh: DataFrame,
-      threshold: Double): DataFrame =
-    fuzzyJaccardConfirm(dBands.as("x").join(dBands.as("y"),
+  private def fuzzySelfPairs(dBands: DataFrame, dSh: DataFrame): DataFrame =
+    withJaccard(dBands.as("x").join(dBands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.lang") === col("y.lang") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
       .join(dSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(dSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b"),
-      threshold)
+      .join(dSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b"))
+      .filter(isNearDup)
       .select(col("id_a"), col("id_b"))
 
   /** Batch 1 of the fuzzy upsert lifecycle — the even half of the delta
@@ -2287,21 +2293,18 @@ object Text {
     * mutated (the ivf_del overlay discipline — other queries' semantics
     * depend on them).
     */
-  def fuzzyBuildUpsertOverlay(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): Unit = {
+  def fuzzyBuildUpsertOverlay(spark: SparkSession, dir: String): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
     val b1 = tokenizedDocs(spark, dir).filter(isUpsertBatch1(col("doc_id")))
-    val (b1Bands0, b1Sh0) = fuzzyBandsAndShingles(b1, numSlots, bandSize)
+    val (b1Bands0, b1Sh0) = fuzzyBandsAndShingles(b1)
     // both admission legs and the overlay write consume these — scoped-
     // cache so the shingle/minhash pass over batch 1 runs once
     val b1Bands = graft.Caches.scoped("fuzzy_ups.b1bands", b1Bands0)
     val b1Sh = graft.Caches.scoped("fuzzy_ups.b1sh", b1Sh0)
     val droppedIds = fuzzyVsIndexDrops(b1Bands, b1Sh,
-        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"),
-        threshold)
-      .unionByName(fuzzySelfDrops(b1Bands, b1Sh, threshold))
+        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"))
+      .unionByName(fuzzySelfDrops(b1Bands, b1Sh))
       .distinct()
     graft.Layout.saveBucketed(
       b1Bands.join(droppedIds, Seq("doc_id"), "left_anti"),
@@ -2311,15 +2314,12 @@ object Text {
       "graft_fuzzy_sh_ups", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the upsert overlay, keyed on the full
-    * geometry.
-    */
+  /** Build-once accessor for the upsert overlay. */
   private[graft] def ensureFuzzyUpsertOverlay(spark: SparkSession,
-      dir: String, numSlots: Int = 16, bandSize: Int = 4): Unit =
+      dir: String): Unit =
     graft.Standing.tables(spark,
-        Seq("graft_fuzzy_bands_ups", "graft_fuzzy_sh_ups"),
-        (dir, numSlots, bandSize))(
-      fuzzyBuildUpsertOverlay(spark, dir, numSlots, bandSize))
+        Seq("graft_fuzzy_bands_ups", "graft_fuzzy_sh_ups"), dir)(
+      fuzzyBuildUpsertOverlay(spark, dir))
 
   /** Two-batch standing-index lifecycle — the oracle'd
     * `dd_incremental_fuzzy_upsert` entry (VERDICT r8 item 3): batch 1
@@ -2347,28 +2347,24 @@ object Text {
     * so a batch-2 doc matching only those is admitted — exactly the
     * semantics of admitting against the post-upsert index state.
     */
-  def ddIncrementalFuzzyUpsert(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  def ddIncrementalFuzzyUpsert(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
-    ensureFuzzyUpsertOverlay(spark, dir, numSlots, bandSize)
+    ensureFuzzyUpsertOverlay(spark, dir)
     def isB2(c: Column) = isDelta(c) && !isUpsertBatch1(c)
     val b2 = tokenizedDocs(spark, dir).filter(isB2(col("doc_id")))
-    val (b2Bands0, b2Sh0) = fuzzyBandsAndShingles(b2, numSlots, bandSize)
+    val (b2Bands0, b2Sh0) = fuzzyBandsAndShingles(b2)
     // three admission legs share these — scoped-cache (the expensive-
     // join-key rule)
     val b2Bands = graft.Caches.scoped("fuzzy_ups.b2bands", b2Bands0)
     val b2Sh = graft.Caches.scoped("fuzzy_ups.b2sh", b2Sh0)
     val vsBase = fuzzyVsIndexDrops(b2Bands, b2Sh,
-        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"),
-        threshold)
+        spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"))
       .withColumn("prio", lit(3))
     val vsUps = fuzzyVsIndexDrops(b2Bands, b2Sh,
-        spark.table("graft_fuzzy_bands_ups"), spark.table("graft_fuzzy_sh_ups"),
-        threshold)
+        spark.table("graft_fuzzy_bands_ups"), spark.table("graft_fuzzy_sh_ups"))
       .withColumn("prio", lit(2))
-    val inBatch = fuzzySelfDrops(b2Bands, b2Sh, threshold)
+    val inBatch = fuzzySelfDrops(b2Bands, b2Sh)
       .withColumn("prio", lit(1))
     val dropped = vsBase.unionByName(vsUps).unionByName(inBatch)
       .groupBy("doc_id").agg(max("prio").as("prio"))
@@ -2430,8 +2426,7 @@ object Text {
     * mutated — other queries' semantics depend on them (the ivf_del
     * overlay discipline).
     */
-  def fuzzyBuildDeleteOverlay(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): Unit = {
+  def fuzzyBuildDeleteOverlay(spark: SparkSession, dir: String): Unit = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
     val base = tokenizedDocs(spark, dir)
@@ -2460,15 +2455,12 @@ object Text {
       "graft_fuzzy_sh_del", 8, Seq("doc_id"))
   }
 
-  /** Build-once accessor for the delete overlay, keyed on the full
-    * geometry.
-    */
+  /** Build-once accessor for the delete overlay. */
   private[graft] def ensureFuzzyDeleteOverlay(spark: SparkSession,
-      dir: String, numSlots: Int = 16, bandSize: Int = 4): Unit =
+      dir: String): Unit =
     graft.Standing.tables(spark,
         Seq("graft_fuzzy_bands_del", "graft_fuzzy_sh_del", "graft_fuzzy_tomb"),
-        (dir, numSlots, bandSize))(
-      fuzzyBuildDeleteOverlay(spark, dir, numSlots, bandSize))
+        dir)(fuzzyBuildDeleteOverlay(spark, dir))
 
   /** Delta admission against the POST-DELETE index state — the oracle'd
     * `dd_incremental_fuzzy_delete` entry. Per language:
@@ -2497,14 +2489,12 @@ object Text {
     * set; the compaction rewrite is bounded by the compacted languages'
     * row share and happens once at build, not per search.
     */
-  def ddIncrementalFuzzyDelete(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  def ddIncrementalFuzzyDelete(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     ensureFuzzyIndex(spark, dir)
-    ensureFuzzyDeleteOverlay(spark, dir, numSlots, bandSize)
+    ensureFuzzyDeleteOverlay(spark, dir)
     val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
-    val (dBands0, dSh0) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
+    val (dBands0, dSh0) = fuzzyBandsAndShingles(delta)
     // four admission legs share these — scoped-cache (the expensive-
     // join-key rule)
     val dBands = graft.Caches.scoped("fuzzy_del.dbands", dBands0)
@@ -2525,14 +2515,14 @@ object Text {
     val vsLiveStanding = fuzzyVsIndexDrops(dBands, dSh,
       spark.table("graft_fuzzy_bands_bq")
         .join(compLangs, Seq("lang"), "left_anti"),
-      spark.table("graft_fuzzy_sh_bq"), threshold,
+      spark.table("graft_fuzzy_sh_bq"),
       excludeBase = Some(tombs.select("doc_id")))
     val vsLiveOverlay = fuzzyVsIndexDrops(dBands, dSh,
       spark.table("graft_fuzzy_bands_del"),
-      spark.table("graft_fuzzy_sh_del"), threshold)
+      spark.table("graft_fuzzy_sh_del"))
     val vsLive = vsLiveStanding.unionByName(vsLiveOverlay).distinct()
       .withColumn("prio", lit(3))
-    val inBatch = fuzzySelfDrops(dBands, dSh, threshold)
+    val inBatch = fuzzySelfDrops(dBands, dSh)
       .withColumn("prio", lit(1))
     val dropped = vsLive.unionByName(inBatch)
       .groupBy("doc_id").agg(max("prio").as("prio"))
@@ -2540,7 +2530,7 @@ object Text {
     val vsDead = fuzzyVsIndexDrops(dBands, dSh,
       spark.table("graft_fuzzy_bands_bq")
         .join(tombs.select("doc_id"), Seq("doc_id"), "left_semi"),
-      spark.table("graft_fuzzy_sh_bq"), threshold)
+      spark.table("graft_fuzzy_sh_bq"))
       .withColumn("dead_match", lit(true))
     val audit = docs(spark, dir).filter(isDelta(col("doc_id")))
       .select("doc_id", "lang")
@@ -2580,8 +2570,8 @@ object Text {
   }
 
   /** LSH S-CURVE calibration audit — the measurement that justifies the
-    * suite's banding geometry (numSlots = 16, bandSize = 4 ⇒ b = 4
-    * bands of r = 4 rows): for every co-occurring pair (shares ≥ 1
+    * suite's banding geometry ([[NumSlots]] = 16, [[BandSize]] = 4 ⇒
+    * b = 4 bands of r = 4 rows): for every co-occurring pair (shares ≥ 1
     * distinct 3-shingle with df ≤ `dfCap`, both docs inside the
     * deterministic sample — see the scale note), the EXACT Jaccard
     * over the capped shingle universe buckets to
@@ -2619,7 +2609,7 @@ object Text {
     * Shuffles carry only ids, 60-bit keys and band digests.
     */
   def ddLshScurve(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4, dfCap: Int = 64): DataFrame = {
+      dfCap: Int = 64): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val toks = Tables.spread(docs(spark, dir))
       .filter(expr("substring(md5(cast(text AS BINARY)), 1, 1) < '8'"))
@@ -2664,17 +2654,13 @@ object Text {
       .withColumn("bucket",
         expr("(10 * inter) DIV (ma + mb - inter)"))
       .select("id_a", "id_b", "bucket")
-    val bands = toks
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+    val bands = bandRows(toks, Seq(col("doc_id")))
     val cands = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
       .withColumn("coll", lit(1L))
-    val b = numSlots / bandSize
     val buckets = pairs.join(cands, Seq("id_a", "id_b"), "left_outer")
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_pairs"),
@@ -2682,7 +2668,8 @@ object Text {
       .withColumn("measured_rate",
         col("n_collided").cast("double") / col("n_pairs").cast("double"))
       .withColumn("analytic_rate", expr(scurveExpr(
-        s"least((CAST(bucket AS DOUBLE) + 0.5) / 10.0, 1.0)", bandSize, b)))
+        s"least((CAST(bucket AS DOUBLE) + 0.5) / 10.0, 1.0)", BandSize,
+        NumSlots / BandSize)))
       .select("bucket", "n_pairs", "n_collided", "measured_rate",
         "analytic_rate")
     val wAll = org.apache.spark.sql.expressions.Window
@@ -2718,8 +2705,7 @@ object Text {
     * DuckDB oracle replicates every slot, band key, candidate pair and
     * Jaccard value bit-for-bit — the gate checks the whole candidate
     * semantics, not a weaker rows-only bound. Recall follows the standard
-    * banding curve P(candidate | j) = 1 − (1 − j^r)^b (r = bandSize,
-    * b = numSlots / bandSize): 0.986 at j = 0.9 for the default 16/4.
+    * banding curve of [[NumSlots]] / [[BandSize]].
     *
     * Note vs round 1: blocking previously used (lang, n_chars/100) and the
     * Jaccard ran on token SETS — with this corpus's 31-word vocabulary,
@@ -2728,13 +2714,12 @@ object Text {
     * Shingle Jaccard is bimodal here (planted dups ≈ 1.0, everything else
     * ≈ 0.0), which is also the realistic regime for web-scale text.
     */
-  def ddNgramJaccard(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def ddNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize)
+    jaccardScoredPairs(tokenizedDocs(spark, dir))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_candidate_pairs"),
-        sum(when(col("jaccard") >= 0.5, 1L).otherwise(0L)).as("n_near_dups"),
+        sum(when(isNearDup, 1L).otherwise(0L)).as("n_near_dups"),
         max("jaccard").as("max_jaccard"))
       .orderBy("lang")
   }
@@ -2753,16 +2738,15 @@ object Text {
     * models band collision before pinning (the ClusterRepSpec
     * discipline).
     */
-  def ddContainment(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def ddContainment(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize)
-      .withColumn("cmax",
-        col("inter").cast("double") / least(col("n_a"), col("n_b")))
+    jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .withColumn("cmax", col("inter").cast("double") /
+        least(expr("size(sh_a)"), expr("size(sh_b)")))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_candidate_pairs"),
-        sum(when(col("jaccard") >= 0.5, 1L).otherwise(0L)).as("n_jaccard_dups"),
-        sum(when(col("cmax") >= 0.8 && col("jaccard") < 0.5, 1L)
+        sum(when(isNearDup, 1L).otherwise(0L)).as("n_jaccard_dups"),
+        sum(when(col("cmax") >= 0.8 && !isNearDup, 1L)
           .otherwise(0L)).as("n_containment_only"),
         max("cmax").as("max_containment"))
       .orderBy("lang")
@@ -2782,8 +2766,7 @@ object Text {
     * md5-based MinHash ([[graft.functions.MinHashBands]]) keeps the DuckDB
     * oracle bit-exact on the full candidate semantics.
     */
-  def pipelineCleanCorpus(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def pipelineCleanCorpus(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     // spread before the regex quality gate + md5 + minhash chain
     val base = Tables.spread(docs(spark, dir))
@@ -2807,8 +2790,8 @@ object Text {
         .select(col("doc_id"), col("lang"), col("toks"), col("n_tokens")))
     // Keep the first occurrence: the higher doc_id of each confirmed pair
     // is dropped (same rule as round 1's formulation).
-    val dupIds = jaccardScoredPairs(exactDeduped, numSlots, bandSize)
-      .filter(col("jaccard") >= 0.5)
+    val dupIds = jaccardScoredPairs(exactDeduped)
+      .filter(isNearDup)
       .select(col("id_b").as("doc_id")).distinct()
     exactDeduped.join(dupIds, Seq("doc_id"), "left_anti")
       .groupBy("lang")
@@ -2836,12 +2819,9 @@ object Text {
     * engine-native production form (one 8-byte hash per step, no hex
     * digests); its recall is spec-pinned on the same planted corpus.
     */
-  def ddMinhashLsh(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
-    require(numSlots % bandSize == 0, "numSlots must be a multiple of bandSize")
+  def ddMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize,
-        langBlocked = false)
+    jaccardScoredPairs(tokenizedDocs(spark, dir), langBlocked = false)
       .agg(count(lit(1)).as("n_candidate_pairs"),
         sum(when(col("jaccard") >= 0.8, 1L).otherwise(0L)).as("n_confirmed_dups"))
   }
@@ -2857,34 +2837,25 @@ object Text {
     * concat ever materializes — the reason this form is the production
     * default at 100 TB.
     */
-  def ddMinhashLshXx(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
-    require(numSlots % bandSize == 0, "numSlots must be a multiple of bandSize")
+  def ddMinhashLshXx(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val spark2 = spark
-    import spark2.implicits._
     val src = Tables.spread(docs(spark, dir))
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
     val shingled = src
       .withColumn("th", expr("transform(toks, t -> xxhash64(t))"))
-      .withColumn("shingles",
-        expr("transform(sequence(0, size(th) - 3), i -> xxhash64(th[i], th[i+1], th[i+2]))"))
+      .withColumn("shingles", expr(
+        "array_distinct(transform(sequence(0, size(th) - 3), i -> xxhash64(th[i], th[i+1], th[i+2])))"))
       .select(col("doc_id"), col("lang"), col("shingles"))
-    val bands = src.select(col("doc_id"),
-        posexplode(expr(s"minhash_xx_bands(toks, 3, $numSlots, $bandSize)")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
+    val bands = bandRows(src, Seq(col("doc_id")), xx = true)
     val pairs = bands.as("x").join(bands.as("y"),
-        $"x.band" === $"y.band" && $"x.band_hash" === $"y.band_hash" &&
-          $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("id_a"), $"y.doc_id".as("id_b")).distinct()
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b")).distinct()
     // Confirmation re-reads only the (cheap) shingle arrays, not the sigs.
-    val withSets = pairs
+    val withSets = withJaccard(pairs
       .join(shingled.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .withColumn("inter", expr("size(array_intersect(array_distinct(sh_a), array_distinct(sh_b)))"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (expr("size(array_distinct(sh_a))") + expr("size(array_distinct(sh_b))") - col("inter")))
+      .join(shingled.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b"))
     withSets.agg(count(lit(1)).as("n_candidate_pairs"),
       sum(when(col("jaccard") >= 0.8, 1L).otherwise(0L)).as("n_confirmed_dups"))
   }
@@ -3001,11 +2972,10 @@ object Text {
     * min-label CTE — two independent connectivity formulations must
     * agree row-for-row.
     */
-  def ddDupClusters(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def ddDupClusters(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize)
-      .filter(col("jaccard") >= 0.5)
+    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .filter(isNearDup)
       .select(col("id_a"), col("id_b"))
     clusterReport(spark, dir,
       graft.ConnectedComponents.run(edges, "id_a", "id_b"))
@@ -3052,12 +3022,10 @@ object Text {
     * corpus².
     */
   def ddClusterDiameter(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
       rounds: Int = diameterRounds): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots,
-        bandSize)
-      .filter(col("jaccard") >= 0.5)
+    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .filter(isNearDup)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint(false)
     diameterOver(spark, edges, rounds)
@@ -3131,13 +3099,12 @@ object Text {
     * [[graft.ConnectedComponents]] contraction and persisted as a
     * standing artifact witnessed by both tables.
     */
-  def ensureCcBase(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): String = {
+  def ensureCcBase(spark: SparkSession, dir: String): String = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     graft.Standing.dir(spark, dir, "cc_base", Seq("labels", "edges")) { base =>
       val baseToks = tokenizedDocs(spark, dir).filter(!isDelta(col("doc_id")))
-      val edges = jaccardScoredPairs(baseToks, numSlots, bandSize)
-        .filter(col("jaccard") >= 0.5)
+      val edges = jaccardScoredPairs(baseToks)
+        .filter(isNearDup)
         .select(col("id_a"), col("id_b"))
       // the confirmed-pair edge list persists BESIDE the labels: star
       // contraction is lossy exactly where deletion needs fidelity (a
@@ -3179,33 +3146,27 @@ object Text {
     * ALL confirmed pairs of the whole corpus) — incremental ≡ full
     * rebuild bit-for-bit, the bm25-upsert proof form.
     */
-  def ddCcIncremental(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    clusterReport(spark, dir,
-      ccIncrementalLabels(spark, dir, numSlots, bandSize, threshold))
-  }
+  def ddCcIncremental(spark: SparkSession, dir: String): DataFrame =
+    clusterReport(spark, dir, ccIncrementalLabels(spark, dir))
 
   /** The merged (id, component) labels of [[ddCcIncremental]] — factored
     * so the refresh write-back ([[ensureCcRefreshed]]) persists exactly
     * the frame the incremental query serves.
     */
-  private[graft] def ccIncrementalLabels(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  private[graft] def ccIncrementalLabels(spark: SparkSession,
+      dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    ensureFuzzyIndex(spark, dir, numSlots, bandSize)
-    val base = ensureCcBase(spark, dir, numSlots, bandSize)
+    ensureFuzzyIndex(spark, dir)
+    val base = ensureCcBase(spark, dir)
     val labels = spark.read.parquet(s"$base/labels")
     val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
-    val (dBands0, dSh0) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
+    val (dBands0, dSh0) = fuzzyBandsAndShingles(delta)
     val dBands = graft.Caches.scoped("cc_inc.dbands", dBands0)
     val dSh = graft.Caches.scoped("cc_inc.dsh", dSh0)
     val vsBase = fuzzyVsIndexPairs(dBands, dSh,
-      spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"),
-      threshold)
+      spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"))
       .select(col("delta_id").as("id_a"), col("base_id").as("id_b"))
-    val inDelta = fuzzySelfPairs(dBands, dSh, threshold)
+    val inDelta = fuzzySelfPairs(dBands, dSh)
     val starEdges = labels
       .select(col("id").as("id_a"), col("component").as("id_b"))
     graft.ConnectedComponents.run(
@@ -3222,10 +3183,9 @@ object Text {
     * of being re-merged per batch — without the write-back a second
     * batch would re-probe batch 1's docs against the index forever.
     */
-  private[graft] def ensureCcRefreshed(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): String =
+  private[graft] def ensureCcRefreshed(spark: SparkSession, dir: String): String =
     graft.Standing.dir(spark, dir, "cc_ref", Seq("labels")) { base =>
-      ccIncrementalLabels(spark, dir, numSlots, bandSize)
+      ccIncrementalLabels(spark, dir)
         .write.mode("overwrite").parquet(s"$base/labels")
     }
 
@@ -3238,9 +3198,8 @@ object Text {
     * corpus — refresh ≡ rebuild, bit-for-bit (the bm25-upsert proof
     * form).
     */
-  def ddCcRefresh(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
-    val base = ensureCcRefreshed(spark, dir, numSlots, bandSize)
+  def ddCcRefresh(spark: SparkSession, dir: String): DataFrame = {
+    val base = ensureCcRefreshed(spark, dir)
     clusterReport(spark, dir, spark.read.parquet(s"$base/labels"))
   }
 
@@ -3272,10 +3231,9 @@ object Text {
     * bit-for-bit. CcLifecycleSpec additionally plants an A–B–C chain
     * whose middle doc dies and pins the SPLIT into two components.
     */
-  def ddCcDelete(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def ddCcDelete(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val base = ensureCcBase(spark, dir, numSlots, bandSize)
+    val base = ensureCcBase(spark, dir)
     val labels = spark.read.parquet(s"$base/labels")
     val edges = spark.read.parquet(s"$base/edges")
     val tombs = docs(spark, dir)
@@ -3302,13 +3260,12 @@ object Text {
     * with these (a compaction-time batch job in deployment) and must
     * reproduce [[ddCcIncremental]] through the same contraction.
     */
-  private[graft] def ccWithinDeltaEdges(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
+  private[graft] def ccWithinDeltaEdges(spark: SparkSession,
+      dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val delta = tokenizedDocs(spark, dir).filter(isDelta(col("doc_id")))
-    val (dBands, dSh) = fuzzyBandsAndShingles(delta, numSlots, bandSize)
-    fuzzySelfPairs(dBands, dSh, threshold)
+    val (dBands, dSh) = fuzzyBandsAndShingles(delta)
+    fuzzySelfPairs(dBands, dSh)
   }
 
   /** Quality-aware canonical selection per duplicate cluster — the step
@@ -3332,11 +3289,10 @@ object Text {
     * then picks representatives with an ordered-aggregate `first`, so
     * two independent argmax formulations must agree row-for-row.
     */
-  def ddClusterRepresentative(spark: SparkSession, dir: String,
-      numSlots: Int = 16, bandSize: Int = 4): DataFrame = {
+  def ddClusterRepresentative(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir), numSlots, bandSize)
-      .filter(col("jaccard") >= 0.5)
+    val edges = jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .filter(isNearDup)
       .select(col("id_a"), col("id_b"))
     val comp = graft.ConnectedComponents.run(edges, "id_a", "id_b")
     val q = docs(spark, dir).select(col("doc_id"), col("lang"),
@@ -3459,28 +3415,27 @@ object Text {
     * count is bit-replicable in DuckDB; the fraction is one IEEE
     * division of exact longs.
     */
-  def txOverlapFraction(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame = {
+  def txOverlapFraction(spark: SparkSession, dir: String): DataFrame = {
     // Consumed by the benchmark side AND both train-side aggregates of the
     // semi-join below — scoped-cache it, or the tokenize+explode+md5
     // subtree runs once per consumer (VERDICT r6 finding 3: two full
     // corpus passes instead of one at scale; expensive projections feeding
     // several join sides get a scoped cache).
-    val sh = graft.Caches.scoped(s"tx_overlap_fraction.sh.$width",
+    val sh = graft.Caches.scoped("tx_overlap_fraction.sh",
       Tables.spread(docs(spark, dir))
         .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= width)
+        .filter(size(col("toks")) >= GramWidth)
         .select(col("doc_id"), col("lang"), col("source"),
-          explode(expr(shingleExpr(width))).as("g"))
+          explode(expr(shingleExpr(GramWidth))).as("g"))
         .select(col("doc_id"), col("lang"), col("source"),
           expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gk"))
         .distinct())
-    val bench = sh.filter(col("source") === benchmarkSource)
+    val bench = sh.filter(col("source") === BenchmarkSource)
       .select("gk").distinct()
-    val perDoc = sh.filter(col("source") =!= benchmarkSource)
+    val perDoc = sh.filter(col("source") =!= BenchmarkSource)
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_grams"))
-    val matched = sh.filter(col("source") =!= benchmarkSource)
+    val matched = sh.filter(col("source") =!= BenchmarkSource)
       .join(bench, "gk")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_matched"))
@@ -3951,21 +3906,20 @@ object Text {
     * survives 100 TB — and is equally oracle-exact (both engines derive
     * the key from the same digest).
     */
-  def txDecontaminate(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame = {
+  def txDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val all = docs(spark, dir)
     val sh = Tables.spread(all)
       .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= width)
+      .filter(size(col("toks")) >= GramWidth)
       .select(col("doc_id"), col("source"),
-        explode(expr(shingleExpr(width))).as("g"))
-    val bench = sh.filter(col("source") === benchmarkSource)
+        explode(expr(shingleExpr(GramWidth))).as("g"))
+    val bench = sh.filter(col("source") === BenchmarkSource)
       .select("g").distinct()
-    val contaminated = sh.filter(col("source") =!= benchmarkSource)
+    val contaminated = sh.filter(col("source") =!= BenchmarkSource)
       .join(bench, Seq("g"), "left_semi")
       .select("doc_id").distinct()
       .withColumn("hit", lit(1))
-    all.filter(col("source") =!= benchmarkSource)
+    all.filter(col("source") =!= BenchmarkSource)
       .select("doc_id", "lang")
       .join(contaminated, Seq("doc_id"), "left")
       .groupBy("lang")
@@ -4009,13 +3963,13 @@ object Text {
     * anything shuffles.
     */
   private def hashedShingleKeys(spark: SparkSession, dir: String,
-      cacheTag: String, width: Int): DataFrame =
-    graft.Caches.scoped(s"$cacheTag.sh.$width",
+      cacheTag: String): DataFrame =
+    graft.Caches.scoped(s"$cacheTag.sh",
       Tables.spread(docs(spark, dir))
         .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= width)
+        .filter(size(col("toks")) >= GramWidth)
         .select(col("doc_id"), col("source"),
-          explode(expr(shingleExpr(width))).as("g"))
+          explode(expr(shingleExpr(GramWidth))).as("g"))
         .select(col("doc_id"), col("source"),
           expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gk")))
 
@@ -4025,8 +3979,8 @@ object Text {
     * identically.
     */
   private def contaminationRollup(all: DataFrame,
-      contaminated: DataFrame, benchmarkSource: String): DataFrame =
-    all.filter(col("source") =!= benchmarkSource)
+      contaminated: DataFrame): DataFrame =
+    all.filter(col("source") =!= BenchmarkSource)
       .select("doc_id", "lang")
       .join(contaminated, Seq("doc_id"), "left")
       .groupBy("lang")
@@ -4035,16 +3989,15 @@ object Text {
         min(when(col("hit") === 1, col("doc_id"))).as("first_contaminated"))
       .orderBy("lang")
 
-  def txDecontaminateHashed(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame = {
-    val sh = hashedShingleKeys(spark, dir, "tx_decontaminate_hashed", width)
-    val bench = sh.filter(col("source") === benchmarkSource)
+  def txDecontaminateHashed(spark: SparkSession, dir: String): DataFrame = {
+    val sh = hashedShingleKeys(spark, dir, "tx_decontaminate_hashed")
+    val bench = sh.filter(col("source") === BenchmarkSource)
       .select("gk").distinct()
-    val contaminated = sh.filter(col("source") =!= benchmarkSource)
+    val contaminated = sh.filter(col("source") =!= BenchmarkSource)
       .join(bench, Seq("gk"), "left_semi")
       .select("doc_id").distinct()
       .withColumn("hit", lit(1))
-    contaminationRollup(docs(spark, dir), contaminated, benchmarkSource)
+    contaminationRollup(docs(spark, dir), contaminated)
   }
 
   /** [[txDecontaminateHashed]] with a broadcast BLOOM PREFILTER on the
@@ -4078,10 +4031,9 @@ object Text {
     * appendices plus Spark's InjectRuntimeFilter design.
     */
   def txDecontaminateBloom(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    val sh = hashedShingleKeys(spark, dir, "tx_bloom_decontaminate", width)
-    val bench = sh.filter(col("source") === benchmarkSource)
+    val sh = hashedShingleKeys(spark, dir, "tx_bloom_decontaminate")
+    val bench = sh.filter(col("source") === BenchmarkSource)
       .select("gk").distinct()
     // Two bounded jobs over the cached projection: exact benchmark-key
     // count (sizes the filter — a wrong expectedNumItems only moves fpp),
@@ -4100,19 +4052,19 @@ object Text {
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         org.apache.spark.sql.catalyst.expressions.Literal(serialized),
         org.apache.spark.sql.graft.ColumnBridge.expression(col("gk"))))
-    val contaminated = sh.filter(col("source") =!= benchmarkSource)
+    val contaminated = sh.filter(col("source") =!= BenchmarkSource)
       // map-side prefilter: runs in the scan/cache-read stage, BEFORE the
       // distinct + semi-join exchanges — only Bloom survivors shuffle
       .filter(mightContain)
       .join(bench, Seq("gk"), "left_semi")
       .select("doc_id").distinct()
       .withColumn("hit", lit(1))
-    contaminationRollup(docs(spark, dir), contaminated, benchmarkSource)
+    contaminationRollup(docs(spark, dir), contaminated)
   }
 
   /** Fuzzy benchmark decontamination: [[txDecontaminate]] catches verbatim
     * 8-gram overlap; this catches PARAPHRASED contamination — training
-    * documents that are near-duplicates (shingle-Jaccard ≥ `threshold`)
+    * documents that are near-duplicates (shingle-Jaccard ≥ [[NearDupThreshold]])
     * of any benchmark document, the fuzzy pass production suites run
     * alongside the exact one (GPT-3 appendix C's 13-gram dedup has
     * exactly this blind spot; Llama-era suites add minhash). The
@@ -4126,35 +4078,28 @@ object Text {
     * Oracle: the DuckDB twin replicates bands, candidate pairs, every
     * Jaccard and the final per-language rollup bit-for-bit.
     */
-  def txFuzzyDecontaminate(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", numSlots: Int = 16,
-      bandSize: Int = 4, threshold: Double = 0.5): DataFrame = {
+  def txFuzzyDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val d = Tables.spread(docs(spark, dir))
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("lang"), col("source"), col("toks"))
-    val bands = d
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), col("source"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    val bench = bands.filter(col("source") === benchmarkSource)
+    val bands = bandRows(d, Seq(col("doc_id"), col("lang"), col("source")))
+    val bench = bands.filter(col("source") === BenchmarkSource)
       .select(col("band"), col("key"), col("lang"), col("doc_id").as("bench_id"))
-    val cand = bands.filter(col("source") =!= benchmarkSource)
+    val cand = bands.filter(col("source") =!= BenchmarkSource)
       .join(bench, Seq("band", "key", "lang"))
       .select(col("doc_id"), col("bench_id")).distinct()
     val sh = d.withColumn("sh", expr(shingleExpr(3)))
       .select(col("doc_id"), col("sh"))
-    val flagged = cand
-      .join(sh.select(col("doc_id"), col("sh").as("sh_t")), "doc_id")
+    val flagged = withJaccard(cand
+      .join(sh.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
       .join(sh.select(col("doc_id").as("bench_id"), col("sh").as("sh_b")),
-        "bench_id")
-      .withColumn("inter", expr("size(array_intersect(sh_t, sh_b))"))
-      .filter(col("inter").cast("double") /
-        (expr("size(sh_t)") + expr("size(sh_b)") - col("inter")) >= threshold)
+        "bench_id"))
+      .filter(isNearDup)
       .select("doc_id").distinct()
       .withColumn("hit", lit(1))
-    docs(spark, dir).filter(col("source") =!= benchmarkSource)
+    docs(spark, dir).filter(col("source") =!= BenchmarkSource)
       .select("doc_id", "lang")
       .join(flagged, Seq("doc_id"), "left")
       .groupBy("lang")
@@ -7532,18 +7477,17 @@ object Text {
     * novel counts flow back as a doc-keyed count (no join back against
     * the gram table). Both aggregations are exact integers.
     */
-  def txNoveltyProfile(spark: SparkSession, dir: String,
-      width: Int = 8): DataFrame =
-    noveltyOver(Tables.spread(docs(spark, dir)), width)
+  def txNoveltyProfile(spark: SparkSession, dir: String): DataFrame =
+    noveltyOver(Tables.spread(docs(spark, dir)))
 
   /** The novelty rollup over any (doc_id, source, text) frame —
     * factored so the planted spec can hand-trace first-appearance
     * credit ([[attributionOver]]-style factoring). Gram keys use the
     * [[hashedShingleKeys]] 60-bit convention.
     */
-  private[graft] def noveltyOver(d: DataFrame, width: Int = 8): DataFrame = {
+  private[graft] def noveltyOver(d: DataFrame): DataFrame = {
     val toks = d.withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= width)
+      .filter(size(col("toks")) >= GramWidth)
     // only the first-appearance leg pays the md5-per-gram explode —
     // ONE gk-keyed exchange (min over long ids, hash agg), winners join
     // the doc->source dim id-keyed, rollup per source. The gram TOTALS
@@ -7553,7 +7497,7 @@ object Text {
     // the remaining cost is the one honest gk-keyed exchange — a global
     // first-appearance must shuffle every distinct gram digest once)
     val novel = toks
-      .select(col("doc_id"), explode(expr(shingleExpr(width))).as("g"))
+      .select(col("doc_id"), explode(expr(shingleExpr(GramWidth))).as("g"))
       .select(col("doc_id"),
         expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)")
           .as("gk"))
@@ -7562,7 +7506,7 @@ object Text {
       .groupBy("source").agg(count(lit(1)).as("n_novel"))
     val grams = toks
       .select(col("source"),
-        size(expr(shingleExpr(width))).cast("long").as("ng"))
+        size(expr(shingleExpr(GramWidth))).cast("long").as("ng"))
       .groupBy("source").agg(sum("ng").as("n_grams"))
     d.groupBy("source").agg(count(lit(1)).as("n_docs"))
       .join(grams, Seq("source"), "left")
@@ -7688,8 +7632,8 @@ object Text {
     */
   def ddSourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextFunctions.ensureRegistered(spark)
-    val conf = jaccardScoredPairs(tokenizedDocs(spark, dir), 16, 4)
-      .filter(col("jaccard") >= 0.5)
+    val conf = jaccardScoredPairs(tokenizedDocs(spark, dir))
+      .filter(isNearDup)
       .select("id_a", "id_b")
     val src = docs(spark, dir).select(col("doc_id"), col("source"))
     conf

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.queries.Text
+
 /** Structured Streaming surface over the events stream.
   *
   * The reference is pure batch (SURVEY.md §2.10); this module adds the
@@ -214,13 +216,13 @@ object StreamingOps {
     * k rows (the semi join dedups per exploded row, not per doc) — the
     * spec compares DISTINCT flagged ids against the batch oracle.
     */
-  def contaminatedDocs(docsStream: DataFrame, benchShingles: DataFrame,
-      width: Int = 8): DataFrame =
+  def contaminatedDocs(docsStream: DataFrame,
+      benchShingles: DataFrame): DataFrame =
     docsStream
       .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= width)
+      .filter(size(col("toks")) >= Text.GramWidth)
       .select(col("doc_id"), col("lang"),
-        explode(expr(graft.queries.Text.shingleExpr(width))).as("g"))
+        explode(expr(Text.shingleExpr(Text.GramWidth))).as("g"))
       .join(benchShingles, Seq("g"), "left_semi")
       .select("doc_id", "lang")
 
@@ -231,35 +233,33 @@ object StreamingOps {
     * state and shuffle survive a 100 TB backfill replay. Same
     * at-least-once posture as the string variant.
     */
-  def contaminatedDocsHashed(docsStream: DataFrame, benchKeys: DataFrame,
-      width: Int = 8): DataFrame =
+  def contaminatedDocsHashed(docsStream: DataFrame,
+      benchKeys: DataFrame): DataFrame =
     docsStream
       .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= width)
+      .filter(size(col("toks")) >= Text.GramWidth)
       .select(col("doc_id"), col("lang"),
-        explode(expr(graft.queries.Text.shingleExpr(width))).as("g"))
+        explode(expr(Text.shingleExpr(Text.GramWidth))).as("g"))
       .select(col("doc_id"), col("lang"),
         expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gk"))
       .join(benchKeys, Seq("gk"), "left_semi")
       .select("doc_id", "lang")
 
   /** The static benchmark key set for [[contaminatedDocsHashed]]. */
-  def benchmarkShingleKeys(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame =
-    benchmarkShingles(spark, dir, benchmarkSource, width)
+  def benchmarkShingleKeys(spark: SparkSession, dir: String): DataFrame =
+    benchmarkShingles(spark, dir)
       .select(expr("CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT)").as("gk"))
       .distinct()
 
   /** The static benchmark shingle set for [[contaminatedDocs]] — distinct
-    * `width`-gram shingles of one source's documents, computed in batch.
+    * long shingles of the benchmark source's documents, computed in batch.
     */
-  def benchmarkShingles(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", width: Int = 8): DataFrame =
+  def benchmarkShingles(spark: SparkSession, dir: String): DataFrame =
     graft.Tables(spark, dir, "documents")
-      .filter(col("source") === benchmarkSource)
+      .filter(col("source") === Text.BenchmarkSource)
       .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= width)
-      .select(explode(expr(graft.queries.Text.shingleExpr(width))).as("g"))
+      .filter(size(col("toks")) >= Text.GramWidth)
+      .select(explode(expr(Text.shingleExpr(Text.GramWidth))).as("g"))
       .distinct()
 
   /** Streaming FUZZY decontamination (the stream twin of
@@ -276,22 +276,25 @@ object StreamingOps {
     * the spec compares DISTINCT ids against the batch operator.
     */
   def fuzzyContaminatedDocs(docsStream: DataFrame, benchBands: DataFrame,
-      benchShingles: DataFrame, numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docsStream.sparkSession)
-    val d = docsStream
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh", expr(graft.queries.Text.shingleExpr(3)))
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), col("sh"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    d.join(benchBands, Seq("band", "key", "lang"))
-      .join(benchShingles, Seq("bench_id"))
-      .withColumn("inter", expr("size(array_intersect(sh, sh_b))"))
-      .filter(col("inter").cast("double") /
-        (expr("size(sh)") + expr("size(sh_b)") - col("inter")) >= threshold)
+      benchShingles: DataFrame): DataFrame =
+    Text.withJaccard(shingledBands(docsStream)
+        .join(benchBands, Seq("band", "key", "lang"))
+        .join(benchShingles, Seq("bench_id")))
+      .filter(Text.isNearDup)
       .select("doc_id", "lang", "bench_id")
+
+  /** Band rows `(doc_id, lang, sh_a, band, key)` of a document stream —
+    * each doc's shingle set rides along its band explode, so the Jaccard
+    * confirm never re-joins the stream to itself. Docs with fewer than 3
+    * tokens can't band (and can't near-dup).
+    */
+  private def shingledBands(docsStream: DataFrame): DataFrame = {
+    graft.functions.TextFunctions.ensureRegistered(docsStream.sparkSession)
+    Text.bandRows(docsStream
+        .withColumn("toks", split(col("text"), " "))
+        .filter(size(col("toks")) >= 3)
+        .withColumn("sh_a", expr(Text.shingleExpr(3))),
+      Seq(col("doc_id"), col("lang"), col("sh_a")))
   }
 
   /** Streaming half of [[graft.queries.Text.ddCcIncremental]]: landing
@@ -307,23 +310,12 @@ object StreamingOps {
     * twin.
     */
   def ccDeltaBaseEdges(docsStream: DataFrame, baseBands: DataFrame,
-      baseShingles: DataFrame, numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docsStream.sparkSession)
-    val d = docsStream
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh", expr(graft.queries.Text.shingleExpr(3)))
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), col("sh"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    d.join(baseBands, Seq("band", "key", "lang"))
-      .join(baseShingles, Seq("base_id"))
-      .withColumn("inter", expr("size(array_intersect(sh, sh_b))"))
-      .filter(col("inter").cast("double") /
-        (expr("size(sh)") + expr("size(sh_b)") - col("inter")) >= threshold)
+      baseShingles: DataFrame): DataFrame =
+    Text.withJaccard(shingledBands(docsStream)
+        .join(baseBands, Seq("band", "key", "lang"))
+        .join(baseShingles, Seq("base_id")))
+      .filter(Text.isNearDup)
       .select(col("doc_id").as("delta_id"), col("base_id"))
-  }
 
   /** Static sides for [[ccDeltaBaseEdges]]: the standing fuzzy index's
     * base band and shingle tables (the SAME tables the batch incremental
@@ -331,7 +323,7 @@ object StreamingOps {
     * edges bit-for-bit).
     */
   def ccBaseSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.queries.Text.ensureFuzzyIndex(spark, dir)
+    Text.ensureFuzzyIndex(spark, dir)
     (spark.table("graft_fuzzy_bands_bq")
       .select(col("band"), col("key"), col("lang"),
         col("doc_id").as("base_id")),
@@ -345,22 +337,17 @@ object StreamingOps {
     * whole near-dup suite shares, so the stream twin's candidates match
     * `txFuzzyDecontaminate`'s bit-for-bit.
     */
-  def fuzzyBenchmarkSides(spark: SparkSession, dir: String,
-      benchmarkSource: String = "src0", numSlots: Int = 16,
-      bandSize: Int = 4): (DataFrame, DataFrame) = {
+  def fuzzyBenchmarkSides(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
     graft.functions.TextFunctions.ensureRegistered(spark)
     val b = graft.Tables(spark, dir, "documents")
-      .filter(col("source") === benchmarkSource)
+      .filter(col("source") === Text.BenchmarkSource)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
-    val bands = b
-      .withColumn("bands", expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id").as("bench_id"), col("lang"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
     val shingles = b
-      .withColumn("sh_b", expr(graft.queries.Text.shingleExpr(3)))
+      .withColumn("sh_b", expr(Text.shingleExpr(3)))
       .select(col("doc_id").as("bench_id"), col("sh_b"))
-    (bands, shingles)
+    (Text.bandRows(b, Seq(col("doc_id").as("bench_id"), col("lang"))), shingles)
   }
 
   /** The static base digest set for [[admittedDeltaDocs]] — the distinct
@@ -430,7 +417,7 @@ object StreamingOps {
     * [[baseDigestKeys]] production note applied to the fuzzy index).
     */
   def fuzzyIndexTables(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.queries.Text.ensureFuzzyIndex(spark, dir)
+    Text.ensureFuzzyIndex(spark, dir)
     (spark.table("graft_fuzzy_bands_bq"), spark.table("graft_fuzzy_sh_bq"))
   }
 
@@ -452,35 +439,18 @@ object StreamingOps {
     * digest-dedup state ([[admittedDeltaDocs]]'s scaladoc).
     */
   def fuzzyAdmittedDocs(deltaStream: DataFrame, baseBands: DataFrame,
-      baseShingles: DataFrame, numSlots: Int = 16, bandSize: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(deltaStream.sparkSession)
-    val banded = deltaStream
-      .withColumn("toks", split(col("text"), " "))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh_a", expr(graft.queries.Text.shingleExpr(3)))
-      .withColumn("bands",
-        expr(s"minhash_bands(toks, 3, $numSlots, $bandSize)"))
-      .select(col("doc_id"), col("lang"), col("sh_a"),
-        posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-    banded
-      .join(baseBands
-          .select(col("band"), col("key"), col("lang"),
-            col("doc_id").as("base_id")),
-        Seq("band", "key", "lang"), "left_outer")
-      .join(baseShingles
-          .select(col("doc_id").as("base_id"), col("sh").as("sh_b")),
-        Seq("base_id"), "left_outer")
-      .withColumn("inter", expr("size(array_intersect(sh_a, sh_b))"))
-      .withColumn("hit", coalesce(
-        col("inter").cast("double") /
-          (expr("size(sh_a)") + expr("size(sh_b)") - col("inter")) >=
-          threshold,
-        lit(false)))
+      baseShingles: DataFrame): DataFrame =
+    Text.withJaccard(shingledBands(deltaStream)
+        .join(baseBands
+            .select(col("band"), col("key"), col("lang"),
+              col("doc_id").as("base_id")),
+          Seq("band", "key", "lang"), "left_outer")
+        .join(baseShingles
+            .select(col("doc_id").as("base_id"), col("sh").as("sh_b")),
+          Seq("base_id"), "left_outer"))
+      .withColumn("hit", coalesce(Text.isNearDup, lit(false)))
       .groupBy("doc_id", "lang")
       .agg(max("hit").as("near_dup_vs_base"))
-  }
 
   case class UserEvent(user_id: Long, event_type: String, value: Double)
   case class SeqEvent(user_id: Long, event_id: Long, ts_us: Long,
@@ -605,7 +575,6 @@ object StreamingOps {
     */
   def erasureRefCounts(idsStream: DataFrame, spark: SparkSession,
       dir: String): DataFrame = {
-    import graft.queries.Text
     Text.ensureFuzzyIndex(spark, dir)
     val bm = Text.ensureBm25Index(spark, dir)
     val cc = Text.ensureCcBase(spark, dir)

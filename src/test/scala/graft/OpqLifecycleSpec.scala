@@ -97,14 +97,18 @@ class OpqLifecycleSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(root),
       s"source tree not found under ${root.toAbsolutePath}")
     // (fragment, the def that owns it): the Spark-side delta carve, its
-    // DuckDB twin, the oracle's occupancy-audit tail, and Text's
-    // incremental delta and delete carves
+    // DuckDB twin, the oracle's occupancy-audit tail, Text's incremental
+    // delta and delete carves, and the near-dup family's band projection
+    // and Jaccard confirm
     val pinned = Seq(
       "% upsertDeltaMod === 0" -> "def upsertDeltaFrame(",
       "upsertDeltaMod} = 0" -> "def deltaBatchCte(",
       "coalesce(n_base, 0) + coalesce(n_new, 0) AS n_total" -> "def upsertAuditSql(",
       "lit(incrementalDeltaMod)" -> "def isDelta(",
-      "lit(retractMod)" -> "def isRetracted(")
+      "lit(retractMod)" -> "def isRetracted(",
+      "minhash_bands(toks" -> "def bandRows(",
+      "minhash_xx_bands(toks" -> "def bandRows(",
+      "array_intersect(sh" -> "def withJaccard(")
     val sources = java.nio.file.Files.walk(root).iterator().asScala.toList
       .filter(_.toString.endsWith(".scala"))
       .map(src => src -> java.nio.file.Files.readAllLines(src).asScala.toIndexedSeq)

@@ -168,7 +168,7 @@ class TextOpsSpec extends SparkSpec {
     for ((label, fn) <- Seq(
         "md5" -> (Text.ddMinhashLsh _),
         "xx" -> (Text.ddMinhashLshXx _))) {
-      val got001 = fn(spark, "/root/testdata/sf0.001", 16, 4)
+      val got001 = fn(spark, "/root/testdata/sf0.001")
         .collect().head.getAs[Long]("n_confirmed_dups")
       assert(got001 <= truth,
         s"$label precision: confirmed $got001 exceeds truth $truth")
@@ -177,7 +177,7 @@ class TextOpsSpec extends SparkSpec {
       // sf0.01: ground truth 25 (all-pairs >= 0.8, measured offline in
       // DuckDB over the fixed testdata; pairs are cross-language here,
       // unlike ddNgramJaccard's within-language blocking).
-      val got01 = fn(spark, sf001, 16, 4)
+      val got01 = fn(spark, sf001)
         .collect().head.getAs[Long]("n_confirmed_dups")
       assert(got01 <= 25L && got01 * 100 >= 25L * 85,
         s"$label sf0.01 recall: found $got01 of 25")
